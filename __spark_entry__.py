@@ -485,9 +485,8 @@ def _streaming_lsh_equiv(spark, sf_dir):
     try:
         return _streaming_lsh_equiv_run(spark, d, base, table)
     finally:
-        # same hygiene as q_prep_pipeline: drop the working dir, the
-        # memory-sink view, and any persisted comparator left by an
-        # exception between persist() and unpersist()
+        # same hygiene as q_prep_pipeline: drop the working dir and the
+        # memory-sink view (the callee unpersists its own comparator)
         import shutil
 
         shutil.rmtree(base, ignore_errors=True)

@@ -10,10 +10,10 @@ chunk hashes — any two documents sharing a verbatim region spanning at least
 one interior chunk land in the same bucket. O(total chars) work, perfectly
 parallel, shuffle volume ~ 16 bytes per ~divisor chars of text.
 
-The suffix-array layer then runs only on the tiny candidate groups
-(suffix.sa_verify_pairs), turning it from a per-host monolith into a
-per-pair check — "suffix-array-based exact-substring dedup" with CDC doing
-the map-side pruning.
+The pipeline computes the chunk hashes in the signature stage's text pass
+(shingle_and_chunks_batch); substring_candidates turns the stored hashes
+into candidate pairs, and suffix.sa_verify_pairs keeps the pairs that share
+a verbatim substring of at least L chars.
 
 Chunk content hashes are computed with an invertible-power prefix polynomial
 (mod 2^64): S[i] = sum c_j * Binv^j, hash(l, r) = (S[r] - S[l]) * B^r, all
@@ -22,15 +22,12 @@ vectorized; no per-chunk Python loop.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.materialize import materialize
-from pyspark.sql.types import LongType, StructField, StructType
 
 from .shingle import _BASE, splitmix64
 
@@ -68,7 +65,9 @@ def chunk_hashes_batch(
     shingle_n: int = 9,
 ) -> list[np.ndarray]:
     """Per-doc arrays of content hashes for CDC chunks >= min_chunk chars.
-    Deterministic per document (independent of batching/neighbors).
+    Deterministic per document (independent of batching/neighbors). The
+    standalone reference for shingle_and_chunks_batch's chunk output, which
+    is what the pipeline runs.
 
     CACHE-BLOCKED like shingle_hash_batch: decode, rolling hash, cut
     detection and prefix sums all run over ~64K-codepoint doc-aligned blocks.
@@ -134,7 +133,7 @@ def _doc_chunks(
     shingle_n: int,
 ) -> np.ndarray:
     """Chunk content hashes for one doc spanning [start, end) of a block's
-    codepoint array (shared by the standalone and fused kernels)."""
+    codepoint array (shared by the reference and fused kernels)."""
     ln = end - start
     if ln < min_chunk:
         return np.empty(0, dtype=np.uint64)
@@ -252,54 +251,16 @@ def shingle_and_chunks_batch(
     return out_sh, out_ch
 
 
-CHUNK_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("chunk_hash", LongType())]
-)
-
-
-def chunk_stage(
-    extracted: DataFrame,
-    divisor: int = DEFAULT_DIVISOR,
-    min_chunk: int = DEFAULT_MIN_CHUNK,
-) -> DataFrame:
-    """(doc_id, text) -> exploded (doc_id, chunk_hash) rows."""
-    proj = extracted.select("doc_id", "text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ch = chunk_hashes_batch(pdf["text"], divisor, min_chunk)
-            lens = np.array([c.size for c in ch], dtype=np.int64)
-            if lens.sum() == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(pdf["doc_id"].to_numpy(), lens),
-                    "chunk_hash": np.concatenate(ch).view(np.int64),
-                }
-            )
-
-    return proj.mapInPandas(run, schema=CHUNK_SCHEMA)
-
-
-def substring_candidates(
-    extracted: DataFrame,
-    divisor: int = DEFAULT_DIVISOR,
-    min_chunk: int = DEFAULT_MIN_CHUNK,
-    max_bucket: int = 512,
-    chunks: DataFrame | None = None,
-) -> DataFrame:
+def substring_candidates(chunks: DataFrame, max_bucket: int = 512) -> DataFrame:
     """Candidate substring-dup edges (a, b): docs sharing any CDC chunk.
     Star edges per chunk bucket (O(bucket)); buckets larger than
     ``max_bucket`` (mass boilerplate) are dropped — they represent content
     shared by hundreds of documents, which the near-dup LSH layer already
     handles; the cap is a documented precision/size guard.
 
-    ``chunks``: optional precomputed (doc_id, chunk_hash) rows — the
-    pipeline passes the signature stage's fused ``chunk_hashes`` column
-    (exploded JVM-side) so no second text scan happens; standalone callers
-    omit it and pay one ``chunk_stage`` pass over ``extracted``.
+    ``chunks``: (doc_id, chunk_hash) rows — the pipeline passes the
+    signature stage's fused ``chunk_hashes`` column, exploded JVM-side, so
+    candidate generation never touches text.
 
     Bucket stats come from ONE window shuffle over the exploded chunk rows
     (count/min per chunk_hash), mirroring lsh.candidate_edges — the former
@@ -308,16 +269,15 @@ def substring_candidates(
     fixed cost at every parallelism level."""
     from pyspark.sql import Window
 
-    ch = chunks if chunks is not None else chunk_stage(extracted, divisor, min_chunk)
     w = Window.partitionBy("chunk_hash")
     chj = (
-        ch.withColumn("cnt", F.count("*").over(w))
+        chunks.withColumn("cnt", F.count("*").over(w))
         .withColumn("root", F.min("doc_id").over(w))
         .where((F.col("cnt") > 1) & (F.col("cnt") <= max_bucket))
     )
     # one materialization for the two consumers below (pairs + star)
     chj = materialize(chj)
-    # all pairs for small buckets (each pair gets its own SA verification —
+    # all pairs for small buckets (each pair gets its own substring check —
     # a star hub failing verification must never disconnect a true pair);
     # star edges keep big buckets O(bucket)
     pair_cap = 16

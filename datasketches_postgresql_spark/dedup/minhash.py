@@ -2,11 +2,8 @@
 batches (north_rule: "vectorized MinHash signatures (k permutations over
 character n-gram shingles via pandas/Arrow UDFs)").
 
-Default MinHash is one-permutation hashing (OPH) with rotation
-densification — O(total shingles) work per batch regardless of signature
-width; the classic k-permutation implementation (odd multiply-add
-bijections of the u64 universe + ``np.minimum.reduceat``) is kept as
-``minhash_signatures_exact`` for accuracy cross-checks.
+MinHash is one-permutation hashing (OPH) with rotation densification —
+O(total shingles) work per batch regardless of signature width.
 
 SimHash: 64-bit sign hash over the same shingle set; per-bit majority via
 64 in-place bit-column passes (allocation-light for worker concurrency).
@@ -31,17 +28,7 @@ from pyspark.sql.types import (
 from .shingle import DEFAULT_SHINGLE_N, shingle_hash_batch, splitmix64
 
 DEFAULT_NUM_PERM = 128
-_CHUNK_ELEMS = 32_000_000  # cap the (k, M) broadcast at ~256 MB per chunk
 _BLOCK_SHINGLES = 1 << 16  # cache-block unit for the OPH/SimHash inner loops
-
-
-def _perm_coeffs(num_perm: int, seed: int = 7) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.default_rng(seed)
-    a = rng.integers(0, 2**63, size=num_perm, dtype=np.uint64) * np.uint64(2) + np.uint64(1)
-    b = rng.integers(0, 2**63, size=num_perm, dtype=np.uint64)
-    return a, b
-
-
 _U64_MAX = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 
@@ -112,38 +99,6 @@ def minhash_signatures(
             break
         live[fill] = rolled[fill]
     sig[nonempty_docs] = live
-    return sig
-
-
-def minhash_signatures_exact(
-    shingles: list[np.ndarray], num_perm: int = DEFAULT_NUM_PERM, seed: int = 7
-) -> np.ndarray:
-    """Classic k-permutation MinHash (O(num_perm x M)); kept as the
-    reference implementation for accuracy cross-checks in tests."""
-    a, b = _perm_coeffs(num_perm, seed)
-    n_docs = len(shingles)
-    sig = np.full((n_docs, num_perm), _U64_MAX, dtype=np.uint64)
-    lens = np.array([s.size for s in shingles], dtype=np.int64)
-    nonempty = np.flatnonzero(lens)
-    if nonempty.size == 0:
-        return sig
-    max_m = max(_CHUNK_ELEMS // num_perm, int(lens.max()))
-    start = 0
-    while start < nonempty.size:
-        end = start
-        m = 0
-        while end < nonempty.size and (m == 0 or m + lens[nonempty[end]] <= max_m):
-            m += lens[nonempty[end]]
-            end += 1
-        idx = nonempty[start:end]
-        concat = np.concatenate([shingles[i] for i in idx])
-        offs = np.zeros(idx.size, dtype=np.int64)
-        np.cumsum(lens[idx][:-1], out=offs[1:])
-        with np.errstate(over="ignore"):
-            proj = concat[None, :] * a[:, None] + b[:, None]  # (k, M)
-        mins = np.minimum.reduceat(proj, offs, axis=1)  # (k, n_chunk)
-        sig[idx] = mins.T
-        start = end
     return sig
 
 

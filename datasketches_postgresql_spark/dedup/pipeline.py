@@ -7,8 +7,11 @@ per-partition + global sketch lineage metrics — the DataSketches heritage):
     signatures  shingles -> MinHash(128) + SimHash + per-batch theta partial
                 over the shingle hash space (distinct-shingle lineage)
     candidates  LSH banding -> star candidate edges
-    verified    signature-Jaccard + SimHash Hamming gate, UNION suffix-array
-                containment edges (grouped by host)
+    verified    signature-Jaccard + SimHash Hamming gate, UNION exact-substring
+                edges: docs sharing a CDC chunk (hashed in the signature
+                pass) are candidates; the stored winnow fingerprints reject
+                or confirm almost all of them, and the residue is decided
+                by full L-gram hash overlap (suffix.sa_verify_pairs)
     clusters    large-star/small-star connected components
     resolved    (doc_id, url, cluster_id, is_representative): representative
                 = min url per cluster (Window row_number)
@@ -29,13 +32,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, DoubleType, StructField
 
-from ..operators.agg import sketch_groupby_agg
 from ..textops.analysis import quality_score
-from ..sketches import kll as _kll
 from ..sketches import theta as _theta
-from ..plans.materialize import materialize
 from ..sources.io import CheckpointStore
 from .cc import connected_components
 from .extract import canonicalize_stage, extract_blocks_stage, extract_stage
@@ -43,41 +42,31 @@ from .lsh import DEFAULT_BANDS, DEFAULT_ROWS, candidate_edges
 from .minhash import DEFAULT_NUM_PERM, signature_stage
 from .shingle import DEFAULT_SHINGLE_N
 from .chunking import DEFAULT_DIVISOR, DEFAULT_MIN_CHUNK, substring_candidates
-from .suffix import (
-    DEFAULT_MAX_GROUP_CHARS,
-    DEFAULT_MIN_MATCH_CHARS,
-    containment_edges,
-    fused_winnow_table,
-    sa_verify_pairs,
-)
-from .verify import DEFAULT_JACCARD, DEFAULT_MAX_HAMMING, verify_edges
+from .suffix import DEFAULT_MIN_MATCH_CHARS, fused_winnow_table, sa_verify_pairs
+from .verify import DEFAULT_JACCARD, verify_edges
+
+# lg_k of the lineage theta sketches (per-partition doc ids, shingle space)
+LINEAGE_LG_K = 12
 
 
 @dataclass(frozen=True)
 class DedupConfig:
+    """Pipeline settings; ``config_hash`` keys every checkpoint.
+
+    The substring layer has no settings here: CDC chunks (DEFAULT_DIVISOR,
+    DEFAULT_MIN_CHUNK) and the winnow fingerprints for
+    DEFAULT_MIN_MATCH_CHARS are computed in the signature stage's text
+    pass, and the verify stage joins those stored arrays."""
+
     shingle_n: int = DEFAULT_SHINGLE_N
     num_perm: int = DEFAULT_NUM_PERM
     bands: int = DEFAULT_BANDS
     rows: int = DEFAULT_ROWS
-    minhash_seed: int = 7
     jaccard_threshold: float = DEFAULT_JACCARD
-    max_hamming: int = DEFAULT_MAX_HAMMING
-    sa_min_match_chars: int = DEFAULT_MIN_MATCH_CHARS
-    sa_max_group_chars: int = DEFAULT_MAX_GROUP_CHARS
-    enable_containment: bool = True
-    # "cdc": global content-defined-chunk candidates + per-pair SA verify
-    # (scale path, cross-host); "host_sa": per-host-group suffix array
-    substring_mode: str = "cdc"
     # ingestion salting: crawl data arrives host-clustered; re-hashing on
     # xxhash64(url) spreads any host uniformly before the per-doc stages
     # (0 = keep input partitioning)
     ingest_partitions: int = 0
-    cdc_divisor: int = DEFAULT_DIVISOR
-    cdc_min_chunk: int = DEFAULT_MIN_CHUNK
-    # fuse CDC chunk hashing into the signature stage's text pass (one scan
-    # of the corpus feeds both the near-dup and exact-substring layers);
-    # False = standalone chunk_stage second scan (the pre-fusion shape)
-    fuse_cdc: bool = True
     # which cluster member survives as the training-set document:
     #   "url"     — lexicographic minimum url (stable, cheapest);
     #   "quality" — highest textops quality_score, url tie-break (keep the
@@ -86,14 +75,6 @@ class DedupConfig:
     # the already-checkpointed extracted table and 8 bytes/doc to the
     # resolve window's shuffle — no extra text scan, no Python.
     representative_policy: str = "url"
-    # fuse the substring verifier's winnow fingerprints into the same pass
-    # and store them on the signature row (~2 arrays/doc), so the verify
-    # stage joins stored arrays instead of re-scanning corpus text. Right
-    # when most docs end up candidate endpoints (boilerplate-heavy web
-    # crawls, and every measured CI corpus); set False when endpoints are a
-    # small corpus fraction and re-hashing just those is cheaper than
-    # storing fingerprints for everyone.
-    fuse_winnow: bool = True
     # collapse recrawls BEFORE any text stage runs: keep one row per
     # canonical URL (textops/urlops.py rules; freshest warc_ts wins, raw
     # url tie-break). Off by default — the synthetic truth corpus plants
@@ -118,7 +99,6 @@ class DedupConfig:
     # increment O(batch).
     line_dedup: bool = False
     line_dedup_min_docs: int = 4
-    lineage_lg_k: int = 12
     # Bloom membership prefilter for batch-append dedup (dedup/bloom.py):
     # the base run (and each increment) checkpoints a partitioned,
     # OR-mergeable Bloom filter over its banded signature hashes;
@@ -174,7 +154,7 @@ class DedupPipeline:
         ride along as an array of 12-byte structs). Replaces a 4-5-job
         formulation whose per-job scheduling latency dominated small-SF
         runs and capped scaling efficiency."""
-        lg_k = self.config.lineage_lg_k
+        lg_k = LINEAGE_LG_K
         proj = signatures.select(
             F.spark_partition_id().alias("pid"),
             F.xxhash64("doc_id").alias("__h"),
@@ -365,21 +345,8 @@ class DedupPipeline:
             # cleaning lands in its own checkpoint; extracted stays raw
             extracted = self._line_clean_base(blocks, resume)
 
-        fuse = cfg.fuse_cdc and cfg.enable_containment and cfg.substring_mode == "cdc"
-        fuse_win = cfg.fuse_winnow and cfg.enable_containment and cfg.substring_mode == "cdc"
         signatures = self._stage(
-            "signatures",
-            lambda: signature_stage(
-                extracted,
-                shingle_n=cfg.shingle_n,
-                num_perm=cfg.num_perm,
-                seed=cfg.minhash_seed,
-                bands=cfg.bands,
-                rows=cfg.rows,
-                cdc=(cfg.cdc_divisor, cfg.cdc_min_chunk) if fuse else None,
-                winnow_chars=cfg.sa_min_match_chars if fuse_win else None,
-            ),
-            resume,
+            "signatures", lambda: self._signature_stage(extracted), resume
         )
         self._lineage_pass(signatures)
         self._metric("signatures", "rows", self._rows("signatures"))
@@ -394,41 +361,15 @@ class DedupPipeline:
         self._metric("candidates", "rows", self._rows("candidates"))
 
         def _verified() -> DataFrame:
-            ver = verify_edges(
-                candidates, signatures, cfg.jaccard_threshold, cfg.max_hamming
-            ).select("a", "b")
-            if cfg.enable_containment:
-                if cfg.substring_mode == "cdc":
-                    pre = (
-                        signatures.select(
-                            "doc_id",
-                            F.explode("chunk_hashes").alias("chunk_hash"),
-                        )
-                        if fuse
-                        else None
-                    )
-                    cand = substring_candidates(
-                        extracted, cfg.cdc_divisor, cfg.cdc_min_chunk, chunks=pre
-                    )
-                    win_tbl = (
-                        fused_winnow_table(signatures, cfg.sa_min_match_chars)
-                        if fuse_win
-                        else None
-                    )
-                    cont = sa_verify_pairs(
-                        cand,
-                        extracted,
-                        cfg.sa_min_match_chars,
-                        cfg.sa_max_group_chars,
-                        winnow_tbl=win_tbl,
-                    )
-                else:
-                    host = F.regexp_extract("url", r"https?://([^/]+)/", 1)
-                    cont = containment_edges(
-                        extracted, host, cfg.sa_min_match_chars, cfg.sa_max_group_chars
-                    )
-                ver = ver.union(cont).distinct()
-            return ver
+            ver = verify_edges(candidates, signatures, cfg.jaccard_threshold).select(
+                "a", "b"
+            )
+            cont = sa_verify_pairs(
+                substring_candidates(_chunk_rows(signatures)),
+                extracted,
+                fused_winnow_table(signatures, DEFAULT_MIN_MATCH_CHARS),
+            )
+            return ver.union(cont).distinct()
 
         verified = self._stage("verified", _verified, resume)
         self._metric("verified", "rows", self._rows("verified"))
@@ -566,21 +507,8 @@ class DedupPipeline:
                 f"cleaned_{batch_id}", lambda: self._line_apply(blocks_new, freq), resume
             )
 
-        fuse = cfg.fuse_cdc and cfg.enable_containment and cfg.substring_mode == "cdc"
-        fuse_win = cfg.fuse_winnow and cfg.enable_containment and cfg.substring_mode == "cdc"
         sig_new = self._stage(
-            f"signatures_{batch_id}",
-            lambda: signature_stage(
-                ex_new,
-                shingle_n=cfg.shingle_n,
-                num_perm=cfg.num_perm,
-                seed=cfg.minhash_seed,
-                bands=cfg.bands,
-                rows=cfg.rows,
-                cdc=(cfg.cdc_divisor, cfg.cdc_min_chunk) if fuse else None,
-                winnow_chars=cfg.sa_min_match_chars if fuse_win else None,
-            ),
-            resume,
+            f"signatures_{batch_id}", lambda: self._signature_stage(ex_new), resume
         )
         self._lineage_pass(sig_new, prefix=f"{batch_id}_")
         self._metric(f"signatures_{batch_id}", "rows", self._rows(f"signatures_{batch_id}"))
@@ -623,41 +551,24 @@ class DedupPipeline:
             sig_all = sig_new.select(*cols).unionByName(
                 old_sigs.select(*cols).join(ids, "doc_id", "left_semi")
             )
-            ver = verify_edges(
-                candidates, sig_all, cfg.jaccard_threshold, cfg.max_hamming
-            ).select("a", "b")
-            if cfg.enable_containment and cfg.substring_mode == "cdc" and fuse:
-                ch_new = sig_new.select(
-                    "doc_id", F.explode("chunk_hashes").alias("chunk_hash")
-                )
-                ch_old = old_sigs.select(
-                    "doc_id", F.explode("chunk_hashes").alias("chunk_hash")
-                ).join(ch_new.select("chunk_hash").distinct(), "chunk_hash", "left_semi")
-                cand_sub = substring_candidates(
-                    None,
-                    cfg.cdc_divisor,
-                    cfg.cdc_min_chunk,
-                    chunks=ch_new.unionByName(ch_old),
-                )
-                ex_all = old_extracted.select("doc_id", "url", "text").unionByName(
-                    ex_new.select("doc_id", "url", "text")
-                )
-                win_tbl = (
-                    fused_winnow_table(sig_new, cfg.sa_min_match_chars).unionByName(
-                        fused_winnow_table(old_sigs, cfg.sa_min_match_chars)
-                    )
-                    if fuse_win
-                    else None
-                )
-                cont = sa_verify_pairs(
-                    cand_sub,
-                    ex_all,
-                    cfg.sa_min_match_chars,
-                    cfg.sa_max_group_chars,
-                    winnow_tbl=win_tbl,
-                )
-                ver = ver.union(cont).distinct()
-            return ver
+            ver = verify_edges(candidates, sig_all, cfg.jaccard_threshold).select(
+                "a", "b"
+            )
+            # old chunk rows only for chunk buckets the batch touches
+            ch_new = _chunk_rows(sig_new)
+            ch_old = _chunk_rows(old_sigs).join(
+                ch_new.select("chunk_hash").distinct(), "chunk_hash", "left_semi"
+            )
+            ex_all = old_extracted.select("doc_id", "url", "text").unionByName(
+                ex_new.select("doc_id", "url", "text")
+            )
+            win_tbl = fused_winnow_table(sig_new, DEFAULT_MIN_MATCH_CHARS).unionByName(
+                fused_winnow_table(old_sigs, DEFAULT_MIN_MATCH_CHARS)
+            )
+            cont = sa_verify_pairs(
+                substring_candidates(ch_new.unionByName(ch_old)), ex_all, win_tbl
+            )
+            return ver.union(cont).distinct()
 
         verified = self._stage(f"verified_{batch_id}", _verified, resume)
         self._metric(f"verified_{batch_id}", "rows", self._rows(f"verified_{batch_id}"))
@@ -741,6 +652,20 @@ class DedupPipeline:
             "metrics": metrics,
         }
 
+    def _signature_stage(self, extracted: DataFrame) -> DataFrame:
+        """Signatures plus the substring layer's CDC chunk hashes and winnow
+        fingerprints, all from one pass over the text."""
+        cfg = self.config
+        return signature_stage(
+            extracted,
+            shingle_n=cfg.shingle_n,
+            num_perm=cfg.num_perm,
+            bands=cfg.bands,
+            rows=cfg.rows,
+            cdc=(DEFAULT_DIVISOR, DEFAULT_MIN_CHUNK),
+            winnow_chars=DEFAULT_MIN_MATCH_CHARS,
+        )
+
     def _band_bloom_stage(self, name: str, signatures: DataFrame, resume: bool) -> DataFrame:
         """Checkpoint the partitioned Bloom filter over this table's banded
         hashes (one slice row per populated bucket) — the membership index
@@ -792,6 +717,12 @@ class DedupPipeline:
         # base_suffix tracks the LATEST increment even when an older one is
         # merely resumed — resuming b1 after b2 ran must not regress it
         self.store.set_state(base_suffix=batches[-1], batches=batches)
+
+
+def _chunk_rows(signatures: DataFrame) -> DataFrame:
+    """(doc_id, chunk_hash) rows exploded JVM-side from the stored chunk
+    hashes — the substring candidates never rescan text."""
+    return signatures.select("doc_id", F.explode("chunk_hashes").alias("chunk_hash"))
 
 
 def dup_pair_recall(resolved: DataFrame, dup_truth: DataFrame) -> float:

@@ -1,4 +1,4 @@
-"""Suffix-array-based exact-substring dedup (SURVEY.md §7.2 S5).
+"""Exact-substring dedup (SURVEY.md §7.2 S5).
 
 Criterion (the standard one for training-data dedup, cf. "Deduplicating
 Training Data Makes Language Models Better": duplicated spans >= L): two
@@ -7,24 +7,21 @@ least ``min_match_chars`` characters. This catches containment pairs whose
 shingle-set Jaccard sits below the LSH threshold (|small|/|big|) and is
 robust to boilerplate wrapping (boilerplate stays well under L).
 
-Method (per group, numpy only):
-  1. concatenate the group's texts with '\\x00' sentinels;
-  2. suffix array via prefix doubling (np.unique ranks + np.lexsort,
-     O(N log^2 N), wholly vectorized);
-  3. LCP array (Kasai);
-  4. adjacent SA entries owned by different docs with
-     min(LCP, chars-to-own-doc-end of both suffixes) >= L emit an edge.
-     Clamping at doc ends makes sentinel-crossing matches impossible.
-     Suffixes sharing a >=L prefix form contiguous SA runs, so adjacent
-     pairs connect every doc in the run — transitively completed by the
-     connected-components stage downstream (exact, not a heuristic).
+Method (the pipeline's one path, all per-doc work O(len)):
+  1. candidates: docs sharing a content-defined chunk
+     (chunking.substring_candidates over the chunk hashes the signature
+     stage stored);
+  2. sa_verify_pairs joins each pair to two winnowed fingerprint arrays the
+     signature stage also stored: a filter-tier miss rejects the pair, a
+     confirm-tier hit accepts it (winnow_pair_fingerprints);
+  3. the narrow residue is decided exactly by full L-gram hash overlap
+     (lgram_hashes), JVM-side ``arrays_overlap``; no document text crosses
+     a pair join.
 
-Scale scoping (documented, honest): a single global suffix array over 100 TB
-is not a Spark-shaped computation; the pipeline applies this operator WITHIN
-GROUPS — same-host pages (where near-verbatim republication actually
-happens) via ``applyInPandas``, bounding each group to ``max_group_chars``.
-Cross-host substring overlap below the LSH threshold is out of scope of this
-layer by design.
+The suffix-array kernel below (prefix doubling + capped LCP,
+shared_substring_pairs_pandas) tests the same criterion directly on a group
+of texts. Nothing in the pipeline runs it: it is the exact oracle the
+verifier is tested against.
 """
 
 from __future__ import annotations
@@ -38,7 +35,6 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from ..plans.materialize import materialize
 
 DEFAULT_MIN_MATCH_CHARS = 200
-DEFAULT_MAX_GROUP_CHARS = 4_000_000
 
 
 def suffix_array_with_levels(
@@ -99,7 +95,7 @@ def lcp_adjacent_capped(
 
 def lcp_array(codes: np.ndarray, sa: np.ndarray) -> np.ndarray:
     """lcp[i] = LCP(suffix sa[i], suffix sa[i+1]); saturates at ~1023 (ample
-    for the >= min_match_chars tests; kept for API compatibility)."""
+    for the >= min_match_chars tests)."""
     _, levels = suffix_array_with_levels(codes)
     out = np.zeros(codes.size, dtype=np.int64)
     out[: codes.size - 1] = lcp_adjacent_capped(sa, levels, codes.size)
@@ -143,9 +139,6 @@ def shared_substring_pairs_pandas(
     return [tuple(p) for p in pairs.tolist()]
 
 
-CONTAIN_SCHEMA = StructType([StructField("a", LongType()), StructField("b", LongType())])
-
-
 def _sliding_min_u64(h: np.ndarray, w: int) -> np.ndarray:
     """Minimum over every length-``w`` window of ``h`` (uint64), vectorized
     via the block prefix/suffix-minima decomposition (two accumulate passes,
@@ -172,30 +165,6 @@ def winnow_params(min_match_chars: int) -> tuple[int, int]:
     L = int(min_match_chars)
     w = max(1, L // 4)
     return L - w + 1, w
-
-
-def winnowed_fingerprints(text: str, min_match_chars: int) -> np.ndarray:
-    """Content-defined fingerprint set (winnowing, Schleimer et al. SIGMOD'03
-    style but value-selected): unique minima of each w-window over the
-    L'-gram rolling hashes. ~2/(w+1) selection density, so the per-doc
-    fingerprint array is ~25x smaller than the full L-gram set and ~3-8x
-    smaller than the text itself — this is what crosses the candidate-pair
-    shuffle instead of document texts."""
-    Lp, w = winnow_params(min_match_chars)
-    # winnowing runs over POSITIONAL window hashes (not the unique set):
-    codes = np.frombuffer(text.encode("utf-32-le"), dtype="<u4").astype(np.uint64)
-    n = codes.size
-    if n < Lp:
-        return np.empty(0, dtype=np.uint64)
-    from .chunking import _prefix_powers
-    from .shingle import splitmix64
-
-    pows, ipows = _prefix_powers(n)
-    with np.errstate(over="ignore"):
-        weighted = codes * ipows[:n]
-        prefix = np.concatenate([[np.uint64(0)], np.cumsum(weighted, dtype=np.uint64)])
-        h = splitmix64((prefix[Lp:] - prefix[:-Lp]) * pows[Lp : n + 1])
-    return np.unique(_sliding_min_u64(h, w))
 
 
 def winnow_pair_fingerprints(text: str, min_match_chars: int) -> tuple[np.ndarray, np.ndarray]:
@@ -358,9 +327,8 @@ def lgram_hashes(text: str, L: int) -> np.ndarray:
 def sa_verify_pairs(
     candidates: DataFrame,
     extracted: DataFrame,
+    winnow_tbl: DataFrame,
     min_match_chars: int = DEFAULT_MIN_MATCH_CHARS,
-    max_group_chars: int = DEFAULT_MAX_GROUP_CHARS,
-    winnow_tbl: DataFrame | None = None,
 ) -> DataFrame:
     """Verify candidate edges (a, b): keep exactly the pairs sharing a
     verbatim >= min_match_chars substring.
@@ -369,9 +337,9 @@ def sa_verify_pairs(
     round-2 version joined full texts to every pair, so a doc in P pairs
     shipped its text P times — the verify stage's dominant shuffle at scale):
 
-      1. WINNOW PASS (decides almost every pair): each candidate doc is
-         hashed ONCE into TWO small fingerprint arrays
-         (winnow_pair_fingerprints): filter fps (exact recall — a miss
+      1. WINNOW PASS (decides almost every pair): every doc carries TWO
+         small fingerprint arrays, hashed in the signature stage's text
+         pass (winnow_pair_fingerprints): filter fps (exact recall — a miss
          exactly rejects) and confirm fps (a hit is PROOF of a >= L match
          under the same L-gram-hash criterion the exact phase tests).
          Pairs join the arrays and split three ways with JVM-side
@@ -385,23 +353,15 @@ def sa_verify_pairs(
          them off the decided pairs is most of this operator's cost model.
 
     Per-doc work is O(len) in both phases; per-pair work is JVM-side set
-    intersection of pre-sorted hash arrays. The suffix-array layer remains
-    the engine of the host-grouped containment mode (containment_edges
-    below). ``max_group_chars`` is retained for signature compatibility.
+    intersection of pre-sorted hash arrays.
 
-    ``winnow_tbl``: optional PRECOMPUTED (doc_id, h, hc) fingerprint table
-    — normally the fused columns the signature stage emitted from its own
-    text pass (pipeline ``fuse_winnow``), which saves this operator its
-    only corpus-text re-scan; when None the table is built here from
-    ``extracted`` over just the candidate endpoints (the right trade when
-    endpoints are a small fraction of the corpus)."""
+    ``winnow_tbl``: the (doc_id, h, hc) fingerprint table built for
+    ``min_match_chars`` — the signature stage's stored columns, read
+    through fused_winnow_table, so the only text this operator reads is the
+    residue's. ``extracted`` supplies that residue text."""
     L = int(min_match_chars)
     pairs = candidates.select("a", "b").distinct()
-    tbl = (
-        winnow_tbl.select("doc_id", "h", "hc")
-        if winnow_tbl is not None
-        else winnow_hash_table(extracted, _endpoint_ids(pairs), L)
-    )
+    tbl = winnow_tbl.select("doc_id", "h", "hc")
     ta = tbl.select(F.col("doc_id").alias("a"), F.col("h").alias("h_a"), F.col("hc").alias("hc_a"))
     tb = tbl.select(F.col("doc_id").alias("b"), F.col("h").alias("h_b"), F.col("hc").alias("hc_b"))
     survivors = materialize(
@@ -413,7 +373,7 @@ def sa_verify_pairs(
     confirmed = survivors.filter("confirmed").select("a", "b")
     residue = survivors.filter(~F.col("confirmed")).select("a", "b")
     exact = hash_overlap_join(
-        residue, lgram_hash_table(extracted, _endpoint_ids(residue), L, full_grams=True)
+        residue, lgram_hash_table(extracted, _endpoint_ids(residue), L)
     )
     return confirmed.union(exact)
 
@@ -431,11 +391,10 @@ HASH_TBL_SCHEMA = StructType(
 )
 
 
-def lgram_hash_table(
-    extracted: DataFrame, ids: DataFrame, min_match_chars: int, full_grams: bool
-) -> DataFrame:
-    """Doc-keyed hash table (doc_id, h): each doc's text is consumed ONCE
-    here and projected away — only the hash array crosses any later join."""
+def lgram_hash_table(extracted: DataFrame, ids: DataFrame, min_match_chars: int) -> DataFrame:
+    """Doc-keyed full L-gram hash table (doc_id, h): each doc's text is
+    consumed ONCE here and projected away — only the hash array crosses any
+    later join."""
     docs = extracted.join(ids, "doc_id").select("doc_id", "text")
     L = int(min_match_chars)
 
@@ -443,23 +402,10 @@ def lgram_hash_table(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            arrs = [
-                (lgram_hashes(t, L) if full_grams else winnowed_fingerprints(t, L))
-                .view(np.int64)
-                for t in pdf["text"]
-            ]
+            arrs = [lgram_hashes(t, L).view(np.int64) for t in pdf["text"]]
             yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "h": arrs})
 
     return docs.mapInPandas(run, schema=HASH_TBL_SCHEMA)
-
-
-WINNOW_TBL_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("h", ArrayType(LongType())),
-        StructField("hc", ArrayType(LongType())),
-    ]
-)
 
 
 def fused_winnow_table(signatures: DataFrame, min_match_chars: int) -> DataFrame:
@@ -479,30 +425,6 @@ def fused_winnow_table(signatures: DataFrame, min_match_chars: int) -> DataFrame
     )
 
 
-def winnow_hash_table(extracted: DataFrame, ids: DataFrame, min_match_chars: int) -> DataFrame:
-    """Doc-keyed (doc_id, h=filter fps, hc=confirm fps) — both fingerprint
-    tiers from one batched text pass (winnow_pair_fingerprints_batch: one
-    concatenated rolling-hash + sliding-min per Arrow batch, not ~30 small
-    numpy calls per doc)."""
-    docs = extracted.join(ids, "doc_id").select("doc_id", "text")
-    L = int(min_match_chars)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            filt, conf = winnow_pair_fingerprints_batch(list(pdf["text"]), L)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "h": [f.view(np.int64) for f in filt],
-                    "hc": [c.view(np.int64) for c in conf],
-                }
-            )
-
-    return docs.mapInPandas(run, schema=WINNOW_TBL_SCHEMA)
-
-
 def hash_overlap_join(pairs: DataFrame, htbl: DataFrame) -> DataFrame:
     """Keep the (a, b) pairs whose hash sets intersect — JVM-side
     ``arrays_overlap``, id+array shuffle only."""
@@ -514,41 +436,3 @@ def hash_overlap_join(pairs: DataFrame, htbl: DataFrame) -> DataFrame:
         .filter(F.arrays_overlap("h_a", "h_b"))
         .select("a", "b")
     )
-
-
-def containment_edges(
-    extracted: DataFrame,
-    group_col,
-    min_match_chars: int = DEFAULT_MIN_MATCH_CHARS,
-    max_group_chars: int = DEFAULT_MAX_GROUP_CHARS,
-) -> DataFrame:
-    """Grouped suffix-array substring dedup: (doc_id, text) grouped by
-    ``group_col`` (an expression, e.g. the url host) -> edges (a, b).
-    Oversized groups keep their longest docs up to ``max_group_chars``
-    (containers are long; the cap is logged via lineage metrics, never
-    silently unbounded)."""
-    grouped = extracted.select(
-        F.col("doc_id"), F.col("text"), group_col.alias("__grp")
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        total = int(pdf["text"].str.len().sum())
-        if total > max_group_chars:
-            order = pdf["text"].str.len().sort_values(ascending=False).index
-            keep, acc = [], 0
-            for i in order:
-                ln = len(pdf.loc[i, "text"])
-                if acc + ln > max_group_chars:
-                    continue
-                acc += ln
-                keep.append(i)
-            pdf = pdf.loc[sorted(keep)]
-        pairs = shared_substring_pairs_pandas(
-            pdf["doc_id"].to_numpy(), pdf["text"].tolist(), min_match_chars
-        )
-        return pd.DataFrame(pairs, columns=["a", "b"]) if pairs else pd.DataFrame(
-            {"a": pd.Series(dtype="int64"), "b": pd.Series(dtype="int64")}
-        )
-
-    return grouped.groupBy("__grp").applyInPandas(run, schema=CONTAIN_SCHEMA).distinct()

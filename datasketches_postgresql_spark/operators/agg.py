@@ -18,9 +18,6 @@ Scale notes:
   each — NOT the raw rows. This is what makes sketch metrics additive in a
   data cube (reference README.md:211,245,299,434) and is the property the
   dedup pipeline's lineage metrics exploit at 100 TB.
-- For very high-cardinality groups (state-per-group no longer << raw rows),
-  pass ``single_phase=True`` to shuffle raw rows straight into a per-group
-  build (Catalyst plans the exchange; states never materialize map-side).
 """
 
 from __future__ import annotations
@@ -43,7 +40,6 @@ def sketch_groupby_agg(
     merge_fn: Callable[[list[bytes]], bytes],
     finalize_fn: Callable[[bytes], dict],
     out_fields: list[StructField],
-    single_phase: bool = False,
 ) -> DataFrame:
     """Aggregate ``input_cols`` into one sketch per group.
 
@@ -66,18 +62,6 @@ def sketch_groupby_agg(
         proj = df.select(*group_cols, *input_cols)
         g_fields = [proj.schema[c] for c in group_cols]
     out_schema = StructType(g_fields + out_fields)
-
-    if single_phase:
-        sp = proj.withColumn("__g", F.lit(1)) if dummy else proj
-
-        def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            state = partial_fn(pdf[input_cols])
-            row = {c: pdf[c].iloc[0] for c in group_cols}
-            row.update(finalize_fn(state))
-            return pd.DataFrame([row])
-
-        result = sp.groupBy(*group_cols).applyInPandas(build_group, schema=out_schema)
-        return result.drop("__g") if dummy else result
 
     partial_schema = StructType(g_fields + [StructField(_STATE, BinaryType())])
 

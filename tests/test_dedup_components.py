@@ -65,19 +65,24 @@ class TestMinhash:
         true_j = np.intersect1d(base, other).size / np.union1d(base, other).size
         assert abs(self._sig_jaccard(sig[0], sig[1]) - true_j) < 0.12
 
-    def test_chunking_invariance(self):
+    def test_chunking_invariance(self, monkeypatch):
+        """Cache blocking is invisible: with a block far smaller than the
+        batch (so it spans many blocks, and docs longer than a block get a
+        block of their own), minhash_signatures and simhash return exactly
+        the single-block output."""
         import datasketches_postgresql_spark.dedup.minhash as mh
 
         rng = np.random.default_rng(1)
         docs = [rng.integers(0, 2**63, rng.integers(5, 500), dtype=np.uint64) for _ in range(40)]
-        full = minhash_signatures(docs)
-        old = mh._CHUNK_ELEMS
-        try:
-            mh._CHUNK_ELEMS = 128 * 16  # force many tiny chunks
-            chunked = minhash_signatures(docs)
-        finally:
-            mh._CHUNK_ELEMS = old
-        assert np.array_equal(full, chunked)
+        docs[7] = docs[7][:0]  # an empty doc inside the batch
+        block = 256
+        assert sum(d.size for d in docs) < mh._BLOCK_SHINGLES  # one block unpatched
+        assert sum(d.size for d in docs) > 20 * block
+        assert max(d.size for d in docs) > block
+        full_sig, full_sim = minhash_signatures(docs), simhash(docs)
+        monkeypatch.setattr(mh, "_BLOCK_SHINGLES", block)
+        assert np.array_equal(full_sig, minhash_signatures(docs))
+        assert np.array_equal(full_sim, simhash(docs))
 
     def test_simhash_hamming(self):
         rng = np.random.default_rng(2)
@@ -212,7 +217,7 @@ class TestWinnowedVerify:
     def test_prefilter_never_drops_true_pair(self):
         """Winnowing guarantee: a shared verbatim substring of EXACTLY L chars
         yields overlapping fingerprint sets (one full window fits inside)."""
-        from datasketches_postgresql_spark.dedup.suffix import winnowed_fingerprints
+        from datasketches_postgresql_spark.dedup.suffix import winnow_pair_fingerprints
 
         rng = np.random.default_rng(7)
         L = 200
@@ -220,8 +225,8 @@ class TestWinnowedVerify:
             shared = "".join(rng.choice(list("abcdefgh "), size=L))
             t1 = "".join(rng.choice(list("uvwxyz"), size=int(rng.integers(0, 400)))) + shared
             t2 = shared + "".join(rng.choice(list("klmnop"), size=int(rng.integers(0, 400))))
-            f1 = winnowed_fingerprints(t1, L)
-            f2 = winnowed_fingerprints(t2, L)
+            f1 = winnow_pair_fingerprints(t1, L)[0]
+            f2 = winnow_pair_fingerprints(t2, L)[0]
             assert np.intersect1d(f1, f2).size > 0, f"trial {trial}"
 
     def test_confirm_tier_guarantee_and_soundness(self):
@@ -308,11 +313,30 @@ class TestWinnowedVerify:
         for a, b in zip(want[0] + want[1], got[0] + got[1]):
             assert np.array_equal(a, b)
 
+    @staticmethod
+    def _verify(spark, docs, cands, L):
+        """sa_verify_pairs fed the way the pipeline feeds it: fingerprints
+        from signature_stage(..., winnow_chars=L), read through
+        fused_winnow_table."""
+        from datasketches_postgresql_spark.dedup.minhash import signature_stage
+        from datasketches_postgresql_spark.dedup.suffix import (
+            fused_winnow_table,
+            sa_verify_pairs,
+        )
+
+        extracted = spark.createDataFrame(
+            [(d, f"https://h{d}/", t) for d, t in docs],
+            "doc_id long, url string, text string",
+        )
+        sigs = signature_stage(extracted, winnow_chars=L)
+        cand_df = spark.createDataFrame(cands, "a long, b long")
+        out = sa_verify_pairs(cand_df, extracted, fused_winnow_table(sigs, L), L)
+        return sorted(tuple(r) for r in out.collect())
+
     def test_sa_verify_pairs_exact_semantics(self, spark):
         """End-to-end: keeps exactly the pairs sharing >= L verbatim chars;
         a pair sharing L-1 chars is rejected by the exact phase even though
         the winnowed prefilter may pass it."""
-        from datasketches_postgresql_spark.dedup.suffix import sa_verify_pairs
 
         rng = np.random.default_rng(11)
         L = 200
@@ -327,14 +351,64 @@ class TestWinnowedVerify:
             (5, mk(600, "hij")),
             (6, mk(600, "nop")),
         ]
-        extracted = spark.createDataFrame(docs, "doc_id long, text string")
-        cands = spark.createDataFrame(
-            [(1, 2), (3, 4), (5, 6), (1, 5)], "a long, b long"
-        )
-        got = sorted(
-            tuple(r) for r in sa_verify_pairs(cands, extracted, L).collect()
-        )
+        got = self._verify(spark, docs, [(1, 2), (3, 4), (5, 6), (1, 5)], L)
         assert got == [(1, 2)]
+
+    def test_verifier_matches_suffix_array_oracle(self, spark):
+        """The live verifier (winnow filter/confirm, then the L-gram residue)
+        returns exactly the pairs the suffix-array oracle finds, over every
+        pair of a seeded doc set with shared spans at and around each
+        threshold: L-1, L, L+w-2 (may miss the confirm tier), L+w-1 (always
+        confirmed) and 2L; docs shorter than L'; two separate L-1 spans;
+        and short boilerplate shared by every doc. Spans and filler use
+        disjoint alphabets, so no shared span extends past its plant."""
+        from itertools import combinations
+
+        from datasketches_postgresql_spark.dedup.suffix import (
+            winnow_pair_fingerprints,
+            winnow_params,
+        )
+
+        rng = np.random.default_rng(41)
+        L = 200
+        Lp, w = winnow_params(L)
+        filler = lambda n: "".join(rng.choice(list("abcdefghijklmnop "), size=n))
+        span = lambda n: "".join(rng.choice(list("qrvwxyz0123456789"), size=n))
+        boiler = "home | about | contact | cookie settings "
+        docs, planted = [], []
+
+        def add(text, prefix=boiler):
+            docs.append((len(docs) + 1, prefix + text))
+            return len(docs)
+
+        for span_len in (L - 1, L, L + w - 2, L + w - 1, 2 * L):
+            sp = span(span_len)
+            ids = [
+                add(filler(int(rng.integers(50, 300))) + sp + filler(int(rng.integers(0, 200)))),
+                add(sp + filler(int(rng.integers(100, 300)))),
+                add(filler(int(rng.integers(1, 120))) + sp),
+            ]
+            if span_len >= L:
+                planted += list(combinations(ids, 2))
+        s1, s2 = span(L - 1), span(L - 1)  # two short spans never make one long one
+        add(filler(80) + s1 + filler(60) + s2)
+        add(s2 + filler(90) + s1)
+        short = span(Lp - 1)
+        add(short, prefix="")  # shorter than L': no fingerprints at all
+        add(filler(30) + short + filler(300))
+        add(filler(Lp - 10), prefix="")
+        cands = list(combinations([d for d, _ in docs], 2))
+        texts = dict(docs)
+        want = sorted(
+            (a, b)
+            for a, b in cands
+            if shared_substring_pairs_pandas(np.array([a, b]), [texts[a], texts[b]], L)
+        )
+        assert want == sorted(planted)
+        # at least one true pair is left to the exact residue phase
+        confirm = {d: winnow_pair_fingerprints(t, L)[1] for d, t in docs}
+        assert any(np.intersect1d(confirm[a], confirm[b]).size == 0 for a, b in want)
+        assert self._verify(spark, docs, cands, L) == want
 
 
 class TestSkewBoundedCandidates:

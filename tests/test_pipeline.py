@@ -157,71 +157,98 @@ class TestDistributedTruth:
 
 
 class TestFusedCdc:
-    def test_fused_and_unfused_resolved_identical(self, spark, tmp_path):
-        from datasketches_postgresql_spark.dedup.pipeline import (
-            DedupConfig,
-            DedupPipeline,
+    def test_fused_and_unfused_resolved_identical(self, spark, tmp_path, monkeypatch):
+        """The substring candidates' CDC chunk rows come from the signature
+        stage's fused text pass; feeding the pipeline chunk rows from a
+        separate scan of the extracted text with the reference chunker
+        (chunk_hashes_batch) must give EXACTLY the same resolved output."""
+        import numpy as np
+        import pandas as pd
+
+        from datasketches_postgresql_spark.dedup import pipeline as pl
+        from datasketches_postgresql_spark.dedup.chunking import (
+            DEFAULT_DIVISOR,
+            DEFAULT_MIN_CHUNK,
+            chunk_hashes_batch,
         )
         from datasketches_postgresql_spark.sources.corpus import generate_corpus
 
-        pages, _ = generate_corpus(spark, 1500, partitions=8)
-        outs = {}
-        for fuse in (True, False):
-            pipe = DedupPipeline(
-                spark, str(tmp_path / f"ck_{fuse}"), DedupConfig(fuse_cdc=fuse)
-            )
-            res = pipe.run(pages, resume=False)["resolved"]
-            outs[fuse] = sorted(
+        def resolved(out):
+            return sorted(
                 (r["doc_id"], r["cluster_id"], r["is_representative"])
-                for r in res.collect()
+                for r in out["resolved"].collect()
             )
-        assert outs[True] == outs[False]
+
+        pages, _ = generate_corpus(spark, 1500, partitions=8)
+        fused_out = pl.DedupPipeline(spark, str(tmp_path / "ck_fused")).run(
+            pages, resume=False
+        )
+
+        def scan(batches):
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                ch = chunk_hashes_batch(pdf["text"], DEFAULT_DIVISOR, DEFAULT_MIN_CHUNK)
+                lens = np.array([c.size for c in ch], dtype=np.int64)
+                if lens.sum() == 0:
+                    continue
+                yield pd.DataFrame(
+                    {
+                        "doc_id": np.repeat(pdf["doc_id"].to_numpy(), lens),
+                        "chunk_hash": np.concatenate(ch).view(np.int64),
+                    }
+                )
+
+        scanned = fused_out["extracted"].select("doc_id", "text").mapInPandas(
+            scan, schema="doc_id long, chunk_hash long"
+        )
+        calls = []
+
+        def unfused_chunk_rows(signatures):
+            calls.append(1)
+            return scanned
+
+        monkeypatch.setattr(pl, "_chunk_rows", unfused_chunk_rows)
+        unfused_out = pl.DedupPipeline(spark, str(tmp_path / "ck_unfused")).run(
+            pages, resume=False
+        )
+        assert calls and scanned.count() > 0
+        assert resolved(fused_out) == resolved(unfused_out)
 
 
 class TestFusedWinnow:
-    def test_fused_and_unfused_verified_identical(self, spark, tmp_path):
-        """fuse_winnow moves the verify stage's fingerprint hashing into the
-        signature pass; the verified edge set and final clustering must be
-        EXACTLY the unfused output (same kernel, same values — only where
-        they are computed changes)."""
-        from datasketches_postgresql_spark.dedup.pipeline import (
-            DedupConfig,
-            DedupPipeline,
-        )
-        from datasketches_postgresql_spark.sources.corpus import generate_corpus
-
-        pages, _ = generate_corpus(spark, 1500, partitions=8)
-        outs, edges = {}, {}
-        for fuse in (True, False):
-            pipe = DedupPipeline(
-                spark, str(tmp_path / f"ckw_{fuse}"), DedupConfig(fuse_winnow=fuse)
-            )
-            res = pipe.run(pages, resume=False)
-            edges[fuse] = sorted(
-                (r["a"], r["b"]) for r in res["verified"].collect()
-            )
-            outs[fuse] = sorted(
-                (r["doc_id"], r["cluster_id"], r["is_representative"])
-                for r in res["resolved"].collect()
-            )
-        assert edges[True] == edges[False]
-        assert outs[True] == outs[False]
-
     def test_fused_columns_match_kernel(self, spark):
-        """The stored winnow_h/winnow_hc columns equal the scalar kernel's
-        output per doc, and the schema carries the L stamp."""
+        """The signature stage's substring columns, as the pipeline builds
+        them, equal the standalone per-doc kernels: winnow_h/winnow_hc the
+        scalar winnow_pair_fingerprints (with the L stamp in the schema),
+        chunk_hashes the reference chunker chunk_hashes_batch."""
         import numpy as np
+        import pandas as pd
 
+        from datasketches_postgresql_spark.dedup.chunking import (
+            DEFAULT_DIVISOR,
+            DEFAULT_MIN_CHUNK,
+            chunk_hashes_batch,
+        )
         from datasketches_postgresql_spark.dedup.minhash import signature_stage
         from datasketches_postgresql_spark.dedup.suffix import (
             winnow_pair_fingerprints,
         )
 
+        rng = np.random.default_rng(5)
         df = spark.createDataFrame(
-            [(1, "u1", "the quick brown fox " * 40), (2, "u2", "tiny"), (3, "u3", "x" * 500)],
+            [
+                (1, "u1", "the quick brown fox " * 40),
+                (2, "u2", "tiny"),
+                (3, "u3", "x" * 500),
+                (4, "u4", "".join(rng.choice(list("abcdefgh "), 3000))),
+                (5, "u5", ""),
+            ],
             "doc_id long, url string, text string",
         )
-        sig = signature_stage(df, winnow_chars=200)
+        sig = signature_stage(
+            df, cdc=(DEFAULT_DIVISOR, DEFAULT_MIN_CHUNK), winnow_chars=200
+        )
         assert (sig.schema["winnow_h"].metadata or {}).get("winnow_chars") == 200
         rows = {r["doc_id"]: r for r in sig.collect()}
         texts = {r["doc_id"]: r["text"] for r in df.collect()}
@@ -229,6 +256,11 @@ class TestFusedWinnow:
             f, c = winnow_pair_fingerprints(t, 200)
             assert list(f.view(np.int64)) == list(rows[d]["winnow_h"])
             assert list(c.view(np.int64)) == list(rows[d]["winnow_hc"])
+            (ch,) = chunk_hashes_batch(
+                pd.Series([t]), DEFAULT_DIVISOR, DEFAULT_MIN_CHUNK
+            )
+            assert list(ch.view(np.int64)) == list(rows[d]["chunk_hashes"]), d
+        assert len(rows[4]["chunk_hashes"]) > 10
 
     def test_mismatched_winnow_config_refused(self, spark):
         """A signature table whose fused fingerprints were built for a

@@ -121,7 +121,7 @@ class TestPlanQuality:
             "doc_id long, chunk_hashes array<bigint>",
         )
         ch = sigs.select("doc_id", F.explode("chunk_hashes").alias("chunk_hash"))
-        q = substring_candidates(None, chunks=ch)
+        q = substring_candidates(ch)
         plan = formatted_plan(q)
         assert "EvalPython" not in plan, plan
 
@@ -143,7 +143,7 @@ class TestPlanQuality:
         ids = pairs.select(F.col("a").alias("doc_id")).union(
             pairs.select(F.col("b").alias("doc_id"))
         ).distinct()
-        q = hash_overlap_join(pairs, lgram_hash_table(extracted, ids, 200, True))
+        q = hash_overlap_join(pairs, lgram_hash_table(extracted, ids, 200))
         plan = formatted_plan(q)
         assert "arrays_overlap" in plan, plan
         for line in plan.splitlines():
