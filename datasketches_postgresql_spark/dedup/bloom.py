@@ -33,8 +33,6 @@ from one mix pass, fully vectorized."""
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -50,11 +48,6 @@ from pyspark.sql.types import (
 
 DEFAULT_BITS_PER_KEY = 10
 _U64 = np.uint64
-
-
-def optimal_n_hashes(bits_per_key: float) -> int:
-    """k = ln2 * m/n, the fpp-minimizing probe count (>=1)."""
-    return max(1, int(round(math.log(2.0) * bits_per_key)))
 
 
 def _mix(keys: np.ndarray, seed: int) -> np.ndarray:

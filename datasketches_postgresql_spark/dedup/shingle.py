@@ -37,17 +37,6 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
     return z
 
 
-def _codepoints(texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """Concatenate all texts -> (uint64 codepoint array, doc offsets).
-    offsets[i]:offsets[i+1] is doc i's slice."""
-    joined = "".join(texts.fillna(""))
-    lens = texts.fillna("").str.len().to_numpy(dtype=np.int64)
-    offsets = np.zeros(len(lens) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    codes = np.frombuffer(joined.encode("utf-32-le"), dtype="<u4").astype(np.uint64)
-    return codes, offsets
-
-
 _BLOCK_CHARS = 1 << 16  # cache-blocked inner loop; see note below
 
 

@@ -7,15 +7,17 @@ Family modules mirror the reference's sql/ DDL files one-to-one:
     theta     <- sql/datasketches_theta_sketch.sql
     hll       <- sql/datasketches_hll_sketch.sql   (bridged to Spark-native
                  hll_sketch_agg/hll_union_agg where possible)
-    cpc       <- sql/datasketches_cpc_sketch.sql   (documented alias of theta:
-                 same query surface, KMV kernel — SURVEY.md §2.1)
+    cpc       <- sql/datasketches_cpc_sketch.sql   (coupon-matrix kernel)
     kll       <- sql/datasketches_kll_{float,double}_sketch.sql
-    quantiles <- sql/datasketches_quantiles_double_sketch.sql (legacy alias
-                 of kll, k=128 — reference META.json:50-53 marks it legacy)
-    req       <- sql/datasketches_req_float_sketch.sql (kll kernel with k=12
-                 default + inclusive flag surface)
+    quantiles <- sql/datasketches_quantiles_double_sketch.sql (legacy
+                 DoublesSketch, k=128 — reference META.json:50-53)
+    req       <- sql/datasketches_req_float_sketch.sql (relative-error
+                 compactor, k=12, inclusive flag)
     fi        <- sql/datasketches_frequent_strings_sketch.sql
     aod       <- sql/datasketches_aod_sketch.sql
+
+kll, quantiles and req bind their scalar queries to one shared UDF set
+(quantile_queries.py).
 """
 
 from pyspark.sql import Column

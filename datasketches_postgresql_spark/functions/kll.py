@@ -5,6 +5,12 @@
 One kernel serves both: the float variant casts inputs to float32 precision
 JVM-side before sketching and returns FloatType results, mirroring the
 reference's separate kll_float/kll_double types.
+
+The scalar queries are the quantile families' shared UDF set
+(functions.quantile_queries) over KllState with double items; this module
+binds the reference's names to it. The SQL surface registers it under the
+kll_float_sketch_* names, so kll_float_sketch_get_quantile returns double
+in SQL.
 """
 
 from __future__ import annotations
@@ -13,31 +19,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    FloatType,
-    LongType,
-    StringType,
-    StructField,
-)
+from pyspark.sql.types import ArrayType, BinaryType, DoubleType, FloatType, StructField
 
 from ..operators.agg import sketch_groupby_agg, sketch_merge_agg
 from ..sketches import kll as _k
+from .quantile_queries import float_array, query_udfs
 
 _X = "__x"
 
 
-def _nonnull(col: pd.Series) -> np.ndarray:
-    v = col.to_numpy(dtype=np.float64)
-    return v[~np.isnan(v)]
-
-
 def _build_agg(df, group_cols, col, k, out_col, as_float):
     val = F.col(col).cast("float").cast("double") if as_float else F.col(col).cast("double")
-    # NULLs dropped JVM-side (sfunc-skips-NULL semantics; keeps the Arrow
-    # projection single-column, see theta._hash_proj)
     # NULL rows pass through the single-column Arrow projection as NaN and
     # are dropped in the kernel (sfunc-skips-NULL semantics) — a JVM-side
     # row filter would erase all-NULL groups, but the reference's ffunc
@@ -47,7 +39,7 @@ def _build_agg(df, group_cols, col, k, out_col, as_float):
         proj,
         group_cols,
         [_X],
-        partial_fn=lambda pdf: _k.build(_nonnull(pdf[_X]), k),
+        partial_fn=lambda pdf: _k.build(pdf[_X].to_numpy(dtype=np.float64), k),
         merge_fn=lambda states: _k.merge(states, k),
         finalize_fn=lambda b: {out_col: b},
         out_fields=[StructField(out_col, BinaryType())],
@@ -89,144 +81,56 @@ kll_float_sketch_merge = kll_sketch_merge
 kll_double_sketch_merge = kll_sketch_merge
 
 
-# ---- scalar query functions ------------------------------------------------
+# ---- scalar query functions (the shared quantile-family UDFs) -------------
 
+QUERY_UDFS = query_udfs("kll_sketch", _k.KllState, DoubleType())
 
-def _rows(s: pd.Series):
-    return (None if b is None else _k.KllState.deserialize(bytes(b)) for b in s)
-
-
-@F.pandas_udf(DoubleType())
-def _quantile_udf(s: pd.Series, rank: pd.Series, incl: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            np.nan if st is None else st.get_quantile(float(r), bool(i))
-            for st, r, i in zip(_rows(s), rank, incl)
-        ]
-    )
-
-
-@F.pandas_udf(DoubleType())
-def _rank_udf(s: pd.Series, value: pd.Series, incl: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            np.nan if st is None else st.get_rank(float(v), bool(i))
-            for st, v, i in zip(_rows(s), value, incl)
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def _quantiles_udf(s: pd.Series, ranks: pd.Series, incl: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if st is None else st.get_quantiles([float(x) for x in r], bool(i))
-            for st, r, i in zip(_rows(s), ranks, incl)
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def _pmf_udf(s: pd.Series, splits: pd.Series, incl: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if st is None else st.get_pmf([float(x) for x in sp], bool(i))
-            for st, sp, i in zip(_rows(s), splits, incl)
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def _cdf_udf(s: pd.Series, splits: pd.Series, incl: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if st is None else st.get_cdf([float(x) for x in sp], bool(i))
-            for st, sp, i in zip(_rows(s), splits, incl)
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def _histogram_udf(s: pd.Series, bins: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if st is None else st.get_histogram(int(b))
-            for st, b in zip(_rows(s), bins)
-        ]
-    )
-
-
-@F.pandas_udf(LongType())
-def _n_udf(s: pd.Series) -> pd.Series:
-    return pd.Series([None if st is None else st.n for st in _rows(s)], dtype="Int64")
-
-
-@F.pandas_udf(DoubleType())
-def _min_udf(s: pd.Series) -> pd.Series:
-    return pd.Series(
-        [np.nan if st is None or st.n == 0 else st.min for st in _rows(s)]
-    )
-
-
-@F.pandas_udf(DoubleType())
-def _max_udf(s: pd.Series) -> pd.Series:
-    return pd.Series(
-        [np.nan if st is None or st.n == 0 else st.max for st in _rows(s)]
-    )
-
-
-@F.pandas_udf(StringType())
-def kll_sketch_to_string(s: pd.Series) -> pd.Series:
-    """Debug summary (sql:129-131)."""
-    return pd.Series([None if st is None else st.to_string() for st in _rows(s)])
-
-
-def _arr(values) -> Column:
-    return F.array(*[F.lit(float(v)) for v in values])
+kll_sketch_to_string = QUERY_UDFS["to_string"]
+kll_sketch_to_string.__doc__ = """Debug summary (sql:129-131)."""
 
 
 def kll_sketch_get_quantile(sketch: Column, rank: float, inclusive: bool = False) -> Column:
     """kll_*_sketch_get_quantile(sketch, rank) (sql:113-115); exclusive rank
     semantics by default, ``inclusive`` honored (REQ surface, sql/..req..:145-153)."""
-    return _quantile_udf(sketch, F.lit(float(rank)), F.lit(inclusive))
+    return QUERY_UDFS["get_quantile"](sketch, F.lit(float(rank)), F.lit(inclusive))
 
 
 def kll_sketch_get_quantiles(sketch: Column, ranks, inclusive: bool = False) -> Column:
     """-> array<double> (sql:141-143)."""
-    return _quantiles_udf(sketch, _arr(ranks), F.lit(inclusive))
+    return QUERY_UDFS["get_quantiles"](sketch, float_array(ranks), F.lit(inclusive))
 
 
 def kll_sketch_get_rank(sketch: Column, value: float, inclusive: bool = False) -> Column:
     """kll_*_sketch_get_rank(sketch, value) (sql:109-111)."""
-    return _rank_udf(sketch, F.lit(float(value)), F.lit(inclusive))
+    return QUERY_UDFS["get_rank"](sketch, F.lit(float(value)), F.lit(inclusive))
 
 
 def kll_sketch_get_pmf(sketch: Column, splits, inclusive: bool = False) -> Column:
     """N+1 bins (sql:133-135; src/kll_float_sketch_pg_functions.c:318)."""
-    return _pmf_udf(sketch, _arr(splits), F.lit(inclusive))
+    return QUERY_UDFS["get_pmf"](sketch, float_array(splits), F.lit(inclusive))
 
 
 def kll_sketch_get_cdf(sketch: Column, splits, inclusive: bool = False) -> Column:
     """N+1 values, last = 1.0 (sql:137-139)."""
-    return _cdf_udf(sketch, _arr(splits), F.lit(inclusive))
+    return QUERY_UDFS["get_cdf"](sketch, float_array(splits), F.lit(inclusive))
 
 
 def kll_sketch_get_histogram(sketch: Column, num_bins: int = 10) -> Column:
     """Equal-width count-scaled histogram (sql:145-151)."""
-    return _histogram_udf(sketch, F.lit(num_bins))
+    return QUERY_UDFS["get_histogram"](sketch, F.lit(num_bins))
 
 
 def kll_sketch_get_n(sketch: Column) -> Column:
     """-> bigint (sql:117-119)."""
-    return _n_udf(sketch)
+    return QUERY_UDFS["get_n"](sketch)
 
 
 def kll_sketch_get_min_item(sketch: Column) -> Column:
-    return _min_udf(sketch)
+    return QUERY_UDFS["get_min_item"](sketch)
 
 
 def kll_sketch_get_max_item(sketch: Column) -> Column:
-    return _max_udf(sketch)
+    return QUERY_UDFS["get_max_item"](sketch)
 
 
 # ---- float-typed variants (the reference's kll_FLOAT family returns real,
@@ -235,19 +139,21 @@ def kll_sketch_get_max_item(sketch: Column) -> Column:
 
 
 def kll_float_sketch_get_quantile(sketch: Column, rank: float, inclusive: bool = False) -> Column:
-    return _quantile_udf(sketch, F.lit(float(rank)), F.lit(inclusive)).cast(FloatType())
+    q = QUERY_UDFS["get_quantile"](sketch, F.lit(float(rank)), F.lit(inclusive))
+    return q.cast(FloatType())
 
 
 def kll_float_sketch_get_quantiles(sketch: Column, ranks, inclusive: bool = False) -> Column:
-    return _quantiles_udf(sketch, _arr(ranks), F.lit(inclusive)).cast(ArrayType(FloatType()))
+    qs = QUERY_UDFS["get_quantiles"](sketch, float_array(ranks), F.lit(inclusive))
+    return qs.cast(ArrayType(FloatType()))
 
 
 def kll_float_sketch_get_min_item(sketch: Column) -> Column:
-    return _min_udf(sketch).cast(FloatType())
+    return QUERY_UDFS["get_min_item"](sketch).cast(FloatType())
 
 
 def kll_float_sketch_get_max_item(sketch: Column) -> Column:
-    return _max_udf(sketch).cast(FloatType())
+    return QUERY_UDFS["get_max_item"](sketch).cast(FloatType())
 
 
 # ---- canonical DataSketches wire format (sketches.kll_interop) -----------

@@ -8,7 +8,10 @@ datasketches-{java,cpp,py} IS this engine's sketch column value.
 
 Surface (sql:37-141): build(+k), merge(+k), get_rank, get_quantile,
 get_quantiles, get_pmf, get_cdf, get_histogram(+bins), get_n, to_string.
-Default k=128 (src/quantiles_double_sketch_c_adapter.h:29).
+Default k=128 (src/quantiles_double_sketch_c_adapter.h:29). The scalar
+queries are the quantile families' shared UDF set
+(functions.quantile_queries) over QuantilesState with double items, minus
+min/max; they take no ``inclusive`` flag, so ranks are exclusive.
 """
 
 from __future__ import annotations
@@ -17,25 +20,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-)
+from pyspark.sql.types import BinaryType, DoubleType, StructField
 
 from ..operators.agg import sketch_groupby_agg, sketch_merge_agg
 from ..sketches import quantiles as _q
+from .quantile_queries import float_array, query_udfs
 
 DEFAULT_K = _q.DEFAULT_K
 _X = "__x"
-
-
-def _nonnull(col: pd.Series) -> np.ndarray:
-    v = col.to_numpy(dtype=np.float64)
-    return v[~np.isnan(v)]
 
 
 def quantiles_double_sketch_build(
@@ -51,7 +43,7 @@ def quantiles_double_sketch_build(
         proj,
         group_cols,
         [_X],
-        partial_fn=lambda pdf: _q.build(_nonnull(pdf[_X]), k),
+        partial_fn=lambda pdf: _q.build(pdf[_X].to_numpy(dtype=np.float64), k),
         merge_fn=lambda states: _q.merge(states, k),
         finalize_fn=lambda b: {out_col: b},
         out_fields=[StructField(out_col, BinaryType())],
@@ -73,71 +65,19 @@ def quantiles_double_sketch_merge(
     )
 
 
-def _rows(s: pd.Series):
-    return (None if b is None else _q.QuantilesState.deserialize(bytes(b)) for b in s)
+# ---- scalar query functions (the shared quantile-family UDFs) -------------
 
+# the reference's classic family has no min/max item queries (sql:37-141)
+QUERY_UDFS = {
+    name: udf
+    for name, udf in query_udfs("quantiles_double_sketch", _q.QuantilesState, DoubleType()).items()
+    if name not in ("get_min_item", "get_max_item")
+}
 
-@F.pandas_udf(DoubleType())
-def _quantile_udf(s: pd.Series, rank: pd.Series) -> pd.Series:
-    return pd.Series(
-        [np.nan if st is None else st.get_quantile(float(r)) for st, r in zip(_rows(s), rank)]
-    )
-
-
-@F.pandas_udf(DoubleType())
-def _rank_udf(s: pd.Series, value: pd.Series) -> pd.Series:
-    return pd.Series(
-        [np.nan if st is None else st.get_rank(float(v)) for st, v in zip(_rows(s), value)]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def _quantiles_udf(s: pd.Series, ranks: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if st is None else st.get_quantiles([float(x) for x in r])
-            for st, r in zip(_rows(s), ranks)
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def _pmf_udf(s: pd.Series, splits: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if st is None else st.get_pmf([float(x) for x in sp])
-            for st, sp in zip(_rows(s), splits)
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def _cdf_udf(s: pd.Series, splits: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if st is None else st.get_cdf([float(x) for x in sp])
-            for st, sp in zip(_rows(s), splits)
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def _histogram_udf(s: pd.Series, bins: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if st is None else st.get_histogram(int(b)) for st, b in zip(_rows(s), bins)]
-    )
-
-
-@F.pandas_udf(LongType())
-def quantiles_double_sketch_get_n(s: pd.Series) -> pd.Series:
-    """-> bigint (sql:117-119)."""
-    return pd.Series([None if st is None else st.n for st in _rows(s)], dtype="Int64")
-
-
-@F.pandas_udf(StringType())
-def quantiles_double_sketch_to_string(s: pd.Series) -> pd.Series:
-    """Debug summary (sql:121-123)."""
-    return pd.Series([None if st is None else st.to_string() for st in _rows(s)])
+quantiles_double_sketch_get_n = QUERY_UDFS["get_n"]
+quantiles_double_sketch_get_n.__doc__ = """-> bigint (sql:117-119)."""
+quantiles_double_sketch_to_string = QUERY_UDFS["to_string"]
+quantiles_double_sketch_to_string.__doc__ = """Debug summary (sql:121-123)."""
 
 
 @F.pandas_udf(BinaryType())
@@ -155,35 +95,31 @@ def quantiles_double_sketch_roundtrip(s: pd.Series) -> pd.Series:
     )
 
 
-def _arr(values) -> Column:
-    return F.array(*[F.lit(float(v)) for v in values])
-
-
 def quantiles_double_sketch_get_quantile(sketch: Column, rank: float) -> Column:
     """(sql:113-115)."""
-    return _quantile_udf(sketch, F.lit(float(rank)))
+    return QUERY_UDFS["get_quantile"](sketch, F.lit(float(rank)))
 
 
 def quantiles_double_sketch_get_quantiles(sketch: Column, ranks) -> Column:
     """-> array<double> (sql:133-135)."""
-    return _quantiles_udf(sketch, _arr(ranks))
+    return QUERY_UDFS["get_quantiles"](sketch, float_array(ranks))
 
 
 def quantiles_double_sketch_get_rank(sketch: Column, value: float) -> Column:
     """(sql:109-111)."""
-    return _rank_udf(sketch, F.lit(float(value)))
+    return QUERY_UDFS["get_rank"](sketch, F.lit(float(value)))
 
 
 def quantiles_double_sketch_get_pmf(sketch: Column, splits) -> Column:
     """N+1 bins (sql:125-127)."""
-    return _pmf_udf(sketch, _arr(splits))
+    return QUERY_UDFS["get_pmf"](sketch, float_array(splits))
 
 
 def quantiles_double_sketch_get_cdf(sketch: Column, splits) -> Column:
     """(sql:129-131)."""
-    return _cdf_udf(sketch, _arr(splits))
+    return QUERY_UDFS["get_cdf"](sketch, float_array(splits))
 
 
 def quantiles_double_sketch_get_histogram(sketch: Column, num_bins: int = 10) -> Column:
     """(sql:137-141)."""
-    return _histogram_udf(sketch, F.lit(int(num_bins)))
+    return QUERY_UDFS["get_histogram"](sketch, F.lit(int(num_bins)))

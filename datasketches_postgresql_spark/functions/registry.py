@@ -24,25 +24,38 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    LongType,
-    StringType,
-)
+from pyspark.sql.types import BinaryType, DoubleType
 
 from ..sketches import aod as _aod
 from ..sketches import fi as _fi
 from ..sketches import kll as _kll
+from ..sketches import quantiles as _qd
+from ..sketches import req as _req
 from ..sketches import theta as _theta
 from . import fi as fi_fns
 from . import kll as kll_fns
+from . import quantiles as qd_fns
+from . import req as req_fns
 from . import theta as theta_fns
 
 
 def _hashes(s: pd.Series) -> np.ndarray:
     return s.dropna().to_numpy(dtype=np.int64).astype(np.uint64)
+
+
+def _quantile_build_merge(kernel, dtype):
+    """Grouped-agg build(value, k) and merge(sketch) over a quantile kernel
+    module (sketches.kll / .req / .quantiles); NULL values are skipped."""
+
+    @F.pandas_udf(BinaryType())
+    def build(v: pd.Series, k: pd.Series) -> bytes:  # type: ignore[misc]
+        return kernel.build(v.dropna().to_numpy(dtype=dtype), int(k.iloc[0]))
+
+    @F.pandas_udf(BinaryType())
+    def merge(s: pd.Series) -> bytes:  # type: ignore[misc]
+        return kernel.merge([bytes(b) for b in s if b is not None])
+
+    return build, merge
 
 
 def register_all(spark: SparkSession) -> None:
@@ -78,87 +91,32 @@ def register_all(spark: SparkSession) -> None:
     spark.udf.register("theta_sketch_a_not_b", theta_fns._a_not_b_udf)
     spark.udf.register("theta_sketch_to_string", theta_fns.theta_sketch_to_string)
 
-    # -- kll ------------------------------------------------------------------
-    @F.pandas_udf(BinaryType())
-    def kll_float_sketch_build(v: pd.Series, k: pd.Series) -> bytes:  # type: ignore[misc]
-        return _kll.build(v.to_numpy(dtype=np.float64), int(k.iloc[0]))
-
-    @F.pandas_udf(BinaryType())
-    def kll_float_sketch_merge(s: pd.Series) -> bytes:  # type: ignore[misc]
-        return _kll.merge([bytes(b) for b in s if b is not None])
-
-    spark.udf.register("kll_float_sketch_build", kll_float_sketch_build)
-    spark.udf.register("kll_double_sketch_build", kll_float_sketch_build)
-    spark.udf.register("kll_float_sketch_merge", kll_float_sketch_merge)
-    spark.udf.register("kll_double_sketch_merge", kll_float_sketch_merge)
-    spark.udf.register("kll_float_sketch_get_quantile", kll_fns._quantile_udf)
-    spark.udf.register("kll_float_sketch_get_quantiles", kll_fns._quantiles_udf)
-    spark.udf.register("kll_float_sketch_get_rank", kll_fns._rank_udf)
-    spark.udf.register("kll_float_sketch_get_pmf", kll_fns._pmf_udf)
-    spark.udf.register("kll_float_sketch_get_cdf", kll_fns._cdf_udf)
-    spark.udf.register("kll_float_sketch_get_histogram", kll_fns._histogram_udf)
-    spark.udf.register("kll_float_sketch_get_n", kll_fns._n_udf)
-    spark.udf.register("kll_float_sketch_get_min_item", kll_fns._min_udf)
-    spark.udf.register("kll_float_sketch_get_max_item", kll_fns._max_udf)
-    spark.udf.register("kll_float_sketch_to_string", kll_fns.kll_sketch_to_string)
+    # -- quantile families: KLL, REQ and classic quantiles ------------------
+    # one build/merge pair per family and the family's share of the query
+    # UDFs (functions.quantile_queries); KLL's double names alias its float
+    # build/merge, and kll_float_sketch_get_quantile returns double
+    for prefix, kernel, dtype, fns, aliases in (
+        ("kll_float_sketch", _kll, np.float64, kll_fns, ("kll_double_sketch",)),
+        ("req_float_sketch", _req, np.float32, req_fns, ()),
+        ("quantiles_double_sketch", _qd, np.float64, qd_fns, ()),
+    ):
+        build, merge = _quantile_build_merge(kernel, dtype)
+        for name in (prefix, *aliases):
+            spark.udf.register(f"{name}_build", build)
+            spark.udf.register(f"{name}_merge", merge)
+        for suffix, udf in fns.QUERY_UDFS.items():
+            spark.udf.register(f"{prefix}_{suffix}", udf)
     # canonical DataSketches wire format (ecosystem interop, like the
     # reference's bytea casts at sql/datasketches_kll_float_sketch.sql:31-42)
-    spark.udf.register("kll_float_sketch_to_datasketches", kll_fns.kll_float_sketch_to_datasketches)
-    spark.udf.register("kll_float_sketch_from_datasketches", kll_fns.kll_float_sketch_from_datasketches)
-    spark.udf.register("kll_double_sketch_to_datasketches", kll_fns.kll_double_sketch_to_datasketches)
-    spark.udf.register("kll_double_sketch_from_datasketches", kll_fns.kll_double_sketch_from_datasketches)
-
-    # -- req (real relative-compactor kernel, sketches.req) ------------------
-    from ..sketches import req as _req
-    from . import req as req_fns
-
-    @F.pandas_udf(BinaryType())
-    def req_float_sketch_build(v: pd.Series, k: pd.Series) -> bytes:  # type: ignore[misc]
-        return _req.build(v.dropna().to_numpy(dtype=np.float32), int(k.iloc[0]))
-
-    @F.pandas_udf(BinaryType())
-    def req_float_sketch_merge(s: pd.Series) -> bytes:  # type: ignore[misc]
-        return _req.merge([bytes(b) for b in s if b is not None])
-
-    spark.udf.register("req_float_sketch_build", req_float_sketch_build)
-    spark.udf.register("req_float_sketch_merge", req_float_sketch_merge)
-    spark.udf.register("req_float_sketch_get_quantile", req_fns._quantile_udf)
-    spark.udf.register("req_float_sketch_get_quantiles", req_fns._quantiles_udf)
-    spark.udf.register("req_float_sketch_get_rank", req_fns._rank_udf)
-    spark.udf.register("req_float_sketch_get_pmf", req_fns._pmf_udf)
-    spark.udf.register("req_float_sketch_get_cdf", req_fns._cdf_udf)
-    spark.udf.register("req_float_sketch_get_histogram", req_fns._hist_udf)
-    spark.udf.register("req_float_sketch_get_n", req_fns._n_udf)
-    spark.udf.register("req_float_sketch_get_min_item", req_fns._min_udf)
-    spark.udf.register("req_float_sketch_get_max_item", req_fns._max_udf)
-    spark.udf.register("req_float_sketch_to_string", req_fns.req_float_sketch_to_string)
-    spark.udf.register("req_float_sketch_to_datasketches", req_fns.req_float_sketch_to_datasketches)
-    spark.udf.register("req_float_sketch_from_datasketches", req_fns.req_float_sketch_from_datasketches)
-
-    # -- classic quantiles (real DoublesSketch, canonical wire format) -------
-    from ..sketches import quantiles as _qd
-    from . import quantiles as qd_fns
-
-    @F.pandas_udf(BinaryType())
-    def quantiles_double_sketch_build(v: pd.Series, k: pd.Series) -> bytes:  # type: ignore[misc]
-        return _qd.build(v.dropna().to_numpy(dtype=np.float64), int(k.iloc[0]))
-
-    @F.pandas_udf(BinaryType())
-    def quantiles_double_sketch_merge(s: pd.Series) -> bytes:  # type: ignore[misc]
-        return _qd.merge([bytes(b) for b in s if b is not None])
-
-    spark.udf.register("quantiles_double_sketch_build", quantiles_double_sketch_build)
-    spark.udf.register("quantiles_double_sketch_merge", quantiles_double_sketch_merge)
-    spark.udf.register("quantiles_double_sketch_get_quantile", qd_fns._quantile_udf)
-    spark.udf.register("quantiles_double_sketch_get_quantiles", qd_fns._quantiles_udf)
-    spark.udf.register("quantiles_double_sketch_get_rank", qd_fns._rank_udf)
-    spark.udf.register("quantiles_double_sketch_get_pmf", qd_fns._pmf_udf)
-    spark.udf.register("quantiles_double_sketch_get_cdf", qd_fns._cdf_udf)
-    spark.udf.register("quantiles_double_sketch_get_histogram", qd_fns._histogram_udf)
-    spark.udf.register("quantiles_double_sketch_get_n", qd_fns.quantiles_double_sketch_get_n)
-    spark.udf.register(
-        "quantiles_double_sketch_to_string", qd_fns.quantiles_double_sketch_to_string
-    )
+    for codec in (
+        kll_fns.kll_float_sketch_to_datasketches,
+        kll_fns.kll_float_sketch_from_datasketches,
+        kll_fns.kll_double_sketch_to_datasketches,
+        kll_fns.kll_double_sketch_from_datasketches,
+        req_fns.req_float_sketch_to_datasketches,
+        req_fns.req_float_sketch_from_datasketches,
+    ):
+        spark.udf.register(codec.__name__, codec)
 
     # -- theta <-> DataSketches wire format ----------------------------------
     spark.udf.register("theta_sketch_to_datasketches", theta_fns.theta_sketch_to_datasketches)

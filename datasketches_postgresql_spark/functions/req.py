@@ -4,8 +4,11 @@ relative-compactor kernel (sketches.req — accuracy RELATIVE to the distance
 from the accurate end, HRA/LRA honored; src/req_float_sketch_pg_functions.c:83
 passes hra, :119-121 k), not a KLL alias. Default k=12
 (src/req_float_sketch_c_adapter.h:29); every query function takes the
-``inclusive`` boolean defaulting to false (sql:137-193). Results are
-FloatType (the reference family is float-typed, sql:73)."""
+``inclusive`` boolean defaulting to false (sql:137-193). Quantiles and
+min/max are FloatType (the reference family is float-typed, sql:73); ranks,
+pmf, cdf and histograms are double. The scalar queries are the quantile
+families' shared UDF set (functions.quantile_queries) over ReqState with
+float items; this module binds the reference's names to it."""
 
 from __future__ import annotations
 
@@ -13,18 +16,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    FloatType,
-    LongType,
-    StringType,
-    StructField,
-)
+from pyspark.sql.types import BinaryType, FloatType, StructField
 
 from ..operators.agg import sketch_groupby_agg, sketch_merge_agg
 from ..sketches import req as _r
+from .quantile_queries import float_array, query_udfs
 
 DEFAULT_K = _r.DEFAULT_K
 _X = "__x"
@@ -64,141 +60,50 @@ def req_float_sketch_merge(
     )
 
 
-# ---- scalar query functions ------------------------------------------------
+# ---- scalar query functions (the shared quantile-family UDFs) -------------
 
+QUERY_UDFS = query_udfs("req_float_sketch", _r.ReqState, FloatType())
 
-def _states(s: pd.Series):
-    return (None if b is None else _r.ReqState.deserialize(bytes(b)) for b in s)
-
-
-@F.pandas_udf(FloatType())
-def _quantile_udf(s: pd.Series, rank: pd.Series, incl: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            np.nan if st is None else st.get_quantile(float(r), bool(i))
-            for st, r, i in zip(_states(s), rank, incl)
-        ],
-        dtype="float32",
-    )
-
-
-@F.pandas_udf(DoubleType())
-def _rank_udf(s: pd.Series, value: pd.Series, incl: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            np.nan if st is None else st.get_rank(float(v), bool(i))
-            for st, v, i in zip(_states(s), value, incl)
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(FloatType()))
-def _quantiles_udf(s: pd.Series, ranks: pd.Series, incl: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if st is None else [np.float32(q) for q in st.get_quantiles(list(r), bool(i))]
-            for st, r, i in zip(_states(s), ranks, incl)
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def _pmf_udf(s: pd.Series, splits: pd.Series, incl: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if st is None else st.get_pmf([float(x) for x in sp], bool(i))
-            for st, sp, i in zip(_states(s), splits, incl)
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def _cdf_udf(s: pd.Series, splits: pd.Series, incl: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if st is None else st.get_cdf([float(x) for x in sp], bool(i))
-            for st, sp, i in zip(_states(s), splits, incl)
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def _hist_udf(s: pd.Series, bins: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if st is None else st.get_histogram(int(b))
-            for st, b in zip(_states(s), bins)
-        ]
-    )
-
-
-@F.pandas_udf(LongType())
-def _n_udf(s: pd.Series) -> pd.Series:
-    return pd.Series([None if st is None else st.n for st in _states(s)], dtype="Int64")
-
-
-@F.pandas_udf(FloatType())
-def _min_udf(s: pd.Series) -> pd.Series:
-    return pd.Series(
-        [np.nan if st is None or st.n == 0 else st.min for st in _states(s)],
-        dtype="float32",
-    )
-
-
-@F.pandas_udf(FloatType())
-def _max_udf(s: pd.Series) -> pd.Series:
-    return pd.Series(
-        [np.nan if st is None or st.n == 0 else st.max for st in _states(s)],
-        dtype="float32",
-    )
-
-
-@F.pandas_udf(StringType())
-def req_float_sketch_to_string(s: pd.Series) -> pd.Series:
-    """(sql:195-201)."""
-    return pd.Series([None if st is None else st.to_string() for st in _states(s)])
-
-
-def _arr(values) -> Column:
-    return F.array(*[F.lit(float(v)) for v in values])
+req_float_sketch_to_string = QUERY_UDFS["to_string"]
+req_float_sketch_to_string.__doc__ = """(sql:195-201)."""
 
 
 def req_float_sketch_get_quantile(sketch: Column, rank: float, inclusive: bool = False) -> Column:
     """(sql:145-153)."""
-    return _quantile_udf(sketch, F.lit(float(rank)), F.lit(inclusive))
+    return QUERY_UDFS["get_quantile"](sketch, F.lit(float(rank)), F.lit(inclusive))
 
 
 def req_float_sketch_get_quantiles(sketch: Column, ranks, inclusive: bool = False) -> Column:
-    return _quantiles_udf(sketch, _arr(ranks), F.lit(inclusive))
+    return QUERY_UDFS["get_quantiles"](sketch, float_array(ranks), F.lit(inclusive))
 
 
 def req_float_sketch_get_rank(sketch: Column, value: float, inclusive: bool = False) -> Column:
     """(sql:137-143)."""
-    return _rank_udf(sketch, F.lit(float(value)), F.lit(inclusive))
+    return QUERY_UDFS["get_rank"](sketch, F.lit(float(value)), F.lit(inclusive))
 
 
 def req_float_sketch_get_pmf(sketch: Column, splits, inclusive: bool = False) -> Column:
-    return _pmf_udf(sketch, _arr(splits), F.lit(inclusive))
+    return QUERY_UDFS["get_pmf"](sketch, float_array(splits), F.lit(inclusive))
 
 
 def req_float_sketch_get_cdf(sketch: Column, splits, inclusive: bool = False) -> Column:
-    return _cdf_udf(sketch, _arr(splits), F.lit(inclusive))
+    return QUERY_UDFS["get_cdf"](sketch, float_array(splits), F.lit(inclusive))
 
 
 def req_float_sketch_get_histogram(sketch: Column, num_bins: int = 10) -> Column:
-    return _hist_udf(sketch, F.lit(num_bins))
+    return QUERY_UDFS["get_histogram"](sketch, F.lit(num_bins))
 
 
 def req_float_sketch_get_n(sketch: Column) -> Column:
-    return _n_udf(sketch)
+    return QUERY_UDFS["get_n"](sketch)
 
 
 def req_float_sketch_get_min_item(sketch: Column) -> Column:
-    return _min_udf(sketch)
+    return QUERY_UDFS["get_min_item"](sketch)
 
 
 def req_float_sketch_get_max_item(sketch: Column) -> Column:
-    return _max_udf(sketch)
+    return QUERY_UDFS["get_max_item"](sketch)
 
 
 # ---- DataSketches wire-format interop --------------------------------------

@@ -14,6 +14,20 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+MAX_DRIVER_HEAP_MB = 8192
+
+
+def _driver_heap() -> tuple[str, str]:
+    """(maximum heap, heap committed and pre-touched at start).
+
+    ``SPARK_GRAFT_DRIVER_MEM`` sets both. Unset, the heap may grow to 8 GiB
+    but only min(8 GiB, physical RAM / 4) is pre-touched, so a second local
+    session on a small host does not commit 8 GiB more at once."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem, mem
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{MAX_DRIVER_HEAP_MB}m", f"{min(MAX_DRIVER_HEAP_MB, phys_mb // 4)}m"
 
 
 def get_spark(
@@ -30,6 +44,7 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    max_heap, start_heap = _driver_heap()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -61,15 +76,13 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(8 * 1024 * 1024)),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Fault the JVM heap in ONCE at startup: this VM's page-fault path is
-        # slow (~8x vs warm pages) and contended under concurrency, so lazy
-        # heap growth mid-shuffle shows up as mysterious JVM-stage slowness.
-        # (Python-worker equivalent: _alloc.retain_heap at package import.)
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g") + " -XX:+AlwaysPreTouch",
-        )
+        .config("spark.driver.memory", max_heap)
+        # Fault the starting JVM heap in ONCE at startup: this VM's page-fault
+        # path is slow (~8x vs warm pages) and contended under concurrency,
+        # so lazy heap growth mid-shuffle shows up as mysterious JVM-stage
+        # slowness. (Python-worker equivalent: _alloc.retain_heap at package
+        # import.)
+        .config("spark.driver.extraJavaOptions", f"-Xms{start_heap} -XX:+AlwaysPreTouch")
         # Python workers churn numpy temporaries; raising glibc's mmap
         # threshold keeps those buffers on the reusable heap instead of
         # fresh mmap/munmap cycles (pathological under concurrent page

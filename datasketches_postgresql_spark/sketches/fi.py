@@ -25,7 +25,10 @@ overcount baked into ub. Invariants:
                                          at insertion time)
 
 so lower_bound = ub - err, upper_bound = estimate = ub (DataSketches
-reports the upper bound as the estimate). Items inserted BEFORE any purge
+reports the upper bound as the estimate). A merge adds the other sketch's
+offset to ``ub`` and ``err`` of every item only this sketch tracks (its
+count in the other stream is at most that offset), the per-item form of
+datasketches-java summing the two offsets. Items inserted BEFORE any purge
 keep err = 0 — their bounds stay exact even after later purges, which a
 single global offset cannot express. ``offset`` is the largest counter
 ever evicted (any untracked item's true count is <= offset — the
@@ -108,6 +111,12 @@ class FiState:
             self.offset = max(self.offset, evicted_max)
 
     def merge(self, other: "FiState") -> None:
+        if other.offset:
+            for s, slot in self.items.items():
+                if s not in other.items:
+                    # untracked there: its count in other's stream is <= other.offset
+                    slot[0] += other.offset
+                    slot[1] += other.offset
         for s, (ub, err) in other.items.items():
             slot = self.items.get(s)
             if slot is None:

@@ -20,12 +20,22 @@ Publicly documented layout (datasketches-cpp frequent_items_sketch_impl.hpp
     [u64 weights[num_active]]
     [items: per string, u32 utf8-length + bytes]
 
-Semantics mapping (documented, not silent): the internal state tracks a
-per-item error (tighter bounds than the wire format can carry); export
-stores each item's upper-bound counter as the canonical weight and the
-global ``offset`` as max(evicted counter, per-item errors) so the standard
-lower bound (weight - offset) remains VALID, merely looser. Import assigns
-every item the global offset as its error — exactly the standard model.
+Semantics mapping (documented, not silent): datasketches-java stores for
+each item a counter ``c`` that is the item's LOWER bound; its estimate and
+upper bound are ``c + offset``, and an item not in the map is bounded by
+``[0, offset]``. The internal state keeps ``[ub, err]`` per item (lower
+bound ``ub - err``), a per-item error the wire format cannot carry.
+
+- Import maps each counter ``c`` to ``[c + offset, offset]``: Java's bounds
+  exactly.
+- Export writes the global offset ``O = max(evicted counter, per-item
+  errors)`` and each item's counter ``ub - O``. Java's upper bound is then
+  ``ub`` and its lower bound ``ub - O <= ub - err`` stays valid, merely
+  looser. An item whose counter would be ``<= 0`` is left out: its
+  ``ub <= O``, so Java's absent-item bounds ``[0, O]`` still bracket it.
+
+So a round trip keeps every exported item's ``ub`` and widens its error to
+``O``.
 """
 
 from __future__ import annotations
@@ -59,17 +69,16 @@ def serialize(sketch: bytes) -> bytes:
             "<BBBBBBH", _PRE_EMPTY, _SERIAL_VERSION, FAMILY_FI,
             st.lg_k, _LG_MIN_MAP_SIZE, _F_EMPTY, 0,
         )
-    # keep the standard lower bound (weight - offset) valid for every item
-    offset = st.offset
-    for _ub, err in st.items.values():
-        offset = max(offset, err)
-    rows = sorted(st.items.items())  # deterministic image
+    # one offset bounding every item's error keeps Java's lower bound valid
+    offset = max([st.offset, *(err for _ub, err in st.items.values())])
+    # Java's counter is the lower bound ub - offset (deterministic order)
+    rows = sorted((s, ub - offset) for s, (ub, _e) in st.items.items() if ub > offset)
     head = struct.pack(
         "<BBBBBBH", _PRE_FULL, _SERIAL_VERSION, FAMILY_FI,
         st.lg_k, _lg_cur_map_size(len(rows)), 0, 0,
     )
     mid = struct.pack("<IIQQ", len(rows), 0, st.total, offset)
-    weights = np.array([ub for _, (ub, _e) in rows], dtype="<u8").tobytes()
+    weights = np.array([c for _, c in rows], dtype="<u8").tobytes()
     items = b"".join(
         struct.pack("<I", len(b)) + b for b in (s.encode("utf-8") for s, _ in rows)
     )
@@ -97,5 +106,5 @@ def deserialize(image: bytes) -> bytes:
         pos += 4
         s = image[pos: pos + ln].decode("utf-8")
         pos += ln
-        st.items[s] = [int(weights[i]), int(offset)]
+        st.items[s] = [int(weights[i]) + st.offset, st.offset]
     return st.serialize()

@@ -3,16 +3,15 @@
 Wire formats live in sketches.hll_interop, which emits the canonical
 DataSketches HLL image for every tgt_type (the reference's storage format,
 src/hll_sketch_c_adapter.cpp:38-48) — the round-2 private packed image is
-gone. This module keeps the hash-space-agnostic register math:
+gone. This module keeps the hash-space-agnostic register math that
+hll_interop uses:
 
-- registers_from_hashes: classic HyperLogLog mapping for arbitrary u64
-  hashes (index = top lg_k bits, rank of the remainder) — used by the
-  lineage-metrics sketches, which never leave this engine;
+- _bit_length_u64: vectorized bit length, for register ranks;
 - estimate_from_registers: bias-corrected harmonic mean (alpha_m m^2 /
   sum 2^-reg) with the linear-counting small-range correction,
   RSE ~= 1.04/sqrt(k).
 
-Interop-bound registers use hll_interop.registers_murmur instead (the
+Registers themselves come from hll_interop.registers_murmur (the
 ecosystem's coupon mapping), so images merge exactly with
 datasketches-{java,cpp,py} sketches over the same keys.
 """
@@ -34,21 +33,6 @@ def _bit_length_u64(w: np.ndarray) -> np.ndarray:
         v[mask] >>= np.uint64(shift)
     out[w != 0] += 1
     return out
-
-
-def registers_from_hashes(values: np.ndarray, lg_k: int) -> np.ndarray:
-    """uint64 hashes -> k uint8 registers."""
-    h = np.asarray(values, dtype=np.uint64)
-    k = 1 << lg_k
-    regs = np.zeros(k, dtype=np.uint8)
-    if h.size == 0:
-        return regs
-    idx = (h >> np.uint64(64 - lg_k)).astype(np.int64)
-    w = h & ((np.uint64(1) << np.uint64(64 - lg_k)) - np.uint64(1))
-    # rank: 1 + number of leading zeros within the (64-lg_k)-bit window
-    rank = (64 - lg_k + 1 - _bit_length_u64(w)).astype(np.uint8)
-    np.maximum.at(regs, idx, rank)
-    return regs
 
 
 def estimate_from_registers(regs: np.ndarray) -> float:

@@ -72,12 +72,6 @@ def theta_hash_u64(keys: np.ndarray, seed: int = DEFAULT_SEED) -> np.ndarray:
     return h[h != 0]
 
 
-def theta_hash_bytes(data: bytes, seed: int = DEFAULT_SEED) -> int:
-    """Scalar variant for byte-string keys (UTF-8 for strings)."""
-    h1, _ = hash128_bytes(data, seed)
-    return h1 >> 1
-
-
 def ds_to_internal(ds_theta: int, ds_hashes: np.ndarray, lg_k: int = _t.DEFAULT_LG_K) -> bytes:
     """Embed a DataSketches-space sketch into the internal format (x2)."""
     theta = _t._MAX_THETA if ds_theta >= _MAX_THETA_DS else np.uint64(ds_theta << 1)

@@ -14,10 +14,10 @@ Re-expresses the reference's quantile family surface
 - get_n / get_min_item / get_max_item / to_string (sql:117-131)
 
 Defaults: k=200 for KLL float/double (src/kll_float_sketch_c_adapter.h:29),
-k=128 for the legacy classic-quantiles alias
-(src/quantiles_double_sketch_c_adapter.h:29), k=12 for REQ
-(src/req_float_sketch_c_adapter.h:29) — the REQ/quantiles families share this
-kernel at the API layer (SURVEY.md §2.1: "alias of the KLL family").
+k=128 for classic quantiles (src/quantiles_double_sketch_c_adapter.h:29), k=12
+for REQ (src/req_float_sketch_c_adapter.h:29). REQ (sketches.req) and classic
+quantiles (sketches.quantiles) have their own kernels and share this module's
+QuantileQueriesMixin, so the three families answer every query alike.
 
 Rank semantics: EXCLUSIVE by default (rank(v) = weight of items strictly
 below v), matching the reference's pmf bin convention (lower bin gets items
@@ -51,14 +51,17 @@ _HDR = struct.Struct("<HBQI d d")
 class QuantileQueriesMixin:
     """Rank/quantile/pmf/cdf/histogram estimators over any weighted-sample
     sketch exposing ``_sorted_view() -> (items, weights)``, ``n``, ``min``,
-    ``max`` — shared by the KLL and classic-quantiles kernels (identical
-    query semantics in the reference, src/kll_float_sketch_pg_functions.c
-    vs src/quantiles_double_sketch_pg_functions.c)."""
+    ``max`` — shared by the KLL, REQ and classic-quantiles kernels (one
+    query surface in the reference, src/kll_float_sketch_pg_functions.c vs
+    src/req_float_sketch_pg_functions.c and
+    src/quantiles_double_sketch_pg_functions.c). Values are compared in the
+    items' own dtype, so REQ's float32 items see a float32 value."""
 
     def get_rank(self, value: float, inclusive: bool = False) -> float:
         if self.n == 0:
             return float("nan")
         items, weights = self._sorted_view()
+        value = items.dtype.type(value)
         mask = items <= value if inclusive else items < value
         return float(weights[mask].sum()) / float(self.n)
 

@@ -23,6 +23,9 @@ from the accurate end — instead of KLL's uniform additive error. The
 below-capacity regime is exact (no compaction ever fires), which the oracle
 queries rely on.
 
+Queries (rank, quantile, pmf, cdf, histogram) come from the KLL kernel's
+QuantileQueriesMixin; ranks compare in the items' float32.
+
 Promotion offset alternates deterministically with the compaction counter
 (the paper flips a coin; alternation keeps the pair-averaged rank unbiased
 while making results reproducible across partitions and merges).
@@ -39,6 +42,8 @@ import math
 import struct
 
 import numpy as np
+
+from .kll import QuantileQueriesMixin
 
 DEFAULT_K = 12  # src/req_float_sketch_c_adapter.h:29
 _MAGIC = 0x52
@@ -72,7 +77,7 @@ class _Compactor:
         return 2 * self.num_sections * self.section_size
 
 
-class ReqState:
+class ReqState(QuantileQueriesMixin):
     def __init__(self, k: int = DEFAULT_K, hra: bool = True):
         if k < 4:
             raise ValueError("req k must be >= 4")
@@ -152,60 +157,15 @@ class ReqState:
             lvl.section_size_raw = min(lvl.section_size_raw, olvl.section_size_raw)
         self._compress()
 
-    # -- queries -------------------------------------------------------------
-    def _weighted(self) -> tuple[np.ndarray, np.ndarray]:
-        items = np.concatenate([l.buf for l in self.levels]) if self.levels else np.empty(0, np.float32)
-        weights = (
-            np.concatenate(
-                [np.full(l.buf.size, 1 << h, dtype=np.int64) for h, l in enumerate(self.levels)]
-            )
-            if self.levels
-            else np.empty(0, np.int64)
+    # -- queries (QuantileQueriesMixin needs this view) ----------------------
+    def _sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
+        """(sorted float32 items, weights) across all compactors."""
+        items = np.concatenate([l.buf for l in self.levels])
+        weights = np.concatenate(
+            [np.full(l.buf.size, 1 << h, dtype=np.int64) for h, l in enumerate(self.levels)]
         )
         order = np.argsort(items, kind="stable")
         return items[order], weights[order]
-
-    def get_rank(self, value: float, inclusive: bool = False) -> float:
-        if self.n == 0:
-            return float("nan")
-        items, weights = self._weighted()
-        mask = items <= np.float32(value) if inclusive else items < np.float32(value)
-        return float(weights[mask].sum()) / float(self.n)
-
-    def get_quantile(self, rank: float, inclusive: bool = False) -> float:
-        if self.n == 0:
-            return float("nan")
-        rank = min(max(rank, 0.0), 1.0)
-        items, weights = self._weighted()
-        cum = np.cumsum(weights)
-        target = rank * self.n
-        side = "left" if inclusive else "right"
-        idx = min(int(np.searchsorted(cum, target, side=side)), items.size - 1)
-        return float(items[idx])
-
-    def get_quantiles(self, ranks, inclusive: bool = False) -> list[float]:
-        return [self.get_quantile(r, inclusive) for r in ranks]
-
-    def get_cdf(self, splits, inclusive: bool = False) -> list[float]:
-        if self.n == 0:
-            return []
-        return [self.get_rank(s, inclusive) for s in splits] + [1.0]
-
-    def get_pmf(self, splits, inclusive: bool = False) -> list[float]:
-        if self.n == 0:
-            return []
-        cdf = self.get_cdf(splits, inclusive)
-        return [cdf[0]] + [cdf[i] - cdf[i - 1] for i in range(1, len(cdf))]
-
-    def get_histogram(self, num_bins: int = 10) -> list[float]:
-        if self.n == 0:
-            return []
-        if self.min == self.max:
-            return [float(self.n)] + [0.0] * (num_bins - 1)
-        step = (self.max - self.min) / num_bins
-        splits = [self.min + step * i for i in range(1, num_bins)]
-        pmf = self.get_pmf(splits, inclusive=True)
-        return [m * self.n for m in pmf]
 
     def to_string(self) -> str:
         return (

@@ -189,6 +189,94 @@ class TestFiGroundTruth:
         assert st.items["alpha"][0] == 900 and st.items["alpha"][1] == 0
         assert st.items["beta"][0] == 500
 
+    # -- estimation regime: offset > 0, so Java's stored counter (the lower
+    # bound) and the upper bound counter + offset differ --------------------
+
+    @staticmethod
+    def _zipf(n, a, seed):
+        rng = np.random.default_rng(seed)
+        return [f"z{i}" for i in rng.zipf(a, size=n)]
+
+    @staticmethod
+    def _counts(stream):
+        truth = {}
+        for s in stream:
+            truth[s] = truth.get(s, 0) + 1
+        return truth
+
+    @staticmethod
+    def _assert_brackets(st, truth):
+        """Every item's bounds hold its exact count; an untracked item's
+        count is at most the offset (Java bounds it by [0, offset])."""
+        for s, c in truth.items():
+            if s in st.items:
+                ub, err = st.items[s]
+                assert ub - err <= c <= ub, (s, c, ub, err)
+            else:
+                assert c <= st.offset, (s, c, st.offset)
+
+    @staticmethod
+    def _assert_java_bounds(js, st, absent):
+        """Java's bounds on the same image equal the decoded ones: tracked
+        items [ub - err, ub], untracked ones [0, offset]."""
+        assert js.getMaximumError() == st.offset
+        assert js.getNumActiveItems() == len(st.items)
+        for s, (ub, err) in st.items.items():
+            assert (js.getLowerBound(s), js.getUpperBound(s)) == (ub - err, ub), s
+        for s in absent:
+            assert (js.getLowerBound(s), js.getUpperBound(s)) == (0, st.offset), s
+
+    def _decode(self, image):
+        return FIK.FiState.deserialize(FII.deserialize(image))
+
+    def test_java_estimation_image_decodes_with_java_bounds(self, jvm):
+        stream = self._zipf(12_000, 1.3, seed=11)
+        truth = self._counts(stream)
+        js = jvm.org.apache.datasketches.frequencies.ItemsSketch(1 << 6)
+        for s in stream:
+            js.update(s)
+        serde = jvm.org.apache.datasketches.common.ArrayOfStringsSerDe()
+        st = self._decode(bytes(js.toByteArray(serde)))
+        assert st.offset > 0
+        self._assert_java_bounds(js, st, [s for s in truth if s not in st.items][:50])
+        self._assert_brackets(st, truth)
+
+    def test_our_multi_batch_build_loads_in_java(self, jvm, mem):
+        stream = self._zipf(12_000, 1.3, seed=12)
+        truth = self._counts(stream)
+        # per-batch partials merged, as the two-phase aggregate builds them
+        mine = FIK.merge(self.LG_K, [FIK.build(self.LG_K, list(b)) for b in np.array_split(stream, 8)])
+        ours = FIK.FiState.deserialize(mine)
+        assert ours.offset > 0 and any(err > 0 for _ub, err in ours.items.values())
+        self._assert_brackets(ours, truth)
+        img = FII.serialize(mine)
+        serde = jvm.org.apache.datasketches.common.ArrayOfStringsSerDe()
+        js = jvm.org.apache.datasketches.frequencies.ItemsSketch.getInstance(mem.wrap(img), serde)
+        back = self._decode(img)
+        # the round trip keeps every exported item's upper bound
+        assert all(ours.items[s][0] == ub for s, (ub, _err) in back.items.items())
+        self._assert_java_bounds(js, back, [s for s in truth if s not in back.items][:50])
+        self._assert_brackets(back, truth)
+
+    def test_spark_native_top_k_image_decodes_with_java_bounds(self, spark, jvm, mem):
+        import pandas as pd
+        from pyspark.sql import functions as F
+
+        stream = self._zipf(200_000, 1.1, seed=3)
+        truth = self._counts(stream)
+        acc = (
+            spark.createDataFrame(pd.DataFrame({"v": stream}))
+            .select(F.expr("approx_top_k_accumulate(v, 512)").alias("acc"))
+            .collect()[0]["acc"]
+        )
+        image = bytes(acc["sketch"])
+        st = self._decode(image)
+        assert st.offset > 0
+        serde = jvm.org.apache.datasketches.common.ArrayOfStringsSerDe()
+        js = jvm.org.apache.datasketches.frequencies.ItemsSketch.getInstance(mem.wrap(image), serde)
+        self._assert_java_bounds(js, st, [s for s in truth if s not in st.items][:50])
+        self._assert_brackets(st, truth)
+
 
 class TestAodGroundTruth:
     N = 300

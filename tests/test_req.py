@@ -18,7 +18,7 @@ class TestReqKernel:
     def test_weight_conservation(self):
         st = R.ReqState(12, hra=True)
         st.update(_uniform(300_000))
-        _, weights = st._weighted()
+        _, weights = st._sorted_view()
         assert int(weights.sum()) == st.n == 300_000
 
     def test_hra_tail_error_shrinks_toward_high_ranks(self):
