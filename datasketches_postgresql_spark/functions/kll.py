@@ -83,7 +83,7 @@ kll_double_sketch_merge = kll_sketch_merge
 
 # ---- scalar query functions (the shared quantile-family UDFs) -------------
 
-QUERY_UDFS = query_udfs("kll_sketch", _k.KllState, DoubleType())
+QUERY_UDFS = query_udfs("kll_sketch", _k.KllState, DoubleType(), inclusive=True)
 
 kll_sketch_to_string = QUERY_UDFS["to_string"]
 kll_sketch_to_string.__doc__ = """Debug summary (sql:129-131)."""

@@ -11,8 +11,10 @@ them all. ``query_udfs`` instantiates it for a family's state class and
 result item type; each family module binds its public names to the result,
 and ``registry.register_all`` registers it under the family's SQL prefix.
 
-``inclusive`` is an optional trailing argument (default false): KLL and REQ
-pass it, and the classic family's two-argument SQL names leave it out.
+KLL and REQ take ``inclusive`` as an optional trailing argument (default
+false), as the reference's own two-argument ``get_rank(sketch, value)``
+forms leave it out. The classic family has no such flag, so its UDFs reject
+a trailing argument.
 """
 
 from __future__ import annotations
@@ -31,11 +33,12 @@ def float_array(values) -> Column:
     return F.array(*[F.lit(float(v)) for v in values])
 
 
-def query_udfs(prefix: str, state_cls, item_type) -> dict:
+def query_udfs(prefix: str, state_cls, item_type, inclusive: bool) -> dict:
     """SQL name suffix -> pandas UDF named ``{prefix}_{suffix}``, for
     sketches ``state_cls.deserialize`` reads. ``item_type`` (DoubleType or
     FloatType) types quantiles and min/max items; ranks, pmf, cdf and
-    histogram masses are always double."""
+    histogram masses are always double. ``inclusive`` says whether the
+    family's rank queries accept the trailing ``inclusive`` flag."""
     as_float = isinstance(item_type, FloatType)
     item = np.float32 if as_float else float
     dtype = "float32" if as_float else None
@@ -43,7 +46,14 @@ def query_udfs(prefix: str, state_cls, item_type) -> dict:
     def states(s: pd.Series):
         return (None if b is None else state_cls.deserialize(bytes(b)) for b in s)
 
+    max_flags = 1 if inclusive else 0
+
     def flags(incl: tuple):
+        if len(incl) > max_flags:
+            raise TypeError(
+                f"{prefix} rank queries take at most {max_flags} trailing "
+                f"inclusive argument(s), got {len(incl)}"
+            )
         return incl[0] if incl else itertools.repeat(False)
 
     def get_quantile(s: pd.Series, rank: pd.Series, *incl: pd.Series) -> pd.Series:

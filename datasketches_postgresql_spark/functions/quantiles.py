@@ -11,7 +11,8 @@ get_quantiles, get_pmf, get_cdf, get_histogram(+bins), get_n, to_string.
 Default k=128 (src/quantiles_double_sketch_c_adapter.h:29). The scalar
 queries are the quantile families' shared UDF set
 (functions.quantile_queries) over QuantilesState with double items, minus
-min/max; they take no ``inclusive`` flag, so ranks are exclusive.
+min/max; they take no ``inclusive`` flag (a trailing one is rejected), so
+ranks are exclusive.
 """
 
 from __future__ import annotations
@@ -70,7 +71,9 @@ def quantiles_double_sketch_merge(
 # the reference's classic family has no min/max item queries (sql:37-141)
 QUERY_UDFS = {
     name: udf
-    for name, udf in query_udfs("quantiles_double_sketch", _q.QuantilesState, DoubleType()).items()
+    for name, udf in query_udfs(
+        "quantiles_double_sketch", _q.QuantilesState, DoubleType(), inclusive=False
+    ).items()
     if name not in ("get_min_item", "get_max_item")
 }
 

@@ -62,7 +62,7 @@ def req_float_sketch_merge(
 
 # ---- scalar query functions (the shared quantile-family UDFs) -------------
 
-QUERY_UDFS = query_udfs("req_float_sketch", _r.ReqState, FloatType())
+QUERY_UDFS = query_udfs("req_float_sketch", _r.ReqState, FloatType(), inclusive=True)
 
 req_float_sketch_to_string = QUERY_UDFS["to_string"]
 req_float_sketch_to_string.__doc__ = """(sql:195-201)."""

@@ -16,6 +16,7 @@ import math
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import PythonException
 
 from datasketches_postgresql_spark.functions import kll as K
 from datasketches_postgresql_spark.functions import quantiles as Q
@@ -381,18 +382,31 @@ def test_sql_surface_matches_kernel_and_exact(spark, pin_input, family):
 
 
 def test_inclusive_is_an_optional_trailing_argument(spark, pin_input):
-    """The shared query UDFs take ``inclusive`` as an optional last argument:
-    left out it means false, and the classic family's SQL names accept it."""
+    """KLL and REQ take ``inclusive`` as an optional last argument (left out it
+    means false); the classic family takes none, and no family takes more."""
     spark.sql(
         "SELECT g, kll_float_sketch_build(v, 200) AS k, req_float_sketch_build(v, 12) AS r, "
         "quantiles_double_sketch_build(v, 128) AS q FROM pin_input WHERE g = 'small' GROUP BY g"
     ).createOrReplaceTempView("pin_optional")
     row = spark.sql(
-        "SELECT k, r, q, kll_float_sketch_get_rank(k, 3.0D) AS k2, "
-        "req_float_sketch_get_quantile(r, 0.5D) AS r2, "
-        "quantiles_double_sketch_get_rank(q, 3.0D, true) AS q3 FROM pin_optional"
+        "SELECT k, r, kll_float_sketch_get_rank(k, 3.0D) AS k2, "
+        "req_float_sketch_get_quantile(r, 0.5D) AS r2 FROM pin_optional"
     ).collect()[0]
     assert row["k2"] == KK.KllState.deserialize(bytes(row["k"])).get_rank(3.0, False)
     assert row["r2"] == RK.ReqState.deserialize(bytes(row["r"])).get_quantile(0.5, False)
-    assert row["q3"] == QK.QuantilesState.deserialize(bytes(row["q"])).get_rank(3.0, True)
-    assert row["q3"] != QK.QuantilesState.deserialize(bytes(row["q"])).get_rank(3.0, False)
+
+
+@pytest.mark.parametrize("query", [
+    "quantiles_double_sketch_get_rank(q, 3.0D, true)",
+    "quantiles_double_sketch_get_quantile(q, 0.5D, 0.9D)",
+    "quantiles_double_sketch_get_cdf(q, array(1.0D), false)",
+    "kll_float_sketch_get_rank(k, 3.0D, true, false)",
+    "req_float_sketch_get_pmf(r, array(1.0D), true, true)",
+])
+def test_extra_trailing_arguments_are_rejected(spark, pin_input, query):
+    spark.sql(
+        "SELECT kll_float_sketch_build(v, 200) AS k, req_float_sketch_build(v, 12) AS r, "
+        "quantiles_double_sketch_build(v, 128) AS q FROM pin_input WHERE g = 'small'"
+    ).createOrReplaceTempView("pin_extra")
+    with pytest.raises(PythonException, match="trailing inclusive"):
+        spark.sql(f"SELECT {query} FROM pin_extra").collect()
