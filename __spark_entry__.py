@@ -1866,7 +1866,6 @@ def oracle_sql() -> dict[str, str]:
             WITH s AS (
               SELECT concat(
                 '### Theta sketch summary:', chr(10),
-                '   lg_k            : 12', chr(10),
                 '   retained entries: ', count(DISTINCT user_id), chr(10),
                 '   theta (fraction): 1.000000', chr(10),
                 '   estimation mode : False', chr(10),

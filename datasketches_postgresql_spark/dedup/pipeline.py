@@ -47,6 +47,9 @@ from .verify import DEFAULT_JACCARD, verify_edges
 
 # lg_k of the lineage theta sketches (per-partition doc ids, shingle space)
 LINEAGE_LG_K = 12
+# layout of the sketch columns checkpoints store (signatures.shingle_theta);
+# part of config_hash, so a checkpoint in an older layout is recomputed
+CHECKPOINT_SKETCH_FORMAT = "theta-compact-v3"
 
 
 @dataclass(frozen=True)
@@ -120,7 +123,8 @@ class DedupConfig:
     bloom_slice_bits: int = 1 << 20
 
     def config_hash(self) -> str:
-        blob = json.dumps(dataclasses.asdict(self), sort_keys=True).encode()
+        fields = {**dataclasses.asdict(self), "sketch_format": CHECKPOINT_SKETCH_FORMAT}
+        blob = json.dumps(fields, sort_keys=True).encode()
         return hashlib.sha256(blob).hexdigest()[:16]
 
 

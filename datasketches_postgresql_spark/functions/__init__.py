@@ -4,7 +4,9 @@ Scalar functions -> vectorized pandas (Arrow) UDFs over BinaryType columns;
 aggregates -> two-phase DataFrame operators (``..operators.agg``).
 Family modules mirror the reference's sql/ DDL files one-to-one:
 
-    theta     <- sql/datasketches_theta_sketch.sql
+    theta     <- sql/datasketches_theta_sketch.sql (built and merged by
+                 Spark-native theta_sketch_agg/theta_union_agg/
+                 theta_intersection_agg)
     hll       <- sql/datasketches_hll_sketch.sql   (bridged to Spark-native
                  hll_sketch_agg/hll_union_agg where possible)
     cpc       <- sql/datasketches_cpc_sketch.sql   (coupon-matrix kernel)

@@ -38,8 +38,9 @@ _H = "__h"
 
 def _hash_proj(df: DataFrame, group_cols: list[str], col: str) -> DataFrame:
     # NULLs survive to the kernel as the xxhash64 seed sentinel (42) and are
-    # dropped there, so all-NULL groups still emit an empty-sketch row (see
-    # theta._hash_proj for the full rationale)
+    # dropped there, so all-NULL groups still emit an empty-sketch row
+    # without a row filter or a group-key join (the sentinel costs a 2^-64
+    # per-value blind spot, the order of a hash collision)
     return df.select(*group_cols, F.xxhash64(col).alias(_H))
 
 
@@ -144,9 +145,9 @@ def cpc_sketch_build_compat(
     sketches built here have matrices IDENTICAL to library-built ones over
     the same keys, so exports union exactly with Druid / Hive /
     datasketches-* sketches. Integral keys canonicalize to 8-byte LE
-    (vectorized murmur); everything else to UTF-8 strings — the same dtype
-    branch as theta_sketch_build_compat, so a string column hits
-    update(String)'s hash path rather than a silent cast-to-long."""
+    (vectorized murmur); everything else to UTF-8 strings — the key
+    projection of the theta build, so a string column hits update(String)'s
+    hash path rather than a silent cast-to-long."""
     from pyspark.sql.types import IntegerType as _Int
     from pyspark.sql.types import LongType as _Long
     from pyspark.sql.types import ShortType as _Short

@@ -50,7 +50,7 @@ def _custom_build(df, group_cols, col, lg_k, width, out_col):
     canonical narrow image — binary-compatible with the reference's
     storage and with Spark's native hll_* readers. NULLs are filtered and
     all-NULL groups restored with the canonical empty image
-    (keep_group_keys, same pattern as theta_sketch_build_compat)."""
+    (keep_group_keys, as cpc_sketch_build_compat does)."""
     from pyspark.sql.types import IntegerType as _Int
     from pyspark.sql.types import LongType as _Long
     from pyspark.sql.types import ShortType as _Short

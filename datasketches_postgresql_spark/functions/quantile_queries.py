@@ -66,11 +66,16 @@ def query_udfs(prefix: str, state_cls, item_type, inclusive: bool) -> dict:
         )
 
     def get_quantiles(s: pd.Series, ranks: pd.Series, *incl: pd.Series) -> pd.Series:
+        # an empty sketch's NaN quantiles become NULL elements in every
+        # family (a float32 NaN would otherwise cross Arrow as NaN)
         return pd.Series(
             [
                 None
                 if st is None
-                else [item(q) for q in st.get_quantiles([float(x) for x in r], bool(i))]
+                else [
+                    None if np.isnan(q) else item(q)
+                    for q in st.get_quantiles([float(x) for x in r], bool(i))
+                ]
                 for st, r, i in zip(states(s), ranks, flags(incl))
             ]
         )

@@ -5,11 +5,14 @@
 Aggregates register as grouped-agg pandas UDFs. Two deliberate deltas from
 the reference's SQL, both documented:
 
-1. Build aggregates take an ALREADY-HASHED bigint (wrap the column in the
-   built-in ``xxhash64(col)``) — the same canonicalization the DataFrame API
-   applies implicitly (the reference's C code canonicalizes anyelement to
-   bytes before hashing, src/theta_sketch_pg_functions.c:103-115). This
-   keeps the Python boundary numeric/Arrow-fast.
+1. ``cpc_sketch_build`` / ``cpc_sketch_distinct`` take an ALREADY-HASHED
+   bigint (wrap the column in the built-in ``xxhash64(col)``), which keeps
+   the Python boundary numeric/Arrow-fast. The theta builds and
+   ``cpc_sketch_build_compat`` take the value itself and hash it as a
+   DataSketches key, as the DataFrame theta build does (the reference's C
+   code canonicalizes anyelement to bytes before hashing,
+   src/theta_sketch_pg_functions.c:103-115): integers as update(long),
+   anything else as update(String).
 2. Grouped-agg pandas UDFs have no partial-aggregation step (Spark ships
    group values to one task), so this layer is the CONVENIENCE surface; the
    scale path is the two-phase DataFrame API in ``..operators.agg``.
@@ -28,6 +31,7 @@ from pyspark.sql.types import BinaryType, DoubleType
 
 from ..sketches import aod as _aod
 from ..sketches import fi as _fi
+from ..sketches import interop as _ti
 from ..sketches import kll as _kll
 from ..sketches import quantiles as _qd
 from ..sketches import req as _req
@@ -43,19 +47,58 @@ def _hashes(s: pd.Series) -> np.ndarray:
     return s.dropna().to_numpy(dtype=np.int64).astype(np.uint64)
 
 
-def _quantile_build_merge(kernel, dtype):
-    """Grouped-agg build(value, k) and merge(sketch) over a quantile kernel
-    module (sketches.kll / .req / .quantiles); NULL values are skipped."""
+def _key_build(v: pd.Series, from_keys, from_strings, name: str) -> bytes:
+    """Sketch the non-NULL values of ``v`` as DataSketches keys: integers
+    through ``from_keys`` (update(long)), anything else through
+    ``from_strings`` (update(String))."""
+    vals = v.dropna()
+    if vals.dtype.kind in "iu":
+        return from_keys(vals.to_numpy(dtype=np.int64).astype(np.uint64))
+    if vals.dtype.kind == "f":
+        # Arrow renders a BIGINT column containing NULLs as float64;
+        # integral floats are those longs, anything else must be cast
+        # by the caller (update(double) canonicalization is not
+        # implemented)
+        arr = vals.to_numpy(dtype=np.float64)
+        if not np.all(arr == np.floor(arr)):
+            raise ValueError(
+                f"{name}: non-integral numeric keys — cast to BIGINT or STRING first"
+            )
+        # beyond 2^53 a float64 cannot represent every long: the
+        # rounded value would still pass the integrality check while
+        # the murmur hashes silently diverge from a sketch built on
+        # the true keys — refuse rather than betray exact interop.
+        # >= (not >): 2^53 itself is reachable by ROUNDING from the
+        # unrepresentable 2^53+1, so a value equal to the boundary
+        # cannot be trusted either
+        if np.any(np.abs(arr) >= 2.0**53):
+            raise ValueError(
+                f"{name}: integer keys above 2^53 were rendered as lossy "
+                "float64 (nullable BIGINT via Arrow) — cast to BIGINT or STRING first"
+            )
+        return from_keys(arr.astype(np.int64).astype(np.uint64))
+    return from_strings(vals)
+
+
+def _quantile_build(kernel, dtype):
+    """Grouped-agg build(value, k) over a quantile kernel module
+    (sketches.kll / .req / .quantiles), the values taken as ``dtype`` (a
+    float sketch rounds them to float32 first, as its DataFrame build
+    does); NULL values are skipped."""
 
     @F.pandas_udf(BinaryType())
     def build(v: pd.Series, k: pd.Series) -> bytes:  # type: ignore[misc]
         return kernel.build(v.dropna().to_numpy(dtype=dtype), int(k.iloc[0]))
 
+    return build
+
+
+def _quantile_merge(kernel):
     @F.pandas_udf(BinaryType())
     def merge(s: pd.Series) -> bytes:  # type: ignore[misc]
         return kernel.merge([bytes(b) for b in s if b is not None])
 
-    return build, merge
+    return merge
 
 
 def register_all(spark: SparkSession) -> None:
@@ -63,12 +106,14 @@ def register_all(spark: SparkSession) -> None:
 
     # -- theta aggregates ---------------------------------------------------
     @F.pandas_udf(BinaryType())
-    def theta_sketch_build(h: pd.Series) -> bytes:  # type: ignore[misc]
-        return _theta.build(_hashes(h))
+    def theta_sketch_build(v: pd.Series) -> bytes:  # type: ignore[misc]
+        return _key_build(v, _ti.build_murmur, _ti.build_murmur_strings, "theta_sketch_build")
 
     @F.pandas_udf(DoubleType())
-    def theta_sketch_distinct(h: pd.Series) -> float:  # type: ignore[misc]
-        return _theta.get_estimate(_theta.build(_hashes(h)))
+    def theta_sketch_distinct(v: pd.Series) -> float:  # type: ignore[misc]
+        return _theta.get_estimate(
+            _key_build(v, _ti.build_murmur, _ti.build_murmur_strings, "theta_sketch_distinct")
+        )
 
     @F.pandas_udf(BinaryType())
     def theta_sketch_union_agg(s: pd.Series) -> bytes:  # type: ignore[misc]
@@ -92,17 +137,19 @@ def register_all(spark: SparkSession) -> None:
     spark.udf.register("theta_sketch_to_string", theta_fns.theta_sketch_to_string)
 
     # -- quantile families: KLL, REQ and classic quantiles ------------------
-    # one build/merge pair per family and the family's share of the query
-    # UDFs (functions.quantile_queries); KLL's double names alias its float
-    # build/merge, and kll_float_sketch_get_quantile returns double
-    for prefix, kernel, dtype, fns, aliases in (
-        ("kll_float_sketch", _kll, np.float64, kll_fns, ("kll_double_sketch",)),
-        ("req_float_sketch", _req, np.float32, req_fns, ()),
-        ("quantiles_double_sketch", _qd, np.float64, qd_fns, ()),
+    # one build per SQL name, one merge per family and the family's share of
+    # the query UDFs (functions.quantile_queries); KLL's double names share
+    # its float queries and merge, and kll_float_sketch_get_quantile
+    # returns double
+    for prefix, kernel, fns, builds in (
+        ("kll_float_sketch", _kll, kll_fns,
+         {"kll_float_sketch": np.float32, "kll_double_sketch": np.float64}),
+        ("req_float_sketch", _req, req_fns, {"req_float_sketch": np.float32}),
+        ("quantiles_double_sketch", _qd, qd_fns, {"quantiles_double_sketch": np.float64}),
     ):
-        build, merge = _quantile_build_merge(kernel, dtype)
-        for name in (prefix, *aliases):
-            spark.udf.register(f"{name}_build", build)
+        merge = _quantile_merge(kernel)
+        for name, dtype in builds.items():
+            spark.udf.register(f"{name}_build", _quantile_build(kernel, dtype))
             spark.udf.register(f"{name}_merge", merge)
         for suffix, udf in fns.QUERY_UDFS.items():
             spark.udf.register(f"{prefix}_{suffix}", udf)
@@ -203,35 +250,7 @@ def register_all(spark: SparkSession) -> None:
     def cpc_sketch_build_compat(v: pd.Series) -> bytes:  # type: ignore[misc]
         from ..sketches import cpc_interop as _ci
 
-        vals = v.dropna()
-        if vals.dtype.kind in "iu":
-            return _ci.build_murmur(vals.to_numpy(dtype=np.int64).astype(np.uint64))
-        if vals.dtype.kind == "f":
-            # Arrow renders a BIGINT column containing NULLs as float64;
-            # integral floats are those longs, anything else must be cast
-            # by the caller (update(double) canonicalization is not
-            # implemented)
-            arr = vals.to_numpy(dtype=np.float64)
-            if not np.all(arr == np.floor(arr)):
-                raise ValueError(
-                    "cpc_sketch_build_compat: non-integral numeric keys — "
-                    "cast to BIGINT or STRING first"
-                )
-            # beyond 2^53 a float64 cannot represent every long: the
-            # rounded value would still pass the integrality check while
-            # the murmur coupons silently diverge from a sketch built on
-            # the true keys — refuse rather than betray exact interop.
-            # >= (not >): 2^53 itself is reachable by ROUNDING from the
-            # unrepresentable 2^53+1, so a value equal to the boundary
-            # cannot be trusted either
-            if np.any(np.abs(arr) >= 2.0**53):
-                raise ValueError(
-                    "cpc_sketch_build_compat: integer keys above 2^53 were "
-                    "rendered as lossy float64 (nullable BIGINT via Arrow) — "
-                    "cast to BIGINT or STRING first"
-                )
-            return _ci.build_murmur(arr.astype(np.int64).astype(np.uint64))
-        return _ci.build_murmur_strings(vals)
+        return _key_build(v, _ci.build_murmur, _ci.build_murmur_strings, "cpc_sketch_build_compat")
 
     spark.udf.register("cpc_sketch_build", cpc_sketch_build)
     spark.udf.register("cpc_sketch_build_compat", cpc_sketch_build_compat)

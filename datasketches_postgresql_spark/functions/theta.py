@@ -1,9 +1,22 @@
 """Theta sketch family (/root/reference/sql/datasketches_theta_sketch.sql).
 
-Build aggregates hash JVM-side with ``F.xxhash64`` — only uint64 arrays cross
-the Arrow boundary, never raw values (Spark-first; SURVEY.md §1.2: the
-reference canonicalizes any element type to bytes before hashing,
-src/theta_sketch_pg_functions.c:103-115 — xxhash64 plays that role here).
+Every theta sketch here is the standard DataSketches compact theta image
+(sketches.theta), in the DataSketches hash space (murmur3_x64_128, seed
+9001, 63-bit). Builds and unions run on Spark's native DataSketches
+aggregates (``theta_sketch_agg``, ``theta_union_agg``), JVM-side with
+partial aggregation and no Python in the hot path, as the HLL family does.
+Keys are projected the way datasketches-java's ``update`` overloads
+canonicalize them (SURVEY.md §1.2: the reference canonicalizes any element
+type to bytes before hashing, src/theta_sketch_pg_functions.c:103-115):
+integral types as ``long``, binary as raw bytes, everything else as its
+string's UTF-8 bytes.
+
+The numpy kernel answers what Spark has no usable native function for: the
+intersection aggregate (see ``theta_sketch_intersection_agg``), sampling
+with p < 1, the unrounded estimate (Spark's ``theta_sketch_estimate``
+returns a bigint), bounds, the summary string and the pairwise set
+operations (which keep the reference's NULL handling: a NULL side of a
+union is absent, and Spark's own pairwise functions return NULL).
 """
 
 from __future__ import annotations
@@ -12,32 +25,40 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BinaryType, DoubleType, StringType, StructField
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    ByteType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+)
 
-from ..operators.agg import keep_group_keys, sketch_groupby_agg, sketch_merge_agg
+from ..operators.agg import sketch_merge_agg
+from ..sketches import interop as _i
 from ..sketches import theta as _t
 
-_H, _V = "__h", "__v"
+
+def _key(df: DataFrame, col: str) -> Column:
+    """The column as datasketches-java's update(long / byte[] / String) key."""
+    dtype = df.schema[col].dataType
+    if isinstance(dtype, (ByteType, ShortType, IntegerType, LongType)):
+        return F.col(col).cast("long")
+    if isinstance(dtype, BinaryType):
+        return F.col(col)
+    return F.col(col).cast("string")
 
 
-_NULL_SENTINEL = np.uint64(42)  # Spark xxhash64(NULL) == the seed, 42
+def _map_opt(series: pd.Series, fn) -> pd.Series:
+    return pd.Series([None if b is None else fn(b) for b in series], dtype=object)
 
 
-def _hash_proj(df: DataFrame, group_cols: list[str], col: str) -> DataFrame:
-    """NULL inputs are skipped (the reference's sfunc skips NULL rows,
-    src/theta_sketch_pg_functions.c:78-82) WITHOUT a JVM-side row filter:
-    filtering would erase groups whose values are all NULL, but the
-    reference's ffunc still emits a row per group (empty sketch). Spark's
-    xxhash64 returns its seed (42) for NULL, so null rows survive the
-    single-column Arrow projection (no 10x null-indicator column cost) and
-    the kernel drops the sentinel — at the price of a 2^-64 per-value blind
-    spot, the same order as theta's inherent hash-collision conflation."""
-    return df.select(*group_cols, F.xxhash64(col).alias(_H))
-
-
-def _hashed_values(pdf: pd.DataFrame) -> np.ndarray:
-    h = pdf[_H].to_numpy(dtype=np.int64).astype(np.uint64)
-    return h[h != _NULL_SENTINEL]
+@F.pandas_udf(BinaryType())
+def _sample_udf(s: pd.Series, p: pd.Series) -> pd.Series:
+    return _map_opt(s, lambda b: _t.sample(b, float(p.iloc[0])))
 
 
 def theta_sketch_build(
@@ -50,18 +71,17 @@ def theta_sketch_build(
 ) -> DataFrame:
     """Aggregate: theta_sketch_build(anyelement[,lg_k[,p]]) (sql:105-133).
 
-    Groups whose values are ALL NULL still emit a row (empty sketch) — the
-    reference's ffunc runs even when every input was skipped; see
-    _hash_proj's sentinel scheme."""
-    return sketch_groupby_agg(
-        _hash_proj(df, group_cols, col),
-        group_cols,
-        [_H],
-        partial_fn=lambda pdf: _t.build(_hashed_values(pdf), lg_k, p),
-        merge_fn=lambda states: _t.union(states, lg_k),
-        finalize_fn=lambda b: {out_col: b},
-        out_fields=[StructField(out_col, BinaryType())],
-    )
+    NULL inputs are skipped (src/theta_sketch_pg_functions.c:78-82), and a
+    group whose values are all NULL still emits a row (the empty sketch),
+    as the reference's ffunc does."""
+    out = df.groupBy(*group_cols).agg(F.theta_sketch_agg(_key(df, col), lg_k).alias(out_col))
+    if p < 1.0:
+        out = out.withColumn(out_col, _sample_udf(F.col(out_col), F.lit(p)))
+    return out
+
+
+# every build is in the DataSketches hash space, so the compat name is an alias
+theta_sketch_build_compat = theta_sketch_build
 
 
 def theta_sketch_distinct(
@@ -72,16 +92,9 @@ def theta_sketch_distinct(
     out_col: str = "distinct_est",
 ) -> DataFrame:
     """Aggregate: theta_sketch_distinct(anyelement[,lg_k]) -> double (sql:85-103).
-    All-NULL groups emit 0.0 (the sentinel scheme in _hash_proj)."""
-    return sketch_groupby_agg(
-        _hash_proj(df, group_cols, col),
-        group_cols,
-        [_H],
-        partial_fn=lambda pdf: _t.build(_hashed_values(pdf), lg_k),
-        merge_fn=lambda states: _t.union(states, lg_k),
-        finalize_fn=lambda b: {out_col: _t.get_estimate(b)},
-        out_fields=[StructField(out_col, DoubleType())],
-    )
+    All-NULL groups emit 0.0."""
+    sk = theta_sketch_build(df, group_cols, col, lg_k, out_col=out_col)
+    return sk.withColumn(out_col, theta_sketch_get_estimate(F.col(out_col)))
 
 
 def theta_sketch_union_agg(
@@ -91,14 +104,10 @@ def theta_sketch_union_agg(
     lg_k: int | None = None,
     out_col: str = "sketch",
 ) -> DataFrame:
-    """Aggregate: theta_sketch_union(theta_sketch[,lg_k]) (sql:135-153)."""
-    return sketch_merge_agg(
-        df,
-        group_cols,
-        sketch_col,
-        merge_fn=lambda states: _t.union(states, lg_k),
-        finalize_fn=lambda b: {out_col: b},
-        out_fields=[StructField(out_col, BinaryType())],
+    """Aggregate: theta_sketch_union(theta_sketch[,lg_k]) (sql:135-153).
+    A compact image carries no lg_k; left out, it is the reference's 12."""
+    return df.groupBy(*group_cols).agg(
+        F.theta_union_agg(sketch_col, lg_k or _t.DEFAULT_LG_K).alias(out_col)
     )
 
 
@@ -108,22 +117,32 @@ def theta_sketch_intersection_agg(
     sketch_col: str,
     out_col: str = "sketch",
 ) -> DataFrame:
-    """Aggregate: theta_sketch_intersection(theta_sketch) (sql:155-163)."""
+    """Aggregate: theta_sketch_intersection(theta_sketch) (sql:155-163).
+
+    Numpy, not Spark's ``theta_intersection_agg``: in Spark 4.1.2 that
+    aggregate throws SketchesStateException ("no intervening
+    intersections") for any aggregation buffer that saw no sketch, i.e. on
+    an empty partition of a global aggregate, an all-NULL group or empty
+    input. NULL sketches are skipped; a group of only NULLs gets the empty
+    sketch."""
     return sketch_merge_agg(
         df,
         group_cols,
         sketch_col,
-        merge_fn=_t.intersection,
-        finalize_fn=lambda b: {out_col: b},
+        merge_fn=_intersect_present,
+        finalize_fn=lambda b: {out_col: _t.empty() if b is None else b},
         out_fields=[StructField(out_col, BinaryType())],
     )
 
 
+def _intersect_present(images: list[bytes | None]) -> bytes | None:
+    """Intersection of the non-NULL images, None if there are none: a batch
+    holding only a group's NULL sketches must not empty its intersection."""
+    present = [b for b in images if b is not None]
+    return _t.intersection(present) if present else None
+
+
 # ---- scalar functions (pandas UDFs over BinaryType) -----------------------
-
-
-def _map_opt(series: pd.Series, fn) -> pd.Series:
-    return pd.Series([None if b is None else fn(b) for b in series], dtype=object)
 
 
 @F.pandas_udf(DoubleType())
@@ -198,78 +217,19 @@ def theta_sketch_to_string(s: pd.Series) -> pd.Series:
     return _map_opt(s, _t.to_string)
 
 
-# ---- DataSketches wire-format interop --------------------------------------
-
-
-def theta_sketch_build_compat(
-    df: DataFrame,
-    group_cols: list[str],
-    col: str,
-    lg_k: int = _t.DEFAULT_LG_K,
-    p: float = 1.0,
-    out_col: str = "sketch",
-) -> DataFrame:
-    """theta_sketch_build in the DataSketches hash space (murmur3_x64_128,
-    seed 9001, 63-bit — the hashing the reference's storage format implies,
-    src/theta_sketch_c_adapter.cpp:195-205): sketches built here export via
-    ``theta_sketch_to_datasketches`` as canonical compact images readable by
-    Druid / Hive / datasketches-{java,cpp,py}, and combine correctly with
-    imported ecosystem sketches. Integral keys canonicalize to 8-byte LE
-    (vectorized murmur); strings to UTF-8 bytes."""
-    from pyspark.sql.types import LongType as _Long
-    from pyspark.sql.types import IntegerType as _Int
-    from pyspark.sql.types import ShortType as _Short
-
-    from ..sketches import interop as _i
-
-    dtype = df.schema[col].dataType
-    numeric = isinstance(dtype, (_Long, _Int, _Short))
-    val = F.col(col).cast("long") if numeric else F.col(col).cast("string")
-    proj = df.where(F.col(col).isNotNull()).select(*group_cols, val.alias(_H))
-
-    if numeric:
-        def partial(pdf: pd.DataFrame) -> bytes:
-            keys = pdf[_H].to_numpy(dtype=np.int64).astype(np.uint64)
-            return _i.build_murmur(keys, lg_k, p)
-    else:
-        def partial(pdf: pd.DataFrame) -> bytes:
-            return _i.build_murmur_strings(pdf[_H], lg_k, p)
-
-    agg = sketch_groupby_agg(
-        proj,
-        group_cols,
-        [_H],
-        partial_fn=partial,
-        merge_fn=lambda states: _t.union(states, lg_k),
-        finalize_fn=lambda b: {out_col: b},
-        out_fields=[StructField(out_col, BinaryType())],
-    )
-    from ..sketches import interop as _interop
-
-    empty = _interop.build_murmur(np.empty(0, dtype=np.uint64), lg_k, p)
-    return keep_group_keys(df, group_cols, agg, {out_col: empty})
+# ---- DataSketches wire format ----------------------------------------------
 
 
 @F.pandas_udf(BinaryType())
 def theta_sketch_to_datasketches(s: pd.Series) -> pd.Series:
-    """Internal sketch -> canonical Apache DataSketches compact theta image
-    (serial v3; see sketches.interop). Only murmur-built/imported sketches
-    export — xxhash64-built ones raise (their hash values would be
-    meaningless to an ecosystem reader)."""
-    from ..sketches.interop import serialize_compact
-
-    return pd.Series(
-        [None if b is None else serialize_compact(bytes(b)) for b in s], dtype=object
-    )
+    """Sketch -> the same sketch as a serial-version-3 compact theta image,
+    the version every DataSketches reader (Druid, Hive,
+    datasketches-{java,cpp,py}) accepts."""
+    return _map_opt(s, _i.serialize_compact)
 
 
 @F.pandas_udf(BinaryType())
 def theta_sketch_from_datasketches(s: pd.Series) -> pd.Series:
-    """Canonical compact theta image (e.g. produced by Druid / Hive /
-    datasketches-java) -> internal sketch usable with every theta function
-    here."""
-    from ..sketches.interop import deserialize_compact
-
-    return pd.Series(
-        [None if b is None else deserialize_compact(bytes(b)) for b in s], dtype=object
-    )
+    """Compact theta image (e.g. produced by Druid / Hive / datasketches-java)
+    -> the same image, validated; usable with every theta function here."""
+    return _map_opt(s, _i.deserialize_compact)

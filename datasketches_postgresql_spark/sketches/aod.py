@@ -33,9 +33,9 @@ import numpy as np
 
 from . import kll
 from .stats import welch_t_test
-from .theta import _MAX_THETA, _k
 
 DEFAULT_LG_K = 12
+_MAX_THETA = np.uint64(0xFFFFFFFFFFFFFFFF)  # theta == 1.0 (exact mode)
 _HDR = struct.Struct("<BBQI")
 
 
@@ -67,7 +67,7 @@ def _sum_by_key(keys: np.ndarray, vals: np.ndarray) -> tuple[np.ndarray, np.ndar
 
 
 def _trim(lg_k: int, theta: np.uint64, keys: np.ndarray, vals: np.ndarray):
-    k = _k(lg_k)
+    k = 1 << lg_k
     mask = keys < theta
     keys, vals = keys[mask], vals[mask]
     if keys.size > k:

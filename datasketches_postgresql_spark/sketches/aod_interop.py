@@ -18,7 +18,7 @@ SerializerDeserializer, Apache-2.0), little-endian:
               bit3 has-entries)
     byte 5:   num values (doubles per retained key)
     bytes 6-7: seed hash (lower 16 bits of murmur3_x64_128 of the seed,
-              never 0 — shared with the theta family, sketches.interop)
+              never 0 — shared with the theta family, sketches.murmur3)
     bytes 8-15: theta (u64; Long.MAX_VALUE = 2^63-1 when exact)
     if has-entries:
       bytes 16-19: retained count (u32)
@@ -31,9 +31,8 @@ SerializerDeserializer, Apache-2.0), little-endian:
 
 Hash space: identical to compact theta — murmur3_x64_128(key, seed).h1 >> 1,
 default update seed 9001. The internal AOD kernel (sketches.aod) lives in
-the full u64 space; the same x2 embedding as sketches.interop bridges them
-(internal = ds << 1), so unions/intersections over imported sketches behave
-identically. Export requires a murmur-built or imported sketch (every
+the full u64 space; a x2 embedding bridges them (internal = ds << 1), so
+unions/intersections over imported sketches behave identically. Export requires a murmur-built or imported sketch (every
 internal key even); exporting an xxhash64-built sketch raises.
 
 Ground truth: datasketches-java 6.2.0 rides in Spark's own jars — images
@@ -49,8 +48,8 @@ import struct
 import numpy as np
 
 from . import aod as _a
-from .interop import DEFAULT_SEED, compute_seed_hash
-from .theta import _MAX_THETA
+from .aod import _MAX_THETA
+from .murmur3 import DEFAULT_SEED, compute_seed_hash
 
 FAMILY_TUPLE = 9
 _SERIAL_VERSION = 1

@@ -61,7 +61,7 @@ import struct
 import numpy as np
 
 from . import cpc as _c
-from .interop import DEFAULT_SEED, compute_seed_hash
+from .murmur3 import DEFAULT_SEED, compute_seed_hash
 from .murmur3 import hash128_u64
 
 FAMILY_CPC = 16

@@ -14,8 +14,11 @@ Two implementations, cross-checked in tests:
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 
+DEFAULT_SEED = 9001  # DataSketches default update seed
 _C1 = 0x87C37B91114253D5
 _C2 = 0x4CF5AD432745937F
 _M = 0xFFFFFFFFFFFFFFFF
@@ -79,6 +82,16 @@ def hash128_bytes(data: bytes, seed: int = 0) -> tuple[int, int]:
     h1 = (h1 + h2) & _M
     h2 = (h2 + h1) & _M
     return h1, h2
+
+
+def compute_seed_hash(seed: int = DEFAULT_SEED) -> int:
+    """Lower 16 bits of murmur3_x64_128 of the 8-byte LE seed: the
+    DataSketches images' cross-sketch seed check (never 0)."""
+    h1, _ = hash128_bytes(struct.pack("<Q", seed), 0)
+    sh = h1 & 0xFFFF
+    if sh == 0:
+        raise ValueError(f"seed {seed} hashes to the reserved value 0")
+    return sh
 
 
 def hash128_bytes_batch(items: list[bytes], seed: int = 0, with_h2: bool = False):

@@ -16,7 +16,12 @@ import pytest
 
 from datasketches_postgresql_spark.sketches import interop as I
 from datasketches_postgresql_spark.sketches import theta as T
-from datasketches_postgresql_spark.sketches.murmur3 import hash128_bytes, hash128_u64
+from datasketches_postgresql_spark.sketches.murmur3 import (
+    DEFAULT_SEED,
+    compute_seed_hash,
+    hash128_bytes,
+    hash128_u64,
+)
 
 
 class TestMurmur3:
@@ -40,9 +45,9 @@ class TestMurmur3:
         assert a == b and a != c
 
     def test_seed_hash(self):
-        sh = I.compute_seed_hash(I.DEFAULT_SEED)
+        sh = compute_seed_hash(DEFAULT_SEED)
         assert 0 < sh < 65536
-        assert sh != I.compute_seed_hash(12345)
+        assert sh != compute_seed_hash(12345)
 
 
 class TestCompactFormat:
@@ -84,9 +89,7 @@ class TestCompactFormat:
         sk = I.build_murmur(vals, lg_k=11)
         img = I.serialize_compact(sk)
         assert img[0] == 3  # estimation preamble
-        # compact images do not carry lg_k (byte 3 unused in the format), so
-        # the working-state parameter is supplied on import
-        back = I.deserialize_compact(img, lg_k=11)
+        back = I.deserialize_compact(img)
         assert back == sk
         est = T.get_estimate(sk)
         true = len(np.unique(vals))
@@ -98,10 +101,15 @@ class TestCompactFormat:
         with pytest.raises(ValueError, match="seed hash"):
             I.deserialize_compact(img, seed=12345)
 
-    def test_xxhash_sketch_refuses_export(self):
-        sk = T.build(np.arange(1, 100, dtype=np.uint64))
-        with pytest.raises(ValueError, match="xxhash64"):
-            I.serialize_compact(sk)
+    def test_every_kernel_image_exports_unchanged(self):
+        """One hash space and one image format: a sketch built from any
+        uniform hashes is already the v3 wire image, so export is the
+        identity and import returns the same bytes."""
+        rng = np.random.default_rng(12)
+        sk = T.build(rng.integers(0, 2**64, size=5000, dtype=np.uint64), lg_k=10)
+        assert I.serialize_compact(sk) == sk
+        assert I.deserialize_compact(sk) == sk
+        assert sk[0] == 3 and sk[1] == 3  # estimation preamble, serial v3
 
     def test_reference_test_expectations_through_wire(self):
         """theta_sketch_test.sql:24-33: union({1..5},{4..8})=8,

@@ -392,6 +392,87 @@ class TestThetaStringKeys:
         assert inter.getResult().getEstimate() == 802.0
 
 
+class TestThetaEstimationRegime:
+    """Theta past its exact regime (N = 100k keys >> k = 4096), both image
+    versions, both directions, and p-sampling."""
+
+    N = 100_000
+
+    @pytest.fixture(scope="class")
+    def streamed(self, jvm):
+        us = jvm.org.apache.datasketches.theta.UpdateSketch.builder().build()
+        for i in range(self.N):
+            us.update(i)
+        return us.compact()
+
+    @pytest.mark.parametrize("version", [3, 4])
+    def test_java_image_decodes_to_java_hashes_and_estimate(self, streamed, version):
+        raw = streamed.toByteArray() if version == 3 else streamed.toByteArrayCompressed()
+        img = bytes(raw)
+        assert img[1] == version
+        theta, hashes = TK.deserialize(img)
+        assert theta == streamed.getThetaLong() < TK.MAX_THETA
+        assert hashes.tolist() == sorted(streamed.getCache())
+        assert TK.get_estimate(img) == streamed.getEstimate()
+
+    def test_native_spark_image_heapifies_with_the_same_estimate(self, spark, jvm, mem, streamed):
+        from pyspark.sql import functions as F
+
+        img = bytes(spark.range(self.N).agg(F.theta_sketch_agg("id")).first()[0])
+        assert img[1] == 4
+        js = jvm.org.apache.datasketches.theta.Sketches.heapifySketch(mem.wrap(img))
+        assert js.getThetaLong() < TK.MAX_THETA
+        assert TK.get_estimate(img) == js.getEstimate()
+        assert TK.deserialize(img)[1].tolist() == sorted(js.getCache())
+
+    def test_numpy_build_heapifies_with_the_same_estimate_and_hashes(self, jvm, mem, streamed):
+        img = TI.build_murmur(np.arange(self.N, dtype=np.uint64))
+        js = jvm.org.apache.datasketches.theta.Sketches.heapifySketch(mem.wrap(img))
+        ours_theta, ours = TK.deserialize(img)
+        assert js.getThetaLong() == ours_theta < TK.MAX_THETA
+        assert js.getEstimate() == TK.get_estimate(img)
+        # one hash space: below both thetas, the numpy build and Java's
+        # streamed sketch retain the same entries
+        java = np.array(sorted(streamed.getCache()), dtype=np.uint64)
+        cut = min(ours_theta, streamed.getThetaLong())
+        assert np.array_equal(ours[ours < np.uint64(cut)], java[java < np.uint64(cut)])
+
+    def test_p_sampling_matches_java_set_p(self, spark, jvm):
+        from datasketches_postgresql_spark.functions import theta as TH
+
+        n = 3000  # ~1500 sampled entries < k: the exact regime of setP(0.5)
+        us = jvm.org.apache.datasketches.theta.UpdateSketch.builder().setP(0.5).build()
+        for i in range(n):
+            us.update(i)
+        java = TK.deserialize(bytes(us.compact().toByteArray()))
+        native = TH.theta_sketch_build(spark.range(n), [], "id", p=0.5).first()["sketch"]
+        kernel = TI.build_murmur(np.arange(n, dtype=np.uint64), p=0.5)
+        for img in (native, kernel):
+            theta, hashes = TK.deserialize(img)
+            assert theta == java[0] == 1 << 62
+            assert np.array_equal(hashes, java[1])
+
+    def test_every_image_the_kernel_writes_heapifies(self, jvm, mem):
+        keys = np.arange(self.N, dtype=np.uint64)
+        a, b = TI.build_murmur(keys[:60_000]), TI.build_murmur(keys[40_000:])
+        images = {
+            "empty": TK.empty(),
+            "single": TI.build_murmur(keys[:1]),
+            "exact": TI.build_murmur(keys[:1000]),
+            "estimation": a,
+            "sampled": TI.build_murmur(keys[:1000], p=0.25),
+            "union": TK.union([a, b]),
+            "intersection": TK.intersection([a, b]),
+            "a_not_b": TK.a_not_b(a, b),
+        }
+        for name, img in images.items():
+            js = jvm.org.apache.datasketches.theta.Sketches.heapifySketch(mem.wrap(img))
+            theta, hashes = TK.deserialize(img)
+            assert js.getEstimate() == TK.get_estimate(img), name
+            assert js.getRetainedEntries(True) == hashes.size, name
+            assert js.getThetaLong() == theta, name
+
+
 class TestCpcEstimatorParity:
     def test_estimates_agree_with_java_cpc(self, jvm):
         """Estimator-class parity for the INTERNAL xxhash64 coupon space

@@ -62,9 +62,9 @@ class TestTheta:
 
     def test_roundtrip(self):
         s = theta.build(h64(range(10)), lg_k=9)
-        lg_k, th, hashes = theta.deserialize(s)
-        assert lg_k == 9 and hashes.size == 10
-        assert theta.serialize(lg_k, th, hashes) == s
+        th, hashes = theta.deserialize(s)
+        assert th == theta.MAX_THETA and hashes.size == 10
+        assert theta.serialize(th, hashes) == s
 
 
 class TestKll:
@@ -235,15 +235,16 @@ class TestThetaSelectionFastPath:
     assumption the filter is tuned for."""
 
     def _reference_build(self, vals, lg_k):
-        from datasketches_postgresql_spark.sketches.theta import (
-            _MAX_THETA,
-            _trim,
-            serialize,
-        )
+        """Full-sort KMV: the k smallest distinct nonzero entries
+        ``h >> 1``, theta the (k+1)-th."""
+        from datasketches_postgresql_spark.sketches.theta import MAX_THETA, serialize
 
-        hashes = np.unique(np.asarray(vals, dtype=np.uint64))
-        th, hs = _trim(lg_k, _MAX_THETA, hashes)
-        return serialize(lg_k, th, np.sort(hs))
+        hashes = np.unique(np.asarray(vals, dtype=np.uint64) >> np.uint64(1))
+        hashes = hashes[hashes > 0]
+        k = 1 << lg_k
+        if hashes.size > k:
+            return serialize(int(hashes[k]), hashes[:k])
+        return serialize(MAX_THETA, hashes)
 
     def test_uniform_large_batch_matches_slow_path(self):
         rng = np.random.default_rng(1)
@@ -287,8 +288,8 @@ class TestThetaSelectionFastPath:
         # combined retained-hash multiset
         from datasketches_postgresql_spark.sketches.theta import deserialize
 
-        combined = np.concatenate([deserialize(p)[2] for p in parts])
-        assert u == self._reference_build(combined, 8)
+        combined = np.concatenate([deserialize(p)[1] for p in parts])
+        assert u == self._reference_build(combined << np.uint64(1), 8)
 
 
 class TestMurmurBatch:

@@ -18,6 +18,7 @@ Apache DataSketches images.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -46,7 +47,8 @@ class TestThetaProperties:
         from datasketches_postgresql_spark.sketches import theta
 
         s = theta.build(_arr_u64(xs))
-        true = len(set(xs))
+        # the kernel keeps h >> 1 in (0, Long.MAX_VALUE), as datasketches-java does
+        true = len({x >> 1 for x in xs} - {0, theta.MAX_THETA})
         est, lb, ub = theta.get_estimate_and_bounds(s, 2)
         if true <= (1 << theta.DEFAULT_LG_K):  # exact regime at default lg_k
             assert est == true == lb == ub
@@ -63,6 +65,135 @@ class TestThetaProperties:
         assert back == s
         assert interop.serialize_compact(back) == interop.serialize_compact(s)
         assert theta.get_estimate(back) == theta.get_estimate(s)
+
+
+def encode_theta_v4(theta_long: int, hashes) -> bytes:
+    """Serial-version-4 (compressed) compact theta image, written from the
+    public format as datasketches-java's ``toByteArrayCompressed`` lays it
+    out: entry deltas packed MSB first in ``entry_bits`` bits each."""
+    from datasketches_postgresql_spark.sketches import murmur3, theta
+
+    hashes = [int(h) for h in hashes]
+    estimation = theta_long < theta.MAX_THETA
+    deltas = [b - a for a, b in zip([0] + hashes, hashes)]
+    bits = max(1, max(deltas, default=1).bit_length())
+    n = len(hashes)
+    count_bytes = max(1, (n.bit_length() + 7) // 8)
+    pre = 2 if estimation else 1
+    out = bytearray([pre, 4, 3, bits, count_bytes, 2 | 8 | 16])
+    out += murmur3.compute_seed_hash().to_bytes(2, "little")
+    if estimation:
+        out += theta_long.to_bytes(8, "little")
+    out += n.to_bytes(count_bytes, "little")
+    stream = 0
+    for d in deltas:
+        stream = (stream << bits) | d
+    nbytes = (n * bits + 7) // 8
+    out += (stream << (8 * nbytes - n * bits)).to_bytes(nbytes, "big")
+    return bytes(out)
+
+
+@st.composite
+def theta_images(draw):
+    """(theta, entries, v3 image, v4 image) over arbitrary valid sketches."""
+    from datasketches_postgresql_spark.sketches import theta
+
+    estimation = draw(st.booleans())
+    th = draw(st.integers(2, theta.MAX_THETA - 1)) if estimation else theta.MAX_THETA
+    entries = draw(st.lists(st.integers(1, th - 1), min_size=0 if estimation else 2,
+                            max_size=300, unique=True))
+    hs = np.array(sorted(entries), dtype=np.uint64)
+    return th, hs, theta.serialize(th, hs), encode_theta_v4(th, hs)
+
+
+def _decodes_or_raises_value_error(image):
+    """A hostile image either raises ValueError or decodes to a sketch that
+    satisfies every invariant, and never holds more entries than its bytes."""
+    from datasketches_postgresql_spark.sketches import theta
+
+    try:
+        th, hs = theta.deserialize(image)
+    except ValueError:
+        return
+    assert 0 < th <= theta.MAX_THETA
+    assert hs.size <= 8 * len(image)
+    if hs.size:
+        assert hs[0] > 0 and hs[-1] < th and np.all(np.diff(hs.astype(object)) > 0)
+
+
+class TestThetaDecoderHostileInput:
+    """The compact-image decoder over v3 and v4: valid images round-trip;
+    truncated, flipped, oversized-count and bad-width images raise
+    ValueError (sizes are checked against len(image) before allocating)."""
+
+    @given(theta_images())
+    @settings(max_examples=80, deadline=None)
+    def test_v3_and_v4_decode_to_the_same_sketch(self, img):
+        from datasketches_postgresql_spark.sketches import interop, theta
+
+        th, hs, v3, v4 = img
+        for image in (v3, v4):
+            got_th, got = theta.deserialize(image)
+            assert got_th == th and np.array_equal(got, hs)
+        assert interop.serialize_compact(v4) == v3
+        assert theta.get_estimate(v4) == theta.get_estimate(v3)
+
+    @given(theta_images(), st.data())
+    @settings(max_examples=80, deadline=None)
+    def test_truncated_image_raises(self, img, data):
+        from datasketches_postgresql_spark.sketches import theta
+
+        for image in img[2:]:
+            cut = data.draw(st.integers(0, len(image) - 1))
+            with pytest.raises(ValueError):
+                theta.deserialize(image[:cut])
+
+    @given(theta_images(), st.data())
+    @settings(max_examples=150, deadline=None)
+    def test_flipped_header_byte_raises_or_decodes_consistently(self, img, data):
+        for image in img[2:]:
+            pos = data.draw(st.integers(0, min(len(image), 24) - 1))
+            mask = data.draw(st.integers(1, 255))
+            flipped = bytearray(image)
+            flipped[pos] ^= mask
+            _decodes_or_raises_value_error(bytes(flipped))
+
+    @given(theta_images(), st.integers(1, 2**32 - 1))
+    @settings(max_examples=80, deadline=None)
+    def test_oversized_entry_count_raises(self, img, extra):
+        from datasketches_postgresql_spark.sketches import theta
+
+        th, hs, v3, v4 = img
+        if v3[0] != 1:  # the empty and single-item images hold no count
+            n = min(hs.size + extra, 2**32 - 1)
+            with pytest.raises(ValueError):
+                theta.deserialize(v3[:8] + n.to_bytes(4, "little") + v3[12:])
+        pre, count_bytes = v4[0], v4[4]
+        n = min(hs.size + extra, 2 ** (8 * count_bytes) - 1)
+        if n > hs.size:
+            at = 8 * pre
+            bad = v4[:at] + n.to_bytes(count_bytes, "little") + v4[at + count_bytes :]
+            with pytest.raises(ValueError):
+                theta.deserialize(bad)
+
+    @given(theta_images(), st.sampled_from([0, 64, 65, 127, 200, 255]))
+    @settings(max_examples=40, deadline=None)
+    def test_bad_entry_bit_width_raises(self, img, bits):
+        from datasketches_postgresql_spark.sketches import theta
+
+        v4 = bytearray(img[3])
+        v4[3] = bits
+        with pytest.raises(ValueError, match="bit entries"):
+            theta.deserialize(bytes(v4))
+
+    def test_single_item_image_cut_short_raises_value_error(self):
+        from datasketches_postgresql_spark.sketches import interop, theta
+
+        img = interop.build_murmur(np.array([7], dtype=np.uint64))
+        assert len(img) == 16
+        for cut in (9, 12, 15):
+            with pytest.raises(ValueError, match="truncated"):
+                theta.deserialize(img[:cut])
 
 
 class TestKllProperties:

@@ -56,12 +56,11 @@ def pin_input(spark):
 
 def _norm(v, kind):
     """The kernel answer as Spark returns it for a result of ``kind``: float
-    kinds round to float32, and a NaN crosses Arrow from pandas as NULL,
-    except inside a REQ float array, whose items are numpy float32. A
+    kinds round to float32, and a NaN arrives as NULL, inside arrays too. A
     ``*cast`` kind is a double result cast to float in Spark."""
     if isinstance(v, list):
         if kind == "flist":
-            return [float(np.float32(x)) for x in v]
+            return [None if math.isnan(x) else float(np.float32(x)) for x in v]
         return [_norm(x, "float" if kind == "flistcast" else "double") for x in v]
     if v is None or (kind in ("double", "float", "floatcast") and math.isnan(v)):
         return None
@@ -291,18 +290,22 @@ def _check_rows(rows, fam, cases, codecs, sql):
             got = row[f"x{j}"]
             want = None if img is None else fn(bytes(img))
             assert got == want, (fam.name, g, "codec", j)
+        if g == "empty":  # every family answers an empty sketch's quantiles with NULLs
+            for i, case in enumerate(cases):
+                if case.label.startswith("quantiles "):
+                    assert row[f"c{i}"] == [None] * len(RANKS), (fam.name, case.label)
     assert seen == {"small", "large", "empty", "null"}
     return {r["g"]: r for r in rows}
 
 
-def _small_items(family, sql):
+def _small_items(family):
     """The small group's values as the family's build stores them: REQ keeps
-    float32 items; the KLL float DataFrame build rounds to float32 and keeps
-    float64 items; the SQL builds of KLL take the column as given."""
+    float32 items; the KLL float builds (DataFrame and SQL) round to float32
+    and keep float64 items."""
     x = np.asarray(SMALL, dtype=np.float64)
     if family == "req":
         return x.astype(np.float32)
-    if family == "kll_float" and not sql:
+    if family == "kll_float":
         return x.astype(np.float32).astype(np.float64)
     return x
 
@@ -310,7 +313,7 @@ def _small_items(family, sql):
 def _check_exact(fam, rows, cases, sql):
     """Below k every answer equals numpy's exact one."""
     small = rows["small"]
-    x = np.sort(_small_items(fam.name, sql))
+    x = np.sort(_small_items(fam.name))
     assert fam.load(bytes(small[SK])).n == x.size < fam.k
     for i, case in enumerate(cases):
         if case.exact is None:

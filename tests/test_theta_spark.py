@@ -2,9 +2,12 @@
 reproduces `SELECT theta_sketch_get_estimate(theta_sketch_union(sketch)) FROM t`
 and `theta_sketch_distinct(id)` (reference README.md:237,253)."""
 
+import numpy as np
 import pyspark.sql.functions as F
 
 from datasketches_postgresql_spark.functions import theta as T
+from datasketches_postgresql_spark.sketches import interop as TI
+from datasketches_postgresql_spark.sketches import theta as T_sketch
 
 
 def test_theta_distinct_exact_regime(spark):
@@ -71,3 +74,50 @@ def test_theta_estimation_regime_vs_exact(spark, sf_dir):
     exact = df.select(F.countDistinct(col)).collect()[0][0]
     est = T.theta_sketch_distinct(df, [], col, lg_k=12).collect()[0]["distinct_est"]
     assert abs(est - exact) / exact < 0.05
+
+
+def test_intersection_agg_skips_null_sketches(spark):
+    """A partition that holds only NULL sketches of a group adds nothing to
+    its intersection (it used to contribute the empty sketch, giving 0)."""
+    sk = T.theta_sketch_build(
+        spark.createDataFrame(
+            [("a", v) for v in [1, 2, 3, 4]] + [("b", v) for v in [3, 4, 5]], "k string, value long"
+        ),
+        ["k"],
+        "value",
+    )
+    nulls = spark.createDataFrame([("n", None)], "k string, sketch binary")
+    rows = sk.unionByName(nulls).withColumn("grp", F.lit("g"))
+    # one row per partition, so the NULL sketch is a batch of its own
+    rows = rows.repartitionByRange(3, "k")
+    assert rows.rdd.glom().map(len).collect() == [1, 1, 1]
+    for group_cols in (["grp"], []):
+        est = T.theta_sketch_intersection_agg(rows, group_cols, "sketch").select(
+            T.theta_sketch_get_estimate("sketch").alias("e")
+        ).collect()
+        assert [r["e"] for r in est] == [2.0]
+    only_nulls = nulls.withColumn("grp", F.lit("g"))
+    got = T.theta_sketch_intersection_agg(only_nulls, ["grp"], "sketch").collect()
+    assert [T_sketch.get_estimate(r["sketch"]) for r in got] == [0.0]
+
+
+
+def test_native_spark_images_read_everywhere(spark):
+    """Spark's own theta_sketch_agg images (compressed serial version 4) are
+    read by the theta UDFs here, and the package's images by Spark's native
+    theta functions."""
+    two = spark.range(2).agg(F.theta_sketch_agg("id").alias("sketch"))
+    assert (lambda img: (len(img), img[1]))(two.first()["sketch"]) == (25, 4)
+    row = two.select(
+        T.theta_sketch_get_estimate("sketch").alias("e"),
+        T.theta_sketch_to_string("sketch").alias("s"),
+        T.theta_sketch_to_datasketches("sketch").alias("v3"),
+    ).first()
+    assert row["e"] == 2.0 and "retained entries: 2" in row["s"] and row["v3"][1] == 3
+    ours = TI.build_murmur(np.arange(1, 5, dtype=np.uint64))
+    pair = spark.createDataFrame([(row["v3"], ours)], "a binary, b binary")
+    got = pair.select(
+        F.theta_sketch_estimate("a").alias("a"),
+        F.theta_sketch_estimate(F.theta_union("a", "b")).alias("u"),
+    ).first()
+    assert (got["a"], got["u"]) == (2, 5)
