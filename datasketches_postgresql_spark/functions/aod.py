@@ -4,6 +4,8 @@ xxhash64, value vectors cross as Arrow list columns."""
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -18,6 +20,8 @@ from pyspark.sql.types import (
 
 from ..operators.agg import sketch_groupby_agg, sketch_merge_agg
 from ..sketches import aod as _a
+from ..sketches import aod_interop as _ai
+from . import image_udf
 
 _H, _V, _VAL = "__h", "__v", "__vals"
 
@@ -92,25 +96,23 @@ def aod_sketch_intersection_agg(
     out_col: str = "sketch",
 ) -> DataFrame:
     """Aggregate intersection; values combined with the union policy (sum),
-    "as in Druid" (sql:149-167, src/aod_sketch_c_adapter.cpp:37-38)."""
-
-    def inter_merge(states: list[bytes]) -> bytes:
-        states = [s for s in states if s is not None]
-        if not states:
-            raise ValueError("empty intersection")
-        acc = states[0]
-        for s in states[1:]:
-            acc = _a.intersection(acc, s)
-        return acc
-
+    "as in Druid" (sql:149-167, src/aod_sketch_c_adapter.cpp:37-38). NULL
+    sketches are skipped; a group of only NULLs gets the empty sketch."""
     return sketch_merge_agg(
         df,
         group_cols,
         sketch_col,
-        merge_fn=inter_merge,
-        finalize_fn=lambda b: {out_col: b},
+        merge_fn=_intersect_present,
+        finalize_fn=lambda b: {out_col: _a.union([]) if b is None else b},
         out_fields=[StructField(out_col, BinaryType())],
     )
+
+
+def _intersect_present(images: list[bytes | None]) -> bytes | None:
+    """Intersection of the non-NULL images, None if there are none: a batch
+    holding only a group's NULL sketches must not fail or empty the group."""
+    present = [b for b in images if b is not None]
+    return functools.reduce(_a.intersection, present) if present else None
 
 
 # ---- pairwise / scalar -----------------------------------------------------
@@ -259,7 +261,6 @@ def aod_sketch_build_compat(
     ``aod_sketch_to_datasketches`` as canonical AOD compact tuple images
     readable by Druid / datasketches-{java,cpp,py}. Integral keys
     canonicalize to 8-byte LE (vectorized murmur)."""
-    from ..sketches import aod_interop as _ai
 
     proj = df.where(
         F.col(key_col).isNotNull() & F.col(values_col).isNotNull()
@@ -290,24 +291,14 @@ def aod_sketch_build_compat(
     )
 
 
-@F.pandas_udf(BinaryType())
-def aod_sketch_to_datasketches(s: pd.Series) -> pd.Series:
+aod_sketch_to_datasketches = image_udf(
+    "aod_sketch_to_datasketches", _ai.serialize_compact,
     """Internal AOD sketch -> canonical DataSketches AOD compact image
     (family 9, sketch type 3; see sketches.aod_interop). Only
-    murmur-built/imported sketches export — xxhash64-built ones raise."""
-    from ..sketches.aod_interop import serialize_compact
-
-    return pd.Series(
-        [None if b is None else serialize_compact(bytes(b)) for b in s], dtype=object
-    )
+    murmur-built/imported sketches export — xxhash64-built ones raise.""")
 
 
-@F.pandas_udf(BinaryType())
-def aod_sketch_from_datasketches(s: pd.Series) -> pd.Series:
+aod_sketch_from_datasketches = image_udf(
+    "aod_sketch_from_datasketches", _ai.deserialize_compact,
     """Canonical DataSketches AOD compact image (e.g. produced by Druid /
-    datasketches-java) -> internal sketch usable with every aod_* function."""
-    from ..sketches.aod_interop import deserialize_compact
-
-    return pd.Series(
-        [None if b is None else deserialize_compact(bytes(b)) for b in s], dtype=object
-    )
+    datasketches-java) -> internal sketch usable with every aod_* function.""")

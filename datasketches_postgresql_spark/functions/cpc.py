@@ -31,6 +31,8 @@ from pyspark.sql.types import ArrayType, BinaryType, DoubleType, StringType, Str
 
 from ..operators.agg import sketch_groupby_agg, sketch_merge_agg
 from ..sketches import cpc as _c
+from ..sketches import cpc_interop as _ci
+from . import image_udf
 
 DEFAULT_LG_K = _c.DEFAULT_LG_K
 _H = "__h"
@@ -153,7 +155,6 @@ def cpc_sketch_build_compat(
     from pyspark.sql.types import ShortType as _Short
 
     from ..operators.agg import keep_group_keys
-    from ..sketches import cpc_interop as _ci
 
     dtype = df.schema[col].dataType
     numeric = isinstance(dtype, (_Long, _Int, _Short))
@@ -182,25 +183,15 @@ def cpc_sketch_build_compat(
     return keep_group_keys(df, group_cols, agg, {out_col: empty})
 
 
-@F.pandas_udf(BinaryType())
-def cpc_sketch_to_datasketches(s: pd.Series) -> pd.Series:
+cpc_sketch_to_datasketches = image_udf(
+    "cpc_sketch_to_datasketches", _ci.serialize_canonical,
     """Internal CPC sketch -> canonical compressed DataSketches CPC image
     (merged format — what a CpcUnion result serializes to; see
-    sketches.cpc_interop for the full layout)."""
-    from ..sketches.cpc_interop import serialize_canonical
-
-    return pd.Series(
-        [None if b is None else serialize_canonical(bytes(b)) for b in s], dtype=object
-    )
+    sketches.cpc_interop for the full layout).""")
 
 
-@F.pandas_udf(BinaryType())
-def cpc_sketch_from_datasketches(s: pd.Series) -> pd.Series:
+cpc_sketch_from_datasketches = image_udf(
+    "cpc_sketch_from_datasketches", _ci.deserialize_canonical,
     """Canonical DataSketches CPC image (any of the 8 formats, HIP or
     merged, e.g. from Druid or datasketches-*) -> internal sketch usable
-    with every cpc_* function here."""
-    from ..sketches.cpc_interop import deserialize_canonical
-
-    return pd.Series(
-        [None if b is None else deserialize_canonical(bytes(b)) for b in s], dtype=object
-    )
+    with every cpc_* function here.""")

@@ -1,5 +1,17 @@
-"""Frequent-strings family
-(/root/reference/sql/datasketches_frequent_strings_sketch.sql)."""
+"""Frequent-strings family (the reference's
+sql/datasketches_frequent_strings_sketch.sql).
+
+The unweighted build runs on Spark's native ``approx_top_k_accumulate``
+(SQL-only in PySpark 4.1), tracking ``3 << (lg_k - 2)`` items, i.e. a map of
+2^lg_k slots, for lg_k 3..20 (Java's smallest map, and Spark's cap of
+1,000,000 tracked items); any other lg_k runs the numpy build, as weighted
+builds do. A scalar UDF decodes the
+accumulator's ``sketch`` field into the internal state (sketches.fi_interop),
+where every item's error is the offset, datasketches-java's model: in the
+estimation regime its lower bounds are looser than the numpy per-item build
+gives, and both bracket the true count. Spark's aggregate has no weight
+argument, so weighted builds stay numpy, as do merges, results and codecs.
+"""
 
 from __future__ import annotations
 
@@ -18,8 +30,12 @@ from pyspark.sql.types import (
 
 from ..operators.agg import sketch_groupby_agg, sketch_merge_agg
 from ..sketches import fi as _fi
+from ..sketches import fi_interop as _fii
+from . import image_udf
 
 _S, _W = "__s", "__w"
+# Java's smallest map (lg 3) up to Spark's maxItemsTracked limit of 1,000,000
+NATIVE_LG_K = range(3, 21)
 
 # composite row type (sql/datasketches_frequent_strings_sketch.sql:103)
 ROW_TYPE = StructType(
@@ -32,6 +48,9 @@ ROW_TYPE = StructType(
 )
 
 
+_from_top_k_udf = image_udf("_from_top_k_udf", _fii.from_top_k_accumulate)
+
+
 def frequent_strings_sketch_build(
     df: DataFrame,
     group_cols: list[str],
@@ -41,26 +60,24 @@ def frequent_strings_sketch_build(
     out_col: str = "sketch",
 ) -> DataFrame:
     """Aggregate: frequent_strings_sketch_build(lg_k, varchar[, weight])
-    (sql:65-83; lg_k mandatory, weight default 1)."""
-    cols = [F.col(col).cast("string").alias(_S)]
-    in_cols = [_S]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("long").alias(_W))
-        in_cols.append(_W)
-    proj = df.select(*group_cols, *cols)
+    (sql:65-83; lg_k mandatory, weight default 1). NULL strings are skipped."""
+    if weight_col is None and lg_k in NATIVE_LG_K:
+        acc = F.call_function(
+            "approx_top_k_accumulate", F.col(col).cast("string"), F.lit(3 << (lg_k - 2))
+        )
+        out = df.groupBy(*group_cols).agg(acc.alias(out_col))
+        return out.withColumn(out_col, _from_top_k_udf(F.col(out_col).getField("sketch")))
+    weight = F.lit(1) if weight_col is None else F.col(weight_col)
+    proj = df.select(*group_cols, F.col(col).cast("string").alias(_S), weight.cast("long").alias(_W))
 
     def partial(pdf: pd.DataFrame) -> bytes:
         sub = pdf.dropna(subset=[_S])
-        return _fi.build(
-            lg_k,
-            sub[_S].to_numpy(dtype=object),
-            sub[_W].to_numpy(dtype=np.int64) if weight_col is not None else None,
-        )
+        return _fi.build(lg_k, sub[_S].to_numpy(dtype=object), sub[_W].to_numpy(dtype=np.int64))
 
     return sketch_groupby_agg(
         proj,
         group_cols,
-        in_cols,
+        [_S, _W],
         partial_fn=partial,
         merge_fn=lambda states: _fi.merge(lg_k, states),
         finalize_fn=lambda b: {out_col: b},
@@ -155,23 +172,11 @@ def frequent_strings_sketch_to_string(sketch: Column, print_items: bool = False)
 # the internal per-item-error state the same ecosystem interop.
 
 
-@F.pandas_udf(BinaryType())
-def frequent_strings_sketch_to_datasketches(s: pd.Series) -> pd.Series:
+frequent_strings_sketch_to_datasketches = image_udf(
+    "frequent_strings_sketch_to_datasketches", _fii.serialize,
     """Internal FI state -> canonical DataSketches frequent-strings image
-    (readable by datasketches-{java,cpp,py}, Druid, Hive, the reference)."""
-    from ..sketches.fi_interop import serialize
-
-    return pd.Series(
-        [None if b is None else serialize(bytes(b)) for b in s], dtype=object
-    )
-
-
-@F.pandas_udf(BinaryType())
-def frequent_strings_sketch_from_datasketches(s: pd.Series) -> pd.Series:
+    (readable by datasketches-{java,cpp,py}, Druid, Hive, the reference).""")
+frequent_strings_sketch_from_datasketches = image_udf(
+    "frequent_strings_sketch_from_datasketches", _fii.deserialize,
     """Canonical frequent-strings image -> internal state usable with every
-    frequent_strings_* function here."""
-    from ..sketches.fi_interop import deserialize
-
-    return pd.Series(
-        [None if b is None else deserialize(bytes(b)) for b in s], dtype=object
-    )
+    frequent_strings_* function here.""")

@@ -2,48 +2,38 @@
 (/root/reference/sql/datasketches_kll_float_sketch.sql,
  /root/reference/sql/datasketches_kll_double_sketch.sql).
 
-One kernel serves both: the float variant casts inputs to float32 precision
-JVM-side before sketching and returns FloatType results, mirroring the
-reference's separate kll_float/kll_double types.
+Every KLL sketch here is the standard kll_doubles image (sketches.kll),
+built and merged JVM-side by Spark's native ``kll_sketch_agg_double`` /
+``kll_merge_agg_double``, with no Python (only a merge of sketches of
+mixed k, left without a ``k``, runs numpy). The float variant rounds its
+inputs to float32 first and returns FloatType results, mirroring the
+reference's separate kll_float/kll_double types; both store doubles
+images, so one merge serves both.
 
-The scalar queries are the quantile families' shared UDF set
-(functions.quantile_queries) over KllState with double items; this module
-binds the reference's names to it. The SQL surface registers it under the
-kll_float_sketch_* names, so kll_float_sketch_get_quantile returns double
-in SQL.
+The scalar queries stay numpy (the quantile families' shared UDF set,
+functions.quantile_queries): Spark's ``kll_sketch_get_quantile_double``
+has no ``inclusive`` flag and answers inclusively, while the reference's
+default is exclusive. The SQL surface registers them under the
+kll_float_sketch_* names, so kll_float_sketch_get_quantile returns double.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, DoubleType, FloatType, StructField
 
-from ..operators.agg import sketch_groupby_agg, sketch_merge_agg
+from ..operators.agg import sketch_merge_agg
 from ..sketches import kll as _k
+from ..sketches import kll_interop as _ki
+from . import image_udf
 from .quantile_queries import float_array, query_udfs
-
-_X = "__x"
 
 
 def _build_agg(df, group_cols, col, k, out_col, as_float):
+    # NULL and NaN are skipped; an all-NULL group still gets the empty image
     val = F.col(col).cast("float").cast("double") if as_float else F.col(col).cast("double")
-    # NULL rows pass through the single-column Arrow projection as NaN and
-    # are dropped in the kernel (sfunc-skips-NULL semantics) — a JVM-side
-    # row filter would erase all-NULL groups, but the reference's ffunc
-    # still emits a row per group (empty sketch)
-    proj = df.select(*group_cols, val.alias(_X))
-    return sketch_groupby_agg(
-        proj,
-        group_cols,
-        [_X],
-        partial_fn=lambda pdf: _k.build(pdf[_X].to_numpy(dtype=np.float64), k),
-        merge_fn=lambda states: _k.merge(states, k),
-        finalize_fn=lambda b: {out_col: b},
-        out_fields=[StructField(out_col, BinaryType())],
-    )
+    return df.groupBy(*group_cols).agg(F.kll_sketch_agg_double(val, k).alias(out_col))
 
 
 def kll_float_sketch_build(
@@ -62,19 +52,34 @@ def kll_double_sketch_build(
     return _build_agg(df, group_cols, col, k, out_col, as_float=False)
 
 
+def _image_k(sketch: Column) -> Column:
+    """k: the little-endian u16 at bytes 5-6 of every KLL image (sketches.kll)."""
+    h = F.hex(F.substring(sketch, 5, 2))
+    return F.conv(F.concat(F.substring(h, 3, 2), F.substring(h, 1, 2)), 16, 10).cast("int")
+
+
 def kll_sketch_merge(
     df: DataFrame, group_cols: list[str], sketch_col: str, k: int | None = None,
     out_col: str = "sketch",
 ) -> DataFrame:
-    """Aggregate: kll_*_sketch_merge(sketch[,k]) (sql:89-107)."""
-    return sketch_merge_agg(
-        df,
-        group_cols,
-        sketch_col,
-        merge_fn=lambda states: _k.merge(states, k),
-        finalize_fn=lambda b: {out_col: b},
-        out_fields=[StructField(out_col, BinaryType())],
-    )
+    """Aggregate: kll_*_sketch_merge(sketch[,k]) (sql:89-107). NULL sketches
+    are skipped. Left out, ``k`` is the smallest k among a group's inputs,
+    as in the SQL surface's merge (sketches.kll.merge). One pass over the
+    input finds its k values: a single k is passed to the native merge,
+    which would otherwise adopt the k of whichever sketch it sees first;
+    mixed k merge in numpy."""
+    if k is None:
+        ks = _image_k(F.col(sketch_col))
+        lo, hi = df.select(F.min(ks), F.max(ks)).first()
+        if lo != hi:
+            return sketch_merge_agg(
+                df, group_cols, sketch_col,
+                merge_fn=_k.merge,
+                finalize_fn=lambda b: {out_col: b},
+                out_fields=[StructField(out_col, BinaryType())],
+            )
+        k = _k.DEFAULT_K if lo is None else lo
+    return df.groupBy(*group_cols).agg(F.kll_merge_agg_double(sketch_col, k).alias(out_col))
 
 
 kll_float_sketch_merge = kll_sketch_merge
@@ -159,47 +164,21 @@ def kll_float_sketch_get_max_item(sketch: Column) -> Column:
 # ---- canonical DataSketches wire format (sketches.kll_interop) -----------
 # The reference's kll types ARE standard DataSketches images
 # (src/kll_float_sketch_c_adapter.cpp:37-57, bytea casts at
-# sql/datasketches_kll_float_sketch.sql:31-42); these adapters give the
-# internal working state the same ecosystem interop.
+# sql/datasketches_kll_float_sketch.sql:31-42). A sketch here already is the
+# kll_doubles image, so the doubles codecs validate and pass it through; the
+# float codecs convert to and from kll_floats images.
 
 
-@F.pandas_udf(BinaryType())
-def kll_float_sketch_to_datasketches(s: pd.Series) -> pd.Series:
-    """Internal KLL state -> canonical DataSketches kll_floats image
-    (readable by datasketches-{java,cpp,py}, Druid, Hive, the reference)."""
-    from ..sketches.kll_interop import serialize
-
-    return pd.Series(
-        [None if b is None else serialize(bytes(b), "<f4") for b in s], dtype=object
-    )
-
-
-@F.pandas_udf(BinaryType())
-def kll_float_sketch_from_datasketches(s: pd.Series) -> pd.Series:
-    """Canonical kll_floats image -> internal state usable with every
-    kll_* function here."""
-    from ..sketches.kll_interop import deserialize
-
-    return pd.Series(
-        [None if b is None else deserialize(bytes(b), "<f4") for b in s], dtype=object
-    )
-
-
-@F.pandas_udf(BinaryType())
-def kll_double_sketch_to_datasketches(s: pd.Series) -> pd.Series:
-    """Internal KLL state -> canonical DataSketches kll_doubles image."""
-    from ..sketches.kll_interop import serialize
-
-    return pd.Series(
-        [None if b is None else serialize(bytes(b), "<f8") for b in s], dtype=object
-    )
-
-
-@F.pandas_udf(BinaryType())
-def kll_double_sketch_from_datasketches(s: pd.Series) -> pd.Series:
-    """Canonical kll_doubles image -> internal state."""
-    from ..sketches.kll_interop import deserialize
-
-    return pd.Series(
-        [None if b is None else deserialize(bytes(b), "<f8") for b in s], dtype=object
-    )
+kll_float_sketch_to_datasketches = image_udf(
+    "kll_float_sketch_to_datasketches", lambda b: _ki.serialize(b, "<f4"),
+    "KLL sketch -> DataSketches kll_floats image (readable by "
+    "datasketches-{java,cpp,py}, Druid, Hive, the reference).")
+kll_float_sketch_from_datasketches = image_udf(
+    "kll_float_sketch_from_datasketches", lambda b: _ki.deserialize(b, "<f4"),
+    "DataSketches kll_floats image -> KLL sketch usable with every kll_* function here.")
+kll_double_sketch_to_datasketches = image_udf(
+    "kll_double_sketch_to_datasketches", lambda b: _ki.serialize(b, "<f8"),
+    "KLL sketch -> DataSketches kll_doubles image: validated, unchanged.")
+kll_double_sketch_from_datasketches = image_udf(
+    "kll_double_sketch_from_datasketches", lambda b: _ki.deserialize(b, "<f8"),
+    "DataSketches kll_doubles image -> KLL sketch: validated, unchanged.")

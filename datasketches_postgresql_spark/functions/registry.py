@@ -18,7 +18,9 @@ the reference's SQL, both documented:
    scale path is the two-phase DataFrame API in ``..operators.agg``.
 
 HLL needs no registration: Spark's native hll_sketch_agg / hll_union_agg /
-hll_sketch_estimate / hll_union are already SQL functions.
+hll_sketch_estimate / hll_union are already SQL functions. KLL and theta
+sketches are the images Spark's native kll_* / theta_* SQL functions read
+and write, so the names registered here and Spark's own mix freely.
 """
 
 from __future__ import annotations

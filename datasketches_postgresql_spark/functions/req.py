@@ -13,13 +13,14 @@ float items; this module binds the reference's names to it."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, FloatType, StructField
 
 from ..operators.agg import sketch_groupby_agg, sketch_merge_agg
 from ..sketches import req as _r
+from ..sketches import req_interop as _ri
+from . import image_udf
 from .quantile_queries import float_array, query_udfs
 
 DEFAULT_K = _r.DEFAULT_K
@@ -109,25 +110,15 @@ def req_float_sketch_get_max_item(sketch: Column) -> Column:
 # ---- DataSketches wire-format interop --------------------------------------
 
 
-@F.pandas_udf(BinaryType())
-def req_float_sketch_to_datasketches(s: pd.Series) -> pd.Series:
+req_float_sketch_to_datasketches = image_udf(
+    "req_float_sketch_to_datasketches", _ri.serialize_canonical,
     """Internal REQ state -> canonical DataSketches REQ image (serial v1,
     family 17; see sketches.req_interop — incl. its validation-honesty
     note). Unlike theta/AOD, REQ holds raw float values, not hashes, so
-    every sketch exports."""
-    from ..sketches.req_interop import serialize_canonical
-
-    return pd.Series(
-        [None if b is None else serialize_canonical(bytes(b)) for b in s], dtype=object
-    )
+    every sketch exports.""")
 
 
-@F.pandas_udf(BinaryType())
-def req_float_sketch_from_datasketches(s: pd.Series) -> pd.Series:
+req_float_sketch_from_datasketches = image_udf(
+    "req_float_sketch_from_datasketches", _ri.deserialize_canonical,
     """Canonical DataSketches REQ image -> internal state usable with every
-    req_* function here."""
-    from ..sketches.req_interop import deserialize_canonical
-
-    return pd.Series(
-        [None if b is None else deserialize_canonical(bytes(b)) for b in s], dtype=object
-    )
+    req_* function here.""")

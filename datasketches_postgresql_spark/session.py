@@ -15,19 +15,49 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 MAX_DRIVER_HEAP_MB = 8192
+CGROUP_ROOT = "/sys/fs/cgroup"
+
+
+def _cgroup_limit_bytes(root: str = CGROUP_ROOT, proc_cgroup: str = "/proc/self/cgroup") -> int | None:
+    """The smallest memory limit over the driver's cgroup and its ancestors
+    (v2 ``memory.max``, v1 ``memory/memory.limit_in_bytes``), None if there
+    is none ("max" in v2). Without a private cgroup namespace the cgroup sits
+    under the mount at the path /proc/self/cgroup names; inside one, or when
+    a container mounts its own cgroup at the root, the root's limit holds."""
+    try:
+        with open(proc_cgroup) as f:
+            own = [line.split(":", 2) for line in f.read().splitlines()]
+    except OSError:
+        own = []
+    v2 = next((path for _, ctrl, path in own if not ctrl), "/")
+    v1 = next((path for _, ctrl, path in own if "memory" in ctrl.split(",")), "/")
+    limits = []
+    for ctrl, name, path in (("", "memory.max", v2), ("memory", "memory.limit_in_bytes", v1)):
+        parts = [p for p in path.split("/") if p]
+        for depth in range(len(parts) + 1):
+            try:
+                with open(os.path.join(root, ctrl, *parts[:depth], name)) as f:
+                    raw = f.read().strip()
+            except OSError:
+                continue
+            if raw.isdigit():
+                limits.append(int(raw))
+    return min(limits, default=None)
 
 
 def _driver_heap() -> tuple[str, str]:
     """(maximum heap, heap committed and pre-touched at start).
 
-    ``SPARK_GRAFT_DRIVER_MEM`` sets both. Unset, the heap may grow to 8 GiB
-    but only min(8 GiB, physical RAM / 4) is pre-touched, so a second local
-    session on a small host does not commit 8 GiB more at once."""
+    ``SPARK_GRAFT_DRIVER_MEM`` sets both. Unset, they are min(8 GiB,
+    memory / 2) and min(8 GiB, memory / 4), memory being the smaller of
+    physical RAM and the cgroup limit (an unlimited v1 cgroup reads as a
+    huge number), so two local sessions fit the memory they may use."""
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if mem:
         return mem, mem
-    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
-    return f"{MAX_DRIVER_HEAP_MB}m", f"{min(MAX_DRIVER_HEAP_MB, phys_mb // 4)}m"
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mem_mb = min(phys, _cgroup_limit_bytes() or phys) // 2**20
+    return f"{min(MAX_DRIVER_HEAP_MB, mem_mb // 2)}m", f"{min(MAX_DRIVER_HEAP_MB, mem_mb // 4)}m"
 
 
 def get_spark(

@@ -34,6 +34,9 @@ single global offset cannot express. ``offset`` is the largest counter
 ever evicted (any untracked item's true count is <= offset — the
 no-false-negatives guarantee at threshold >= offset).
 
+A sketch decoded from a DataSketches image (as the native unweighted
+DataFrame build is) has err = offset for every item: Java's model.
+
 While no purge has occurred the sketch is EXACT with lb == est == ub —
 the regime the reference's tests use (test/fi_sketch_test.sql:7-19).
 

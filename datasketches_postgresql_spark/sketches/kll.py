@@ -1,4 +1,4 @@
-"""KLL quantile sketch (numpy compactor implementation).
+"""KLL quantile sketch: the standard DataSketches image and a numpy compactor.
 
 Re-expresses the reference's quantile family surface
 (/root/reference/src/kll_float_sketch_pg_functions.c,
@@ -27,13 +27,27 @@ is honored on all query functions.
 
 The sketch is EXACT while no compaction has occurred (all items retained at
 level 0 with weight 1) — the regime the reference's tests exploit
-(test/kll_float_sketch_test.sql:26-34). Compaction is deterministic: the
-even/odd offset alternates with a per-sketch compaction counter instead of a
-random bit, so results are reproducible across parallelism levels.
+(test/kll_float_sketch_test.sql:26-34). DataFrame builds and merges run in
+datasketches-java (Spark's kll_sketch_agg_double / kll_merge_agg_double),
+whose compaction picks its even/odd offset at random, so estimation-regime
+answers vary from run to run. This module's numpy ``build``/``merge`` (the SQL
+surface, AOD's to_kll and the streaming sink) alternate the offset with a
+per-sketch compaction counter instead, so their results are reproducible.
 
-Serialized layout (little-endian):
-    [u16 k][u8 num_levels][u64 n][u32 compaction_count]
-    [f64 min][f64 max][u32 count x num_levels][f64 items, level 0 first]
+Serialized form: the standard DataSketches kll_doubles compact image
+(family 15) that datasketches-java and Spark's KLL aggregates write
+(java KllPreambleUtil), little-endian: an 8-byte preamble [u8 preamble_ints]
+[u8 serial_version][u8 family][u8 flags][u16 k][u8 m=8][u8 unused], which is
+the whole empty image (flags EMPTY); a single-item image (serial version 2)
+adds its f8 item; a full one (preamble_ints 5) adds [u64 n][u16 min_k]
+[u8 num_levels][u8 unused][u32 level offsets, num_levels of them][f8 min]
+[f8 max] and the items from offset levels[0] to the capacity, level 0 first,
+each level sorted.
+The capacity is DataSketches' sum of round-half-up k (2/3)^depth level
+widths (``compute_total_capacity``); the numpy compactor uses the same, so
+its state always fits. Item weights are 2^level and sum to n. ``decode``
+checks every size against the image length before it allocates and raises
+ValueError on a malformed image.
 """
 
 from __future__ import annotations
@@ -43,9 +57,29 @@ import struct
 import numpy as np
 
 DEFAULT_K = 200
-DEFAULT_K_CLASSIC = 128
-DEFAULT_K_REQ = 12
-_HDR = struct.Struct("<HBQI d d")
+
+FAMILY_KLL = 15
+M = 8  # minimum level width; DataSketches writes 8
+MAX_LEVELS = 64  # level weights 2^h of a u64 n
+_PRE_SHORT, _PRE_FULL = 2, 5
+_SER_FULL, _SER_SINGLE = 1, 2
+_F_EMPTY, _F_LEVEL_ZERO_SORTED, _F_SINGLE = 1, 2, 4
+_HEAD = struct.Struct("<BBBBHBB")
+_FULL = struct.Struct("<QHBB")
+
+_POW3 = [3**i for i in range(31)]
+
+
+def level_capacity(k: int, num_levels: int, height: int, m: int = M) -> int:
+    """DataSketches' capacity of level ``height``: max(m, round(k (2/3)^depth))."""
+    depth = num_levels - height - 1
+    d = min(depth, 30)
+    cap = ((((k << 1) << d) // _POW3[d]) + 1) >> 1
+    return max(m, cap >> (depth - d))
+
+
+def compute_total_capacity(k: int, m: int, num_levels: int) -> int:
+    return sum(level_capacity(k, num_levels, h, m) for h in range(num_levels))
 
 
 class QuantileQueriesMixin:
@@ -111,23 +145,19 @@ class QuantileQueriesMixin:
 
 
 class KllState(QuantileQueriesMixin):
-    __slots__ = ("k", "n", "cc", "min", "max", "levels")
+    __slots__ = ("k", "min_k", "n", "cc", "min", "max", "levels")
 
     def __init__(self, k: int = DEFAULT_K):
-        self.k = int(k)
+        self.k = self.min_k = int(k)
         self.n = 0
-        self.cc = 0  # compaction counter (drives deterministic offset)
+        self.cc = 0  # compaction counter (drives deterministic offset); not serialized
         self.min = np.inf
         self.max = -np.inf
         self.levels: list[np.ndarray] = [np.empty(0, dtype=np.float64)]
 
     # -- capacity ----------------------------------------------------------
-    def _cap(self, level: int) -> int:
-        depth = len(self.levels) - 1 - level
-        return max(8, int(np.ceil(self.k * (2.0 / 3.0) ** depth)))
-
     def _total_cap(self) -> int:
-        return sum(self._cap(h) for h in range(len(self.levels)))
+        return compute_total_capacity(self.k, M, len(self.levels))
 
     def _total_items(self) -> int:
         return sum(a.size for a in self.levels)
@@ -148,7 +178,8 @@ class KllState(QuantileQueriesMixin):
         while self._total_items() > self._total_cap():
             # lowest level at/above its individual capacity, else lowest with >=2
             lvl = next(
-                (h for h, a in enumerate(self.levels) if a.size >= self._cap(h)),
+                (h for h, a in enumerate(self.levels)
+                 if a.size >= level_capacity(self.k, len(self.levels), h)),
                 None,
             )
             if lvl is None:
@@ -169,6 +200,7 @@ class KllState(QuantileQueriesMixin):
             return
         self.n += other.n
         self.cc += other.cc
+        self.min_k = min(self.min_k, other.min_k)
         self.min = min(self.min, other.min)
         self.max = max(self.max, other.max)
         while len(self.levels) < len(other.levels):
@@ -177,39 +209,53 @@ class KllState(QuantileQueriesMixin):
             self.levels[h] = np.concatenate([self.levels[h], arr])
         self._compress()
 
-    # -- serde -------------------------------------------------------------
-    def serialize(self) -> bytes:
-        counts = np.array([a.size for a in self.levels], dtype="<u4")
-        items = np.concatenate(self.levels) if self.levels else np.empty(0)
+    # -- serde: the standard image (module docstring) ------------------------
+    def encode(self, dtype: str = "<f8") -> bytes:
+        """The standard KLL image with ``dtype`` items: '<f8' is kll_doubles,
+        '<f4' kll_floats (the family byte is the same)."""
+        if self.n == 0:
+            return _HEAD.pack(_PRE_SHORT, _SER_FULL, FAMILY_KLL, _F_EMPTY, self.k, M, 0)
+        # every level sorted, as datasketches-java's sorted view, merge and
+        # compaction assume; a numpy merge or compaction leaves levels
+        # above 0 as two concatenated sorted runs
+        items = np.concatenate([np.sort(a) for a in self.levels]).astype(dtype)
+        if self.n == 1:
+            return _HEAD.pack(_PRE_SHORT, _SER_SINGLE, FAMILY_KLL, _F_SINGLE, self.k, M, 0) + items.tobytes()
+        levels = np.cumsum([self._total_cap() - items.size] + [a.size for a in self.levels[:-1]])
         return (
-            _HDR.pack(self.k, len(self.levels), self.n, self.cc, self.min, self.max)
-            + counts.tobytes()
-            + np.ascontiguousarray(items, dtype="<f8").tobytes()
+            _HEAD.pack(_PRE_FULL, _SER_FULL, FAMILY_KLL, _F_LEVEL_ZERO_SORTED, self.k, M, 0)
+            + _FULL.pack(self.n, self.min_k, len(self.levels), 0)
+            + levels.astype("<u4").tobytes()
+            + np.array([self.min, self.max], dtype=dtype).tobytes()
+            + items.tobytes()
         )
+
+    def serialize(self) -> bytes:
+        return self.encode("<f8")
 
     @classmethod
     def deserialize(cls, buf: bytes) -> "KllState":
-        k, nl, n, cc, mn, mx = _HDR.unpack_from(buf, 0)
-        st = cls(k)
-        st.n, st.cc, st.min, st.max = n, cc, mn, mx
-        counts = np.frombuffer(buf, dtype="<u4", count=nl, offset=_HDR.size)
-        items = np.frombuffer(buf, dtype="<f8", offset=_HDR.size + 4 * nl)
-        st.levels = []
-        pos = 0
-        for c in counts:
-            st.levels.append(items[pos : pos + int(c)].astype(np.float64))
-            pos += int(c)
-        return st
+        return decode(buf, "<f8")
 
     # -- queries -----------------------------------------------------------
     def _sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
-        """(sorted items, weights) across all levels."""
+        """(sorted items, weights) across all levels. As in datasketches-java,
+        the view holds the min and max items: one that compaction dropped
+        takes a weight of 1 from its retained neighbour, so rank 0 answers
+        the min and rank 1 the max."""
         items = np.concatenate(self.levels)
         weights = np.concatenate(
             [np.full(a.size, 1 << h, dtype=np.int64) for h, a in enumerate(self.levels)]
         )
         order = np.argsort(items, kind="stable")
-        return items[order], weights[order]
+        items, weights = items[order], weights[order]
+        if items.size and items[0] != self.min:
+            items, weights = np.r_[self.min, items], np.r_[1, weights]
+            weights[1] -= 1
+        if items.size and items[-1] != self.max:
+            items, weights = np.r_[items, self.max], np.r_[weights, 1]
+            weights[-2] -= 1
+        return items, weights
 
     def to_string(self) -> str:
         return (
@@ -220,6 +266,55 @@ class KllState(QuantileQueriesMixin):
             f"   retained : {self._total_items()}\n"
             f"   min,max  : {self.min},{self.max}\n"
         )
+
+
+def decode(image: bytes, dtype: str = "<f8") -> KllState:
+    """Standard KLL image with ``dtype`` items -> state. Every size is checked
+    against ``len(image)`` before anything is allocated; a malformed image
+    raises ValueError."""
+    item = np.dtype(dtype)
+    size = len(image)
+    if size < _HEAD.size:
+        raise ValueError(f"KLL image truncated: {size} bytes")
+    pre, ser, fam, flags, k, m, _ = _HEAD.unpack_from(image, 0)
+    if fam != FAMILY_KLL:
+        raise ValueError(f"not a KLL image (family {fam}, expected {FAMILY_KLL})")
+    if m != M or k < M or flags & ~(_F_EMPTY | _F_LEVEL_ZERO_SORTED | _F_SINGLE):
+        raise ValueError(f"bad KLL header: k={k}, m={m}, flags={flags:#x}")
+    st = KllState(k)
+    if flags & _F_EMPTY:
+        if (pre, ser, size) != (_PRE_SHORT, _SER_FULL, _HEAD.size):
+            raise ValueError("malformed empty KLL image")
+        return st
+    if flags & _F_SINGLE:
+        if (pre, ser, size) != (_PRE_SHORT, _SER_SINGLE, _HEAD.size + item.itemsize):
+            raise ValueError("malformed single-item KLL image")
+        st.levels = [np.frombuffer(image, item, 1, _HEAD.size).astype(np.float64)]
+        st.n, st.min, st.max = 1, float(st.levels[0][0]), float(st.levels[0][0])
+        return st
+    if (pre, ser) != (_PRE_FULL, _SER_FULL) or size < _HEAD.size + _FULL.size:
+        raise ValueError(f"malformed KLL image: preamble {pre}, serial version {ser}, {size} bytes")
+    n, min_k, num_levels, _ = _FULL.unpack_from(image, _HEAD.size)
+    if not 1 <= num_levels <= MAX_LEVELS or not M <= min_k <= k:
+        raise ValueError(f"bad KLL header: {num_levels} levels, min_k={min_k}, k={k}")
+    at = _HEAD.size + _FULL.size + 4 * num_levels
+    if size < at + 2 * item.itemsize:
+        raise ValueError(f"KLL image truncated: {size} bytes")
+    capacity = compute_total_capacity(k, M, num_levels)
+    bounds = [*struct.unpack_from(f"<{num_levels}I", image, at - 4 * num_levels), capacity]
+    sizes = [b - a for a, b in zip(bounds, bounds[1:])]
+    if min(sizes) < 0:
+        raise ValueError("KLL level offsets are not monotone")
+    count = capacity - bounds[0]
+    if size != at + (2 + count) * item.itemsize:
+        raise ValueError(f"KLL image of {size} bytes does not hold its {count} items")
+    if n != sum(c << h for h, c in enumerate(sizes)):
+        raise ValueError(f"KLL n={n} does not match the retained weights")
+    mn, mx = np.frombuffer(image, item, 2, at).astype(np.float64)
+    items = np.frombuffer(image, item, count, at + 2 * item.itemsize).astype(np.float64, copy=False)
+    st.n, st.min_k, st.min, st.max = n, min_k, float(mn), float(mx)
+    st.levels = [items[a - bounds[0]: b - bounds[0]] for a, b in zip(bounds, bounds[1:])]
+    return st
 
 
 def build(values: np.ndarray, k: int = DEFAULT_K) -> bytes:

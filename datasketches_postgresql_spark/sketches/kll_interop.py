@@ -1,4 +1,4 @@
-"""Canonical Apache DataSketches KLL wire format (serialize + deserialize).
+"""DataSketches KLL wire format: the kll_doubles and kll_floats images.
 
 The reference stores KLL sketches as standard DataSketches images — the
 `kll_float_sketch` type is a bytea holding exactly what datasketches-cpp
@@ -6,175 +6,29 @@ The reference stores KLL sketches as standard DataSketches images — the
 /root/reference/src/kll_float_sketch_c_adapter.cpp:37-57, cast in/out at
 /root/reference/sql/datasketches_kll_float_sketch.sql:31-42) — so a user can
 move images between PostgreSQL, Druid, Hive and datasketches-{java,cpp,py}.
-This module gives the Spark engine the same property for its KLL family:
-export the internal working state as a canonical image, import ecosystem
-images into the internal state.
 
-Publicly documented layout (datasketches-cpp kll_sketch_impl.hpp /
-datasketches-java KllPreambleUtil), little-endian:
-
-  Empty (8 bytes):
-    [u8 preamble_ints=2][u8 serial_version=1][u8 family=15][u8 flags=EMPTY]
-    [u16 k][u8 m=8][u8 unused]
-  Single item (8 bytes + itemsize):
-    [... serial_version=2 ... flags=SINGLE_ITEM|LEVEL_ZERO_SORTED]
-    [item]
-  Full (preamble_ints=5):
-    [u8 5][u8 1][u8 15][u8 flags][u16 k][u8 m][u8 unused]
-    [u64 n][u16 min_k][u8 num_levels][u8 unused]
-    [u32 levels[0..num_levels-1]]          # offsets into a capacity-sized
-                                           # item buffer; the final entry
-                                           # levels[num_levels] == capacity
-                                           # is derived, not serialized
-    [item min][item max]
-    [items: capacity - levels[0] of them, level 0 first, each level
-     ascending; level 0 sorted iff LEVEL_ZERO_SORTED]
-
-  capacity = sum over heights h of level_capacity(k, num_levels, h, m),
-  with the exact integer (2/3)^depth rounding DataSketches uses
-  (powers-of-three division, round-half-up) — reproduced below so the
-  reader derives the same buffer size the writer assumed.
-
-Item type: '<f4' for the float family, '<f8' for the double family (the
-family byte is the same; readers pick the class, exactly as in the
-reference where kll_float_sketch and kll_double_sketch are distinct SQL
-types over the same family id).
-
-Loss notes (documented, not silent): the internal state's deterministic
-compaction counter is not part of the standard format (imports restart it
-at 0); `min_k` (error-bound bookkeeping after merges with smaller-k
-sketches) is exported as k and ignored on import — rank/quantile queries,
-which never consult min_k, are unaffected.
+Every KLL sketch here already is the standard kll_doubles image
+(sketches.kll, which holds the codec), so the doubles direction validates
+the image and passes it through unchanged. The floats direction converts:
+the same layout with f4 items, min and max (the family byte is the same;
+readers pick the class, exactly as in the reference where kll_float_sketch
+and kll_double_sketch are distinct SQL types over the same family id).
 """
 
 from __future__ import annotations
 
-import struct
-
-import numpy as np
-
 from . import kll as _k
 
-FAMILY_KLL = 15
-_SERVER_FULL = 1
-_SERVER_SINGLE = 2
-_PRE_SHORT = 2
-_PRE_FULL = 5
-_F_EMPTY, _F_LEVEL_ZERO_SORTED, _F_SINGLE = 1, 2, 4
-DEFAULT_M = 8
 
-_POW3 = [3**i for i in range(31)]
-
-
-def _int_cap_aux_aux(k: int, depth: int) -> int:
-    # exact (2k * (2/3)^depth) with round-half-up, via integer 3^depth division
-    tmp = ((k << 1) << depth) // _POW3[depth]
-    return (tmp + 1) >> 1
-
-
-def _int_cap_aux(k: int, depth: int) -> int:
-    if depth <= 30:
-        return _int_cap_aux_aux(k, depth)
-    return _int_cap_aux_aux(k, 30) >> (depth - 30)
-
-
-def level_capacity(k: int, num_levels: int, height: int, m: int = DEFAULT_M) -> int:
-    depth = num_levels - height - 1
-    return max(m, _int_cap_aux(k, depth))
-
-
-def compute_total_capacity(k: int, m: int, num_levels: int) -> int:
-    return sum(level_capacity(k, num_levels, h, m) for h in range(num_levels))
-
-
-def _fit_to_capacity(st: "_k.KllState", m: int) -> None:
-    """Compact (KLL-valid promote-every-other) until the retained count fits
-    the DataSketches capacity for the current level count. The internal
-    capacity rule differs from DataSketches' by its rounding, so a state can
-    hold a few more items than a canonical buffer admits."""
-    while st._total_items() > compute_total_capacity(st.k, m, len(st.levels)):
-        lvl = next(h for h, a in enumerate(st.levels) if a.size >= 2)
-        arr = np.sort(st.levels[lvl])
-        odd = arr.size % 2
-        offset = (st.cc & 1) + odd
-        st.cc += 1
-        st.levels[lvl] = arr[:odd]
-        if lvl + 1 == len(st.levels):
-            st.levels.append(np.empty(0, dtype=np.float64))
-        st.levels[lvl + 1] = np.concatenate([st.levels[lvl + 1], arr[offset::2]])
-
-
-def serialize(sketch: bytes, dtype: str = "<f4", m: int = DEFAULT_M) -> bytes:
-    """Internal KLL state -> canonical DataSketches image.
-
-    dtype '<f4' emits a kll_floats image (the reference's primary family),
-    '<f8' a kll_doubles image."""
-    item = np.dtype(dtype)
-    st = _k.KllState.deserialize(sketch)
-    if st.n == 0:
-        return struct.pack("<BBBBHBB", _PRE_SHORT, _SERVER_FULL, FAMILY_KLL,
-                           _F_EMPTY, st.k, m, 0)
-    if st.n == 1:
-        val = np.concatenate(st.levels).astype(item)
-        return (
-            struct.pack("<BBBBHBB", _PRE_SHORT, _SERVER_SINGLE, FAMILY_KLL,
-                        _F_SINGLE | _F_LEVEL_ZERO_SORTED, st.k, m, 0)
-            + val[:1].tobytes()
-        )
-    _fit_to_capacity(st, m)
-    num_levels = len(st.levels)
-    capacity = compute_total_capacity(st.k, m, num_levels)
-    sizes = [a.size for a in st.levels]
-    total = sum(sizes)
-    levels = np.empty(num_levels + 1, dtype="<u4")
-    levels[0] = capacity - total
-    np.cumsum(sizes, out=levels[1:])
-    levels[1:] += levels[0]
-    # every serialized level ascending; level 0 sorted -> set the flag
-    body = np.concatenate([np.sort(a) for a in st.levels]).astype(item)
-    head = struct.pack(
-        "<BBBBHBB", _PRE_FULL, _SERVER_FULL, FAMILY_KLL,
-        _F_LEVEL_ZERO_SORTED, st.k, m, 0,
-    )
-    mid = struct.pack("<QHBB", st.n, st.k, num_levels, 0)  # min_k exported as k
-    return (
-        head + mid + levels[:num_levels].tobytes()
-        + np.array([st.min, st.max], dtype=item).tobytes()
-        + body.tobytes()
-    )
+def serialize(sketch: bytes, dtype: str = "<f4") -> bytes:
+    """KLL sketch -> DataSketches image: '<f4' emits a kll_floats image (the
+    reference's primary family), '<f8' the kll_doubles image unchanged."""
+    st = _k.decode(sketch)
+    return bytes(sketch) if dtype == "<f8" else st.encode(dtype)
 
 
 def deserialize(image: bytes, dtype: str = "<f4") -> bytes:
-    """Canonical DataSketches KLL image -> internal state bytes, usable with
-    every kll_* query/merge function."""
-    item = np.dtype(dtype)
-    if len(image) < 8:
-        raise ValueError("KLL image too short")
-    pre, ser, fam, flags, k, m, _ = struct.unpack_from("<BBBBHBB", image, 0)
-    if fam != FAMILY_KLL:
-        raise ValueError(f"not a KLL image (family {fam}, expected {FAMILY_KLL})")
-    if ser not in (_SERVER_FULL, _SERVER_SINGLE):
-        raise ValueError(f"unsupported KLL serial version {ser}")
-    st = _k.KllState(k)
-    if flags & _F_EMPTY:
-        return st.serialize()
-    if flags & _F_SINGLE or ser == _SERVER_SINGLE:
-        val = float(np.frombuffer(image, dtype=item, count=1, offset=8)[0])
-        st.n, st.min, st.max = 1, val, val
-        st.levels = [np.array([val], dtype=np.float64)]
-        return st.serialize()
-    if pre != _PRE_FULL:
-        raise ValueError(f"bad preamble_ints {pre} for a full KLL image")
-    n, _min_k, num_levels, _ = struct.unpack_from("<QHBB", image, 8)
-    off = 20
-    levels = np.frombuffer(image, dtype="<u4", count=num_levels, offset=off).astype(np.int64)
-    off += 4 * num_levels
-    mn, mx = np.frombuffer(image, dtype=item, count=2, offset=off)
-    off += 2 * item.itemsize
-    capacity = compute_total_capacity(k, m, num_levels)
-    count = capacity - int(levels[0])
-    items = np.frombuffer(image, dtype=item, count=count, offset=off).astype(np.float64)
-    bounds = np.append(levels, capacity) - levels[0]
-    st.n, st.min, st.max = int(n), float(mn), float(mx)
-    st.levels = [items[bounds[h]: bounds[h + 1]].copy() for h in range(num_levels)]
-    return st.serialize()
+    """DataSketches KLL image with ``dtype`` items -> the kll_doubles image
+    every kll_* function here reads. ValueError on a malformed image."""
+    st = _k.decode(image, dtype)
+    return bytes(image) if dtype == "<f8" else st.serialize()

@@ -11,6 +11,7 @@ from datasketches_postgresql_spark.functions import hll as H
 from datasketches_postgresql_spark.functions import kll as K
 from datasketches_postgresql_spark.functions import quantiles as Q
 from datasketches_postgresql_spark.functions import req as R
+from datasketches_postgresql_spark.sketches import fi as FIK
 
 
 @pytest.fixture(scope="module")
@@ -93,6 +94,26 @@ class TestKll:
         lo, hi = ev.selectExpr("percentile(value, 0.4) lo", "percentile(value, 0.6) hi").collect()[0]
         assert lo <= med <= hi, f"median {med} outside [{lo},{hi}] (exact {exact})"
 
+    def test_merge_without_k_takes_the_smallest_k(self, spark):
+        """The DataFrame and SQL merges agree: a k=100 and a k=400 sketch
+        merge at k=100 whichever Spark sees first; a single k is kept."""
+        from datasketches_postgresql_spark.functions.registry import register_all
+        from datasketches_postgresql_spark.sketches import kll as KK
+
+        df = spark.range(0, 3000).select(F.col("id").cast("double").alias("x"))
+        small = K.kll_double_sketch_build(df, [], "x", k=100)
+        big = K.kll_double_sketch_build(df, [], "x", k=400)
+        for sk in (small.union(big), big.union(small)):
+            (row,) = K.kll_sketch_merge(sk, [], "sketch").collect()
+            st = KK.decode(bytes(row["sketch"]))
+            assert (st.k, st.min_k, st.n) == (100, 100, 6000)
+        register_all(spark)
+        big.union(small).createOrReplaceTempView("kll_mixed_k")
+        (row,) = spark.sql("select kll_double_sketch_merge(sketch) as sketch from kll_mixed_k").collect()
+        assert KK.decode(bytes(row["sketch"])).k == 100
+        (row,) = K.kll_sketch_merge(big.union(big), [], "sketch").collect()
+        assert KK.decode(bytes(row["sketch"])).k == 400
+
 
 class TestFi:
     def test_exact_merge(self, spark):
@@ -112,6 +133,32 @@ class TestFi:
             ("c", 3, 3, 3),
             ("b", 2, 2, 2),
         ]
+
+    @pytest.mark.parametrize("lg_k,weighted", [(2, False), (2, True), (21, False), (21, True)])
+    def test_lg_k_outside_the_native_range_builds_in_numpy(self, spark, lg_k, weighted):
+        """lg_k below 3 (Java's smallest map) or above 20 (Spark tracks at
+        most 1,000,000 items) builds as before, in the numpy kernel."""
+        rows = [("x", 3), ("y", 1), ("x", 2), (None, 4)]
+        df = spark.createDataFrame(rows, "str string, w long")
+        w = "w" if weighted else None
+        (row,) = FI.frequent_strings_sketch_build(df, [], lg_k, "str", weight_col=w).collect()
+        got = FIK.FiState.deserialize(bytes(row["sketch"]))
+        vals = [r[0] for r in rows if r[0] is not None]
+        want = FIK.FiState.deserialize(
+            FIK.build(lg_k, vals, [r[1] for r in rows if r[0] is not None] if weighted else None)
+        )
+        assert (got.lg_k, got.offset, got.total, got.items) == (want.lg_k, want.offset, want.total, want.items)
+        merged = FI.frequent_strings_sketch_merge(spark.createDataFrame([row]), [], lg_k, "sketch")
+        assert FIK.FiState.deserialize(bytes(merged.collect()[0]["sketch"])).items == want.items
+
+    def test_native_build_matches_numpy_in_the_exact_regime(self, spark):
+        vals = [f"s{i % 37}" for i in range(500)] + [None] * 5
+        df = spark.createDataFrame([(v,) for v in vals], "str string")
+        (row,) = FI.frequent_strings_sketch_build(df, [], 7, "str").collect()
+        native = FIK.FiState.deserialize(bytes(row["sketch"]))
+        mine = FIK.FiState.deserialize(FIK.build(7, [v for v in vals if v is not None]))
+        assert (native.lg_k, native.offset, native.total) == (mine.lg_k, mine.offset, mine.total)
+        assert native.items == mine.items
 
     def test_weighted(self, spark):
         df = spark.createDataFrame(

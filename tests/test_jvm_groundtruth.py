@@ -151,6 +151,76 @@ class TestKllGroundTruth:
             assert abs(jk.getQuantile(r) - st.get_quantile(r, inclusive=True)) < 1e-6
 
 
+    @staticmethod
+    def _assert_java_answers(jk, st):
+        """Java's n, min, max and inclusive quantiles and ranks on the same
+        image equal the kernel's."""
+        assert st.n == jk.getN()
+        if st.n == 0:
+            assert jk.isEmpty()
+            return
+        assert (st.min, st.max) == (jk.getMinItem(), jk.getMaxItem())
+        for r in (0.0, 0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0):
+            q = st.get_quantile(r, inclusive=True)
+            assert q == jk.getQuantile(r), r
+            assert st.get_rank(q, inclusive=True) == pytest.approx(jk.getRank(q), abs=1e-12)
+
+    def test_spark_native_image_decodes_to_java_answers(self, spark, jvm, mem):
+        import pandas as pd
+        from pyspark.sql import functions as F
+
+        x = np.random.default_rng(8).normal(size=30_000)
+        df = spark.createDataFrame(pd.DataFrame({"g": np.arange(x.size) % 2, "x": x}))
+        rows = df.groupBy("g").agg(F.kll_sketch_agg_double("x", 100).alias("sk")).collect()
+        for row in rows:
+            image = bytes(row["sk"])
+            st = KLLK.decode(image)
+            assert len(st.levels) > 1  # estimation regime
+            jk = jvm.org.apache.datasketches.kll.KllDoublesSketch.heapify(mem.wrap(image))
+            self._assert_java_answers(jk, st)
+
+    def test_numpy_images_merge_natively_and_heapify(self, spark, jvm, mem):
+        from pyspark.sql import functions as F
+
+        rng = np.random.default_rng(9)
+        parts = [rng.normal(size=n) for n in (0, 1, 150, 4000, 20_000)]
+        images = [KLLK.build(p, 200) for p in parts]
+        for image in images:
+            jk = jvm.org.apache.datasketches.kll.KllDoublesSketch.heapify(mem.wrap(image))
+            self._assert_java_answers(jk, KLLK.decode(image))
+        df = spark.createDataFrame([(bytearray(b),) for b in images] + [(None,)], "sk binary")
+        merged = bytes(df.agg(F.kll_merge_agg_double("sk").alias("m")).collect()[0]["m"])
+        st = KLLK.decode(merged)
+        assert st.n == sum(p.size for p in parts)
+        assert (st.min, st.max) == (min(p.min() for p in parts if p.size),
+                                    max(p.max() for p in parts if p.size))
+        jk = jvm.org.apache.datasketches.kll.KllDoublesSketch.heapify(mem.wrap(merged))
+        self._assert_java_answers(jk, st)
+
+    def test_numpy_merged_image_keeps_levels_sorted(self, spark, jvm, mem):
+        """A numpy merge or an update into a non-empty level leaves levels
+        above 0 as concatenated sorted runs; the image still holds every
+        level sorted, as Java's sorted view, merge and compaction assume."""
+        from pyspark.sql import functions as F
+
+        rng = np.random.default_rng(10)
+        parts = [rng.normal(size=300) for _ in range(2)]
+        stream = KLLK.KllState(200)  # the streaming sink's shape: many small updates
+        for _ in range(50):
+            stream.update(rng.normal(size=37))
+        for image in (KLLK.merge([KLLK.build(p, 200) for p in parts]), stream.serialize()):
+            st = KLLK.decode(image)
+            assert len(st.levels) > 1
+            assert all(np.all(np.diff(level) >= 0) for level in st.levels)
+            jk = jvm.org.apache.datasketches.kll.KllDoublesSketch.heapify(mem.wrap(image))
+            self._assert_java_answers(jk, st)
+            # and Spark's merge reads it as it is
+            df = spark.createDataFrame([(bytearray(image),), (bytearray(KLLK.build(parts[0], 200)),)], "sk binary")
+            twice = bytes(df.agg(F.kll_merge_agg_double("sk").alias("m")).collect()[0]["m"])
+            jk2 = jvm.org.apache.datasketches.kll.KllDoublesSketch.heapify(mem.wrap(twice))
+            self._assert_java_answers(jk2, KLLK.decode(twice))
+            assert jk2.getN() == st.n + parts[0].size
+
 class TestFiGroundTruth:
     LG_K = 7
 
@@ -269,9 +339,16 @@ class TestFiGroundTruth:
             .select(F.expr("approx_top_k_accumulate(v, 512)").alias("acc"))
             .collect()[0]["acc"]
         )
-        image = bytes(acc["sketch"])
-        st = self._decode(image)
+        # the field is the family-10 image plus a big-endian count of NULL
+        # inputs (none here); the decoder strips it and checks the image ends
+        # exactly there
+        field = bytes(acc["sketch"])
+        assert field[-8:] == bytes(8)
+        image = field[:-8]
+        st = FIK.FiState.deserialize(FII.from_top_k_accumulate(field))
         assert st.offset > 0
+        with pytest.raises(ValueError, match="trailing bytes"):
+            FII.deserialize(field)
         serde = jvm.org.apache.datasketches.common.ArrayOfStringsSerDe()
         js = jvm.org.apache.datasketches.frequencies.ItemsSketch.getInstance(mem.wrap(image), serde)
         self._assert_java_bounds(js, st, [s for s in truth if s not in st.items][:50])

@@ -22,19 +22,19 @@ def _build(values, k=200):
 
 class TestCapacity:
     def test_level_zero_cap_is_k(self):
-        assert I.level_capacity(200, 1, 0) == 200
-        assert I.level_capacity(128, 3, 2) == 128  # top level always k
+        assert K.level_capacity(200, 1, 0) == 200
+        assert K.level_capacity(128, 3, 2) == 128  # top level always k
 
     def test_two_level_capacity(self):
         # k + round-half-up(2k/3): 200 + 133 = 333 (known DataSketches value)
-        assert I.compute_total_capacity(200, 8, 2) == 333
+        assert K.compute_total_capacity(200, 8, 2) == 333
 
     def test_min_width_floor(self):
         # deep levels bottom out at m=8
-        assert I.level_capacity(200, 40, 0) == 8
+        assert K.level_capacity(200, 40, 0) == 8
 
     def test_monotone_in_height(self):
-        caps = [I.level_capacity(200, 10, h) for h in range(10)]
+        caps = [K.level_capacity(200, 10, h) for h in range(10)]
         assert caps == sorted(caps)
 
 
@@ -64,7 +64,7 @@ class TestLayout:
         n, min_k, num_levels, _ = struct.unpack_from("<QHBB", img, 8)
         assert (n, min_k, num_levels) == (100, 200, 1)
         (lvl0,) = struct.unpack_from("<I", img, 20)
-        cap = I.compute_total_capacity(200, 8, 1)
+        cap = K.compute_total_capacity(200, 8, 1)
         assert lvl0 == cap - 100  # right-justified, 100 retained
         # min/max then exactly cap-lvl0 items
         mn, mx = struct.unpack_from("<ff", img, 24)
@@ -78,7 +78,7 @@ class TestLayout:
         img = I.serialize(sk, "<f4")
         n, min_k, num_levels, _ = struct.unpack_from("<QHBB", img, 8)
         levels = np.frombuffer(img, dtype="<u4", count=num_levels, offset=20)
-        cap = I.compute_total_capacity(200, 8, num_levels)
+        cap = K.compute_total_capacity(200, 8, num_levels)
         expect = 20 + 4 * num_levels + 2 * 4 + 4 * (cap - int(levels[0]))
         assert len(img) == expect
         # offsets strictly within the capacity buffer and ascending

@@ -196,6 +196,117 @@ class TestThetaDecoderHostileInput:
                 theta.deserialize(img[:cut])
 
 
+@st.composite
+def kll_images(draw):
+    """Standard kll_doubles images the kernel writes: empty, single-item,
+    exact and compacted sketches at small and default k."""
+    from datasketches_postgresql_spark.sketches import kll
+
+    k = draw(st.sampled_from([8, 20, 200]))
+    n = draw(st.sampled_from([0, 1, 2, 9, 150, 700, 5000]))
+    xs = np.random.default_rng(draw(st.integers(0, 2**32 - 1))).normal(size=n)
+    return kll.build(xs, k)
+
+
+def _same_kll(a, b):
+    return (a.n, len(a.levels)) == (b.n, len(b.levels)) and all(
+        np.array_equal(np.sort(x), np.sort(y)) for x, y in zip(a.levels, b.levels)
+    ) and (a.n == 0 or (a.min, a.max) == (b.min, b.max))
+
+
+class TestKllDecoderHostileInput:
+    """The standard-image decoder checks every size against len(image)
+    before it allocates: valid images round-trip; truncated, flipped,
+    oversized-n, oversized-level-count and non-monotone images raise
+    ValueError."""
+
+    @given(kll_images())
+    @settings(max_examples=60, deadline=None)
+    def test_image_round_trips_and_weights_sum_to_n(self, img):
+        from datasketches_postgresql_spark.sketches import kll, kll_interop
+
+        st_ = kll.decode(img)
+        assert st_.serialize() == img
+        assert st_.n == sum(a.size << h for h, a in enumerate(st_.levels))
+        assert kll_interop.serialize(img, "<f8") == kll_interop.deserialize(img, "<f8") == img
+        floats = kll.decode(kll_interop.serialize(img, "<f4"), "<f4")
+        assert floats.n == st_.n and len(floats.levels) == len(st_.levels)
+
+    @given(kll_images(), st.data())
+    @settings(max_examples=80, deadline=None)
+    def test_truncated_or_extended_image_raises(self, img, data):
+        from datasketches_postgresql_spark.sketches import kll
+
+        cut = data.draw(st.integers(0, len(img) - 1))
+        with pytest.raises(ValueError):
+            kll.decode(img[:cut])
+        with pytest.raises(ValueError):
+            kll.decode(img + bytes(data.draw(st.integers(1, 16))))
+
+    @given(kll_images(), st.data())
+    @settings(max_examples=150, deadline=None)
+    def test_flipped_header_byte_raises_or_decodes_the_same(self, img, data):
+        """A flip in the preamble or the level offsets either raises or
+        leaves the retained items as they were (the sorted flag, unused
+        bytes, k of an empty or single-item image, an in-range min_k)."""
+        from datasketches_postgresql_spark.sketches import kll
+
+        orig = kll.decode(img)
+        head = 8 if len(img) <= 16 else 20 + 4 * len(orig.levels)
+        pos = data.draw(st.integers(0, head - 1))
+        flipped = bytearray(img)
+        flipped[pos] ^= data.draw(st.integers(1, 255))
+        try:
+            got = kll.decode(bytes(flipped))
+        except ValueError:
+            return
+        assert _same_kll(got, orig), pos
+
+    @given(kll_images(), st.integers(1, 2**40))
+    @settings(max_examples=60, deadline=None)
+    def test_oversized_n_raises(self, img, extra):
+        from datasketches_postgresql_spark.sketches import kll
+
+        if len(img) > 16:
+            n = int.from_bytes(img[8:16], "little")
+            bad = img[:8] + min(n + extra, 2**64 - 1).to_bytes(8, "little") + img[16:]
+            with pytest.raises(ValueError, match="does not match"):
+                kll.decode(bad)
+
+    @given(kll_images(), st.integers(1, 255))
+    @settings(max_examples=60, deadline=None)
+    def test_oversized_level_count_raises(self, img, extra):
+        from datasketches_postgresql_spark.sketches import kll
+
+        if len(img) > 16:
+            bad = bytearray(img)
+            bad[18] = min(bad[18] + extra, 255)
+            with pytest.raises(ValueError):
+                kll.decode(bytes(bad))
+
+    def test_non_monotone_level_offsets_raise(self):
+        from datasketches_postgresql_spark.sketches import kll
+
+        img = kll.build(np.random.default_rng(1).normal(size=5000), 200)
+        num_levels = img[18]
+        assert num_levels >= 3
+        offsets = np.frombuffer(img, "<u4", num_levels, 20).copy()
+        offsets[1], offsets[2] = offsets[2], offsets[1] - 1
+        bad = img[:20] + offsets.tobytes() + img[20 + 4 * num_levels:]
+        with pytest.raises(ValueError, match="not monotone"):
+            kll.decode(bad)
+
+    def test_foreign_family_and_bad_m_raise(self):
+        from datasketches_postgresql_spark.sketches import kll
+
+        empty = kll.build(np.empty(0))
+        for pos, val in ((2, 3), (3, 9), (4, 7), (6, 4)):  # family, flags, k < 8, m
+            bad = bytearray(empty)
+            bad[pos] = val
+            with pytest.raises(ValueError):
+                kll.decode(bytes(bad))
+
+
 class TestKllProperties:
     @given(floats)
     @settings(max_examples=40, deadline=None)
@@ -323,6 +434,82 @@ class TestFiProperties:
         again = fi_interop.serialize(back)
         assert fi_interop.deserialize(again) == back
 
+
+fi_pairs = st.lists(
+    st.tuples(st.text(min_size=1, max_size=6), st.integers(1, 1000)), min_size=1, max_size=120
+)
+
+
+def _fi_image(pairs):
+    from datasketches_postgresql_spark.sketches import fi, fi_interop
+
+    return fi_interop.serialize(fi.build(4, [p[0] for p in pairs], [p[1] for p in pairs]))
+
+
+class TestFiDecoderHostileInput:
+    """The frequent-items image decoder requires the exact length: a
+    truncated image, trailing bytes, an oversized num_active, bad UTF-8 or
+    a flipped header byte raise ValueError (never struct.error), and Spark's
+    accumulator field decodes only through its NULL-count strip."""
+
+    @given(fi_pairs, st.data())
+    @settings(max_examples=60, deadline=None)
+    def test_truncated_or_extended_image_raises(self, pairs, data):
+        from datasketches_postgresql_spark.sketches import fi_interop
+
+        img = _fi_image(pairs)
+        with pytest.raises(ValueError):
+            fi_interop.deserialize(img[: data.draw(st.integers(0, len(img) - 1))])
+        with pytest.raises(ValueError, match="trailing"):
+            fi_interop.deserialize(img + bytes(data.draw(st.integers(1, 16))))
+
+    @given(fi_pairs, st.integers(1, 2**32 - 1))
+    @settings(max_examples=60, deadline=None)
+    def test_oversized_num_active_raises(self, pairs, extra):
+        from datasketches_postgresql_spark.sketches import fi_interop
+
+        img = _fi_image(pairs)
+        if img[0] == 4:
+            num = int.from_bytes(img[8:12], "little")
+            bad = img[:8] + min(num + extra, 2**32 - 1).to_bytes(4, "little") + img[12:]
+            with pytest.raises(ValueError):
+                fi_interop.deserialize(bad)
+
+    @given(fi_pairs, st.data())
+    @settings(max_examples=100, deadline=None)
+    def test_flipped_header_byte_raises_or_decodes(self, pairs, data):
+        from datasketches_postgresql_spark.sketches import fi, fi_interop
+
+        img = _fi_image(pairs)
+        flipped = bytearray(img)
+        flipped[data.draw(st.integers(0, min(len(img), 32) - 1))] ^= data.draw(st.integers(1, 255))
+        try:
+            st_ = fi.FiState.deserialize(fi_interop.deserialize(bytes(flipped)))
+        except ValueError:
+            return
+        assert len(st_.items) <= len(img) // 12
+
+    def test_bad_utf8_raises(self):
+        from datasketches_postgresql_spark.sketches import fi_interop
+
+        img = _fi_image([("ab", 3)])
+        assert img.endswith(b"ab")
+        with pytest.raises(ValueError):
+            fi_interop.deserialize(img[:-2] + b"\xff\xfe")
+
+    def test_top_k_accumulator_suffix_is_stripped(self):
+        from datasketches_postgresql_spark.sketches import fi, fi_interop
+
+        img = _fi_image([("ab", 3), ("c", 1)])
+        field = img + (10).to_bytes(8, "big")  # 10 NULL inputs
+        assert fi_interop.from_top_k_accumulate(field) == fi_interop.deserialize(img)
+        with pytest.raises(ValueError):  # no suffix: the image is 8 bytes short
+            fi_interop.from_top_k_accumulate(img)
+        # Spark's accumulator over no non-NULL input: the empty image
+        # (flags 5, as datasketches-java writes it) and a zero NULL count
+        empty = bytes.fromhex("01010a0903050000") + bytes(8)
+        st_ = fi.FiState.deserialize(fi_interop.from_top_k_accumulate(empty))
+        assert (st_.lg_k, st_.items, st_.total) == (9, {}, 0)
 
 class TestHllProperties:
     @given(
