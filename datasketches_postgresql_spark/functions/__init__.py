@@ -21,7 +21,8 @@ Family modules mirror the reference's sql/ DDL files one-to-one:
     aod       <- sql/datasketches_aod_sketch.sql
 
 kll, quantiles and req bind their scalar queries to one shared UDF set
-(quantile_queries.py).
+(quantile_queries.py); theta, hll, cpc and aod key their sketches by one
+DataSketches key rule (keys.py).
 """
 
 import pandas as _pd

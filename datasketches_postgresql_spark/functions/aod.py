@@ -1,6 +1,8 @@
 """AOD (array-of-doubles tuple) sketch family
-(/root/reference/sql/datasketches_aod_sketch.sql). Keys hash JVM-side via
-xxhash64, value vectors cross as Arrow list columns."""
+(the reference's sql/datasketches_aod_sketch.sql). Every sketch is the
+standard DataSketches ArrayOfDoubles compact image (sketches.aod); keys
+follow the DataSketches key rule (functions.keys), value vectors cross as
+Arrow list columns."""
 
 from __future__ import annotations
 
@@ -20,10 +22,25 @@ from pyspark.sql.types import (
 
 from ..operators.agg import sketch_groupby_agg, sketch_merge_agg
 from ..sketches import aod as _a
-from ..sketches import aod_interop as _ai
 from . import image_udf
+from .keys import hash_keys, key_column
 
-_H, _V, _VAL = "__h", "__v", "__vals"
+_H, _VAL = "__h", "__vals"
+
+
+def _rows_image(keys: pd.Series, vals: pd.Series, lg_k: int = _a.DEFAULT_LG_K,
+                p: float = 1.0, name: str = "aod_sketch_build") -> bytes:
+    """Image over rows of (key, value vector); a row with a NULL key or NULL
+    values updates nothing."""
+    kept, h1, _ = hash_keys(keys, name)
+    vl = vals.to_numpy(dtype=object)[kept]
+    has = np.array([v is not None for v in vl], dtype=bool)
+    stacked = (
+        np.stack([np.asarray(v, dtype=np.float64) for v in vl[has]])
+        if has.any()
+        else np.empty((0, 1))
+    )
+    return _a.from_hashes(h1[has], stacked, lg_k, p)
 
 
 def aod_sketch_build(
@@ -37,38 +54,27 @@ def aod_sketch_build(
 ) -> DataFrame:
     """Aggregate: aod_sketch_build(anyelement, double[][,lg_k[,p]])
     (sql:89-117); num_values inferred from the array column length."""
-    # NULL key/values rows are dropped in the KERNEL, not by a JVM filter
-    # (which would erase all-NULL groups; the reference's ffunc still emits
-    # a row per group). xxhash64(NULL) == seed 42, the sentinel.
+    # rows with a NULL key or NULL values reach the partial and are skipped
+    # there, so an all-NULL group still gets its row (the empty sketch), as
+    # the reference's ffunc emits one per group
     proj = df.select(
         *group_cols,
-        F.xxhash64(key_col).alias(_H),
+        key_column(df, key_col).alias(_H),
         F.col(values_col).cast("array<double>").alias(_VAL),
     )
-
-    def partial(pdf: pd.DataFrame) -> bytes:
-        keys = pdf[_H].to_numpy(dtype=np.int64).astype(np.uint64)
-        vals_list = pdf[_VAL].to_numpy(dtype=object)
-        keep = (keys != np.uint64(42)) & np.array(
-            [v is not None for v in vals_list], dtype=bool
-        )
-        keys, vals_list = keys[keep], vals_list[keep]
-        vals = (
-            np.stack([np.asarray(v, dtype=np.float64) for v in vals_list])
-            if len(vals_list)
-            else np.empty((0, 1))
-        )
-        return _a.build(keys, vals, lg_k, p)
-
     return sketch_groupby_agg(
         proj,
         group_cols,
         [_H, _VAL],
-        partial_fn=partial,
+        partial_fn=lambda pdf: _rows_image(pdf[_H], pdf[_VAL], lg_k, p),
         merge_fn=lambda states: _a.union(states, lg_k),
         finalize_fn=lambda b: {out_col: b},
         out_fields=[StructField(out_col, BinaryType())],
     )
+
+
+# every build is in the DataSketches hash space, so the compat name is an alias
+aod_sketch_build_compat = aod_sketch_build
 
 
 def aod_sketch_union_agg(
@@ -78,7 +84,8 @@ def aod_sketch_union_agg(
     lg_k: int | None = None,
     out_col: str = "sketch",
 ) -> DataFrame:
-    """Aggregate: aod_sketch_union(aod[,lg_k[,num_values]]) (sql:119-147)."""
+    """Aggregate: aod_sketch_union(aod[,lg_k[,num_values]]) (sql:119-147).
+    An image carries no lg_k; left out, it is the reference's 12."""
     return sketch_merge_agg(
         df,
         group_cols,
@@ -243,62 +250,17 @@ def aod_sketch_to_string(sketch: Column, print_entries: bool = False) -> Column:
     return _to_string_udf(sketch, F.lit(print_entries))
 
 
-# ---- DataSketches wire-format interop --------------------------------------
-
-
-def aod_sketch_build_compat(
-    df: DataFrame,
-    group_cols: list[str],
-    key_col: str,
-    values_col: str,
-    lg_k: int = _a.DEFAULT_LG_K,
-    p: float = 1.0,
-    out_col: str = "sketch",
-) -> DataFrame:
-    """aod_sketch_build in the DataSketches hash space (murmur3_x64_128,
-    seed 9001, 63-bit — the hashing the reference's storage format implies,
-    src/aod_sketch_c_adapter.cpp): sketches built here export via
-    ``aod_sketch_to_datasketches`` as canonical AOD compact tuple images
-    readable by Druid / datasketches-{java,cpp,py}. Integral keys
-    canonicalize to 8-byte LE (vectorized murmur)."""
-
-    proj = df.where(
-        F.col(key_col).isNotNull() & F.col(values_col).isNotNull()
-    ).select(
-        *group_cols,
-        F.col(key_col).cast("long").alias(_H),
-        F.col(values_col).cast("array<double>").alias(_VAL),
-    )
-
-    def partial(pdf: pd.DataFrame) -> bytes:
-        keys = pdf[_H].to_numpy(dtype=np.int64).astype(np.uint64)
-        vals_list = pdf[_VAL].to_numpy(dtype=object)
-        vals = (
-            np.stack([np.asarray(v, dtype=np.float64) for v in vals_list])
-            if len(vals_list)
-            else np.empty((0, 1))
-        )
-        return _ai.build_murmur(keys, vals, lg_k, p)
-
-    return sketch_groupby_agg(
-        proj,
-        group_cols,
-        [_H, _VAL],
-        partial_fn=partial,
-        merge_fn=lambda states: _a.union(states, lg_k),
-        finalize_fn=lambda b: {out_col: b},
-        out_fields=[StructField(out_col, BinaryType())],
-    )
+# ---- DataSketches wire format ----------------------------------------------
 
 
 aod_sketch_to_datasketches = image_udf(
-    "aod_sketch_to_datasketches", _ai.serialize_compact,
-    """Internal AOD sketch -> canonical DataSketches AOD compact image
-    (family 9, sketch type 3; see sketches.aod_interop). Only
-    murmur-built/imported sketches export — xxhash64-built ones raise.""")
+    "aod_sketch_to_datasketches", _a.validate,
+    """Sketch -> the same standard AOD compact image (family 9, sketch type
+    3), validated: every sketch here already is one.""")
 
 
 aod_sketch_from_datasketches = image_udf(
-    "aod_sketch_from_datasketches", _ai.deserialize_compact,
-    """Canonical DataSketches AOD compact image (e.g. produced by Druid /
-    datasketches-java) -> internal sketch usable with every aod_* function.""")
+    "aod_sketch_from_datasketches", _a.validate,
+    """Standard AOD compact image (e.g. produced by Druid /
+    datasketches-java) -> the same image, validated; usable with every
+    aod_* function here.""")

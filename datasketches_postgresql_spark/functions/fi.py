@@ -60,15 +60,17 @@ def frequent_strings_sketch_build(
     out_col: str = "sketch",
 ) -> DataFrame:
     """Aggregate: frequent_strings_sketch_build(lg_k, varchar[, weight])
-    (sql:65-83; lg_k mandatory, weight default 1). NULL strings are skipped."""
+    (sql:65-83; lg_k mandatory, weight default 1). NULL strings are
+    skipped, and a NULL weight adds nothing, as a zero weight does."""
     if weight_col is None and lg_k in NATIVE_LG_K:
         acc = F.call_function(
             "approx_top_k_accumulate", F.col(col).cast("string"), F.lit(3 << (lg_k - 2))
         )
         out = df.groupBy(*group_cols).agg(acc.alias(out_col))
         return out.withColumn(out_col, _from_top_k_udf(F.col(out_col).getField("sketch")))
-    weight = F.lit(1) if weight_col is None else F.col(weight_col)
-    proj = df.select(*group_cols, F.col(col).cast("string").alias(_S), weight.cast("long").alias(_W))
+    # a NULL weight adds nothing, as a zero weight does
+    weight = F.lit(1) if weight_col is None else F.coalesce(F.col(weight_col).cast("long"), F.lit(0))
+    proj = df.select(*group_cols, F.col(col).cast("string").alias(_S), weight.alias(_W))
 
     def partial(pdf: pd.DataFrame) -> bytes:
         sub = pdf.dropna(subset=[_S])

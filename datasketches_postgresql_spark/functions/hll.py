@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -25,6 +24,7 @@ from pyspark.sql.types import ArrayType, BinaryType, DoubleType, StringType, Str
 
 from ..operators.agg import sketch_groupby_agg, sketch_merge_agg
 from ..sketches import hll_interop as _hi
+from .keys import hash_keys, key_column
 
 DEFAULT_LG_K = 12  # src/hll_sketch_pg_functions.c:38
 _VALID_TGT = {"HLL_4", "HLL_6", "HLL_8", 4, 6, 8}
@@ -45,35 +45,19 @@ def _is_custom(tgt_type) -> bool:
 
 
 def _custom_build(df, group_cols, col, lg_k, width, out_col):
-    """HLL_4/HLL_6 build: murmur3-coupon registers (identical to what
-    datasketches-java computes for the same keys) serialized as the
-    canonical narrow image — binary-compatible with the reference's
-    storage and with Spark's native hll_* readers. NULLs are filtered and
-    all-NULL groups restored with the canonical empty image
-    (keep_group_keys, as cpc_sketch_build_compat does)."""
-    from pyspark.sql.types import IntegerType as _Int
-    from pyspark.sql.types import LongType as _Long
-    from pyspark.sql.types import ShortType as _Short
+    """HLL_4/HLL_6 build: murmur3-coupon registers over the DataSketches key
+    rule (functions.keys; identical to what datasketches-java computes for
+    the same keys) serialized as the canonical narrow image —
+    binary-compatible with the reference's storage and with Spark's native
+    hll_* readers. NULL keys reach the partial and are skipped there, so an
+    all-NULL group gets the canonical empty image."""
 
-    from ..sketches.murmur3 import hash128_u64, hash128_utf8_batch
+    def partial(pdf: pd.DataFrame) -> bytes:
+        _, h1, h2 = hash_keys(pdf[_H])
+        return _hi.serialize_hll(lg_k, _hi.registers_murmur(h1, h2, lg_k), width)
 
-    dtype = df.schema[col].dataType
-    numeric = isinstance(dtype, (_Long, _Int, _Short))
-    val = F.col(col).cast("long") if numeric else F.col(col).cast("string")
-    proj = df.where(F.col(col).isNotNull()).select(*group_cols, val.alias(_H))
-
-    if numeric:
-        def partial(pdf: pd.DataFrame) -> bytes:
-            keys = pdf[_H].to_numpy(dtype=np.int64).astype(np.uint64)
-            regs = _hi.registers_murmur(*hash128_u64(keys, 9001), lg_k)
-            return _hi.serialize_hll(lg_k, regs, width)
-    else:
-        def partial(pdf: pd.DataFrame) -> bytes:
-            h1, h2 = hash128_utf8_batch(pdf[_H], 9001, with_h2=True)
-            return _hi.serialize_hll(lg_k, _hi.registers_murmur(h1, h2, lg_k), width)
-
-    agg = sketch_groupby_agg(
-        proj,
+    return sketch_groupby_agg(
+        df.select(*group_cols, key_column(df, col).alias(_H)),
         group_cols,
         [_H],
         partial_fn=partial,
@@ -81,10 +65,6 @@ def _custom_build(df, group_cols, col, lg_k, width, out_col):
         finalize_fn=lambda b: {out_col: b},
         out_fields=[StructField(out_col, BinaryType())],
     )
-    from ..operators.agg import keep_group_keys
-
-    empty = _hi.serialize_hll(lg_k, np.zeros(1 << lg_k, dtype=np.uint8), width)
-    return keep_group_keys(df, group_cols, agg, {out_col: empty})
 
 
 def hll_sketch_build(

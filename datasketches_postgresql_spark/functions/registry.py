@@ -5,14 +5,15 @@
 Aggregates register as grouped-agg pandas UDFs. Two deliberate deltas from
 the reference's SQL, both documented:
 
-1. ``cpc_sketch_build`` / ``cpc_sketch_distinct`` take an ALREADY-HASHED
-   bigint (wrap the column in the built-in ``xxhash64(col)``), which keeps
-   the Python boundary numeric/Arrow-fast. The theta builds and
-   ``cpc_sketch_build_compat`` take the value itself and hash it as a
-   DataSketches key, as the DataFrame theta build does (the reference's C
-   code canonicalizes anyelement to bytes before hashing,
+1. The theta, CPC and AOD builds take the value itself and hash it as a
+   DataSketches key (functions.keys), as the DataFrame builds do (the
+   reference's C code canonicalizes anyelement to bytes before hashing,
    src/theta_sketch_pg_functions.c:103-115): integers as update(long),
-   anything else as update(String).
+   binary as update(byte[]), anything else as update(String). A nullable
+   BIGINT reaches a SQL pandas UDF as float64, so keys at or above 2^53 in
+   such a column are refused (cast to STRING, or filter the NULLs). A
+   hashed key such as the built-in ``xxhash64(col)`` still works: it is a
+   bigint key like any other.
 2. Grouped-agg pandas UDFs have no partial-aggregation step (Spark ships
    group values to one task), so this layer is the CONVENIENCE surface; the
    scale path is the two-phase DataFrame API in ``..operators.agg``.
@@ -33,7 +34,6 @@ from pyspark.sql.types import BinaryType, DoubleType
 
 from ..sketches import aod as _aod
 from ..sketches import fi as _fi
-from ..sketches import interop as _ti
 from ..sketches import kll as _kll
 from ..sketches import quantiles as _qd
 from ..sketches import req as _req
@@ -43,43 +43,7 @@ from . import kll as kll_fns
 from . import quantiles as qd_fns
 from . import req as req_fns
 from . import theta as theta_fns
-
-
-def _hashes(s: pd.Series) -> np.ndarray:
-    return s.dropna().to_numpy(dtype=np.int64).astype(np.uint64)
-
-
-def _key_build(v: pd.Series, from_keys, from_strings, name: str) -> bytes:
-    """Sketch the non-NULL values of ``v`` as DataSketches keys: integers
-    through ``from_keys`` (update(long)), anything else through
-    ``from_strings`` (update(String))."""
-    vals = v.dropna()
-    if vals.dtype.kind in "iu":
-        return from_keys(vals.to_numpy(dtype=np.int64).astype(np.uint64))
-    if vals.dtype.kind == "f":
-        # Arrow renders a BIGINT column containing NULLs as float64;
-        # integral floats are those longs, anything else must be cast
-        # by the caller (update(double) canonicalization is not
-        # implemented)
-        arr = vals.to_numpy(dtype=np.float64)
-        if not np.all(arr == np.floor(arr)):
-            raise ValueError(
-                f"{name}: non-integral numeric keys — cast to BIGINT or STRING first"
-            )
-        # beyond 2^53 a float64 cannot represent every long: the
-        # rounded value would still pass the integrality check while
-        # the murmur hashes silently diverge from a sketch built on
-        # the true keys — refuse rather than betray exact interop.
-        # >= (not >): 2^53 itself is reachable by ROUNDING from the
-        # unrepresentable 2^53+1, so a value equal to the boundary
-        # cannot be trusted either
-        if np.any(np.abs(arr) >= 2.0**53):
-            raise ValueError(
-                f"{name}: integer keys above 2^53 were rendered as lossy "
-                "float64 (nullable BIGINT via Arrow) — cast to BIGINT or STRING first"
-            )
-        return from_keys(arr.astype(np.int64).astype(np.uint64))
-    return from_strings(vals)
+from .keys import hash_keys
 
 
 def _quantile_build(kernel, dtype):
@@ -109,13 +73,11 @@ def register_all(spark: SparkSession) -> None:
     # -- theta aggregates ---------------------------------------------------
     @F.pandas_udf(BinaryType())
     def theta_sketch_build(v: pd.Series) -> bytes:  # type: ignore[misc]
-        return _key_build(v, _ti.build_murmur, _ti.build_murmur_strings, "theta_sketch_build")
+        return _theta.build(hash_keys(v, "theta_sketch_build")[1])
 
     @F.pandas_udf(DoubleType())
     def theta_sketch_distinct(v: pd.Series) -> float:  # type: ignore[misc]
-        return _theta.get_estimate(
-            _key_build(v, _ti.build_murmur, _ti.build_murmur_strings, "theta_sketch_distinct")
-        )
+        return _theta.get_estimate(_theta.build(hash_keys(v, "theta_sketch_distinct")[1]))
 
     @F.pandas_udf(BinaryType())
     def theta_sketch_union_agg(s: pd.Series) -> bytes:  # type: ignore[misc]
@@ -200,17 +162,11 @@ def register_all(spark: SparkSession) -> None:
     )
 
     # -- aod --------------------------------------------------------------------
+    from . import aod as aod_fns
+
     @F.pandas_udf(BinaryType())
-    def aod_sketch_build(h: pd.Series, vals: pd.Series) -> bytes:  # type: ignore[misc]
-        mask = h.notna() & vals.notna()
-        keys = h[mask].to_numpy(dtype=np.int64).astype(np.uint64)
-        vl = vals[mask].to_numpy(dtype=object)
-        m = (
-            np.stack([np.asarray(x, dtype=np.float64) for x in vl])
-            if len(vl)
-            else np.empty((0, 1))
-        )
-        return _aod.build(keys, m)
+    def aod_sketch_build(v: pd.Series, vals: pd.Series) -> bytes:  # type: ignore[misc]
+        return aod_fns._rows_image(v, vals)
 
     @F.pandas_udf(BinaryType())
     def aod_sketch_union_agg(s: pd.Series) -> bytes:  # type: ignore[misc]
@@ -218,8 +174,6 @@ def register_all(spark: SparkSession) -> None:
 
     spark.udf.register("aod_sketch_build", aod_sketch_build)
     spark.udf.register("aod_sketch_union_agg", aod_sketch_union_agg)
-
-    from . import aod as aod_fns
 
     spark.udf.register("aod_sketch_get_estimate", aod_fns.aod_sketch_get_estimate)
     spark.udf.register("aod_sketch_to_means", aod_fns.aod_sketch_to_means)
@@ -237,25 +191,19 @@ def register_all(spark: SparkSession) -> None:
     from . import cpc as cpc_fns
 
     @F.pandas_udf(BinaryType())
-    def cpc_sketch_build(h: pd.Series) -> bytes:  # type: ignore[misc]
-        return _cpc.build(_hashes(h))
+    def cpc_sketch_build(v: pd.Series) -> bytes:  # type: ignore[misc]
+        return _cpc.from_hashes(*hash_keys(v, "cpc_sketch_build")[1:])
 
     @F.pandas_udf(DoubleType())
-    def cpc_sketch_distinct(h: pd.Series) -> float:  # type: ignore[misc]
-        return _cpc.get_estimate(_cpc.build(_hashes(h)))
+    def cpc_sketch_distinct(v: pd.Series) -> float:  # type: ignore[misc]
+        return _cpc.get_estimate(_cpc.from_hashes(*hash_keys(v, "cpc_sketch_distinct")[1:]))
 
     @F.pandas_udf(BinaryType())
     def cpc_sketch_union_agg(s: pd.Series) -> bytes:  # type: ignore[misc]
         return _cpc.union([bytes(b) for b in s if b is not None])
 
-    @F.pandas_udf(BinaryType())
-    def cpc_sketch_build_compat(v: pd.Series) -> bytes:  # type: ignore[misc]
-        from ..sketches import cpc_interop as _ci
-
-        return _key_build(v, _ci.build_murmur, _ci.build_murmur_strings, "cpc_sketch_build_compat")
-
     spark.udf.register("cpc_sketch_build", cpc_sketch_build)
-    spark.udf.register("cpc_sketch_build_compat", cpc_sketch_build_compat)
+    spark.udf.register("cpc_sketch_build_compat", cpc_sketch_build)
     spark.udf.register("cpc_sketch_distinct", cpc_sketch_distinct)
     spark.udf.register("cpc_sketch_union_agg", cpc_sketch_union_agg)
     spark.udf.register("cpc_sketch_get_estimate", cpc_fns.cpc_sketch_get_estimate)

@@ -5,11 +5,8 @@ Every theta sketch here is the standard DataSketches compact theta image
 9001, 63-bit). Builds and unions run on Spark's native DataSketches
 aggregates (``theta_sketch_agg``, ``theta_union_agg``), JVM-side with
 partial aggregation and no Python in the hot path, as the HLL family does.
-Keys are projected the way datasketches-java's ``update`` overloads
-canonicalize them (SURVEY.md §1.2: the reference canonicalizes any element
-type to bytes before hashing, src/theta_sketch_pg_functions.c:103-115):
-integral types as ``long``, binary as raw bytes, everything else as its
-string's UTF-8 bytes.
+Keys follow the DataSketches key rule (functions.keys): integral types as
+``long``, binary as raw bytes, everything else as its string's UTF-8 bytes.
 
 The numpy kernel answers what Spark has no usable native function for: the
 intersection aggregate (see ``theta_sketch_intersection_agg``), sampling
@@ -25,31 +22,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    ByteType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    ShortType,
-    StringType,
-    StructField,
-)
+from pyspark.sql.types import ArrayType, BinaryType, DoubleType, StringType, StructField
 
 from ..operators.agg import sketch_merge_agg
 from ..sketches import interop as _i
 from ..sketches import theta as _t
-
-
-def _key(df: DataFrame, col: str) -> Column:
-    """The column as datasketches-java's update(long / byte[] / String) key."""
-    dtype = df.schema[col].dataType
-    if isinstance(dtype, (ByteType, ShortType, IntegerType, LongType)):
-        return F.col(col).cast("long")
-    if isinstance(dtype, BinaryType):
-        return F.col(col)
-    return F.col(col).cast("string")
+from .keys import key_column
 
 
 def _map_opt(series: pd.Series, fn) -> pd.Series:
@@ -74,7 +52,7 @@ def theta_sketch_build(
     NULL inputs are skipped (src/theta_sketch_pg_functions.c:78-82), and a
     group whose values are all NULL still emits a row (the empty sketch),
     as the reference's ffunc does."""
-    out = df.groupBy(*group_cols).agg(F.theta_sketch_agg(_key(df, col), lg_k).alias(out_col))
+    out = df.groupBy(*group_cols).agg(F.theta_sketch_agg(key_column(df, col), lg_k).alias(out_col))
     if p < 1.0:
         out = out.withColumn(out_col, _sample_udf(F.col(out_col), F.lit(p)))
     return out

@@ -6,7 +6,7 @@ deserialfunc -> combinefunc -> finalfunc; e.g.
 /root/reference/sql/datasketches_theta_sketch.sql:85-163,
 /root/reference/src/theta_sketch_pg_functions.c:247-334) as idiomatic Spark:
 
-    stage 1 (map side, no shuffle): ``mapInPandas`` folds every Arrow batch
+    stage 1 (map side, no shuffle): ``mapInArrow`` folds every Arrow batch
         of an input partition into ONE serialized sketch state per group —
         the sfunc + serialfunc. Output rows: (group_cols..., state bytes).
     stage 2 (one shuffle of tiny states): ``groupBy(group).applyInPandas``
@@ -25,11 +25,66 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 _STATE = "__sketch_state"
+
+
+def _pandas(batch: pa.RecordBatch) -> pd.DataFrame:
+    # a bigint column arrives as pandas' nullable Int64, not as float64
+    # (which cannot hold every long), so a sketch key reaches the partial
+    # exact and its NULLs stay visible without a sentinel value or a row
+    # filter
+    return batch.to_pandas(types_mapper={pa.int64(): pd.Int64Dtype()}.get, date_as_object=True)
+
+
+def fold_partials(
+    batches: Iterator[pa.RecordBatch],
+    group_cols: list[str],
+    input_cols: list[str],
+    partial_fn: Callable[[pd.DataFrame], bytes],
+    merge_fn: Callable[[list[bytes]], bytes],
+) -> Iterator[pa.RecordBatch]:
+    """Stage 1 over one partition's batches: one (group_cols..., state) row
+    per group, all in one record batch; with no group columns, the one row
+    (__g = 1, state)."""
+    # one state list per group; a group's key columns are copied from the
+    # Arrow row that first brings it, so they go back to Spark untouched
+    # and no source batch outlives its own loop pass
+    states: dict[tuple, list[bytes]] = {}
+    keys: list[pa.RecordBatch] = []
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        pdf = _pandas(batch)
+        if not group_cols:
+            # global aggregate: one group per partition — skip the pandas
+            # groupby entirely (measured 28.6s -> ~3s for
+            # theta_sketch_distinct over 100M rows; per-batch groupby on a
+            # constant key was ~90% of the stage)
+            states.setdefault((), []).append(partial_fn(pdf))
+            continue
+        groups = pdf.groupby(group_cols, dropna=False, sort=False).indices
+        first_rows = []
+        for key, rows in groups.items():
+            if not isinstance(key, tuple):
+                key = (key,)
+            if key not in states:
+                states[key] = []
+                first_rows.append(rows[0])
+            states[key].append(partial_fn(pdf[input_cols].take(rows)))
+        if first_rows:
+            keys.append(batch.select(group_cols).take(first_rows))
+    if not states:
+        return
+    merged = pa.array([merge_fn(parts) for parts in states.values()], type=pa.binary())
+    if not group_cols:
+        out = pa.table({"__g": pa.array([1], type=pa.int64()), _STATE: merged})
+    else:
+        out = pa.Table.from_batches(keys).combine_chunks().append_column(_STATE, merged)
+    yield from out.to_batches()
 
 
 def sketch_groupby_agg(
@@ -46,6 +101,9 @@ def sketch_groupby_agg(
     partial_fn : pandas DataFrame (input_cols) for one group-chunk -> state bytes
     merge_fn   : list of state bytes -> state bytes
     finalize_fn: state bytes -> {out_col: value}
+
+    Every row reaches ``partial_fn``, NULL inputs included, so a group whose
+    inputs are all NULL still gets its row (the partial skips the NULLs).
     """
     group_cols = list(group_cols)
     dummy = not group_cols
@@ -65,35 +123,11 @@ def sketch_groupby_agg(
 
     partial_schema = StructType(g_fields + [StructField(_STATE, BinaryType())])
 
-    def gen_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if dummy:
-            # global aggregate: one group per partition — skip the pandas
-            # groupby entirely (measured 28.6s -> ~3s for
-            # theta_sketch_distinct over 100M rows; per-batch groupby on a
-            # constant key was ~90% of the stage)
-            parts: list[bytes] = []
-            for pdf in batches:
-                if len(pdf):
-                    parts.append(partial_fn(pdf[input_cols]))
-            if parts:
-                yield pd.DataFrame({"__g": [1], _STATE: [merge_fn(parts)]})
-            return
-        states: dict[tuple, list[bytes]] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                if not isinstance(key, tuple):
-                    key = (key,)
-                states.setdefault(key, []).append(partial_fn(sub[input_cols]))
-        if states:
-            rows = [
-                dict(zip(group_cols, key)) | {_STATE: merge_fn(parts)}
-                for key, parts in states.items()
-            ]
-            yield pd.DataFrame(rows, columns=group_cols + [_STATE])
-
-    partials = proj.mapInPandas(gen_partials, schema=partial_schema)
+    fold_cols = [] if dummy else group_cols
+    partials = proj.mapInArrow(
+        lambda batches: fold_partials(batches, fold_cols, input_cols, partial_fn, merge_fn),
+        schema=partial_schema,
+    )
 
     def final_merge(pdf: pd.DataFrame) -> pd.DataFrame:
         state = merge_fn(list(pdf[_STATE]))
@@ -103,31 +137,6 @@ def sketch_groupby_agg(
 
     result = partials.groupBy(*group_cols).applyInPandas(final_merge, schema=out_schema)
     return result.drop("__g") if dummy else result
-
-
-def keep_group_keys(
-    source: DataFrame,
-    group_cols: list[str],
-    result: DataFrame,
-    fill: dict[str, object],
-) -> DataFrame:
-    """Re-attach group keys that vanished because every row in the group was
-    filtered (NULL inputs). PostgreSQL aggregates run ffunc even when sfunc
-    skipped every row, so the reference emits a row per group with an empty
-    sketch (src/theta_sketch_pg_functions.c:78-82 skips NULLs; the FINALFUNC
-    still fires per group) — a plain post-filter groupBy loses those groups.
-    ``fill`` maps output column -> value for the resurrected groups (empty
-    sketch bytes / 0.0 estimate). No-op for global aggregates.
-
-    Scale: the join is keys (one row per group) against the aggregated
-    result (same cardinality) — never the raw rows."""
-    if not group_cols:
-        return result
-    keys = source.select(*group_cols).distinct()
-    out = keys.join(result, list(group_cols), "left")
-    for c, v in fill.items():
-        out = out.withColumn(c, F.coalesce(F.col(c), F.lit(v)))
-    return out
 
 
 def sketch_merge_agg(

@@ -1,46 +1,47 @@
 """CPC-family distinct-count sketch: coupon matrix + maximum-likelihood
 estimator.
 
-Replaces round 1's theta alias with a REAL coupon-collection sketch in the
-spirit of the reference's CPC family (/root/reference/src/
-cpc_sketch_pg_functions.c, default lg_k=11 at :30): each update hashes to a
-(row, column) coupon — row uniform over k = 2^lg_k, column geometric with
-P(col = j) = 2^-(j+1) — and the sketch is the k x 64 bit matrix of observed
-coupons. The published CPC sketch (Lang, "Back to the Future: an even more
-nearly optimal cardinality estimation algorithm") adds entropy compression
-of this same matrix and a surplus/HIP estimator; this implementation keeps
-the matrix uncompressed (documented storage-size divergence: 8k bytes dense
-vs CPC's ~k bytes) and estimates by maximizing the exact per-column
-likelihood, giving the same accuracy CLASS (measured RSE ~= 0.8/sqrt(k),
-vs theta's 1/sqrt(k) at equal lg_k and far fewer stored bits per coupon).
+A real coupon-collection sketch in the spirit of the reference's CPC family
+(the reference's src/cpc_sketch_pg_functions.c, default lg_k=11 at :30):
+each update hashes to a (row, column) coupon and the sketch is the k x 64
+bit matrix of observed coupons. The coupon mapping is the DataSketches one
+(``CpcSketch.update``): the key is hashed with murmur3_x64_128 and seed 9001
+(``functions.keys`` holds the key rule), row = the low lg_k bits of h1,
+column = min(clz(h2), 63), so P(col = j) = 2^-(j+1). A matrix built here is
+identical to the one datasketches-java builds over the same keys, and
+unions with Druid / Hive / datasketches-* sketches are exact. The published
+CPC sketch (Lang, "Back to the Future: an even more nearly optimal
+cardinality estimation algorithm") adds entropy compression of this same
+matrix and a surplus/HIP estimator; the working image below keeps the
+matrix uncompressed (8k bytes dense vs CPC's ~k bytes) and estimates by
+inverting the expected coupon count, giving the same accuracy CLASS
+(measured RSE ~= 0.8/sqrt(k)).
 
-The canonical compressed DataSketches CPC image is supported via
-sketches.cpc_interop (round 3): the spec's constant code tables live in
-cpc_tables.npz (extracted from the datasketches-java bundled inside
-Spark's own jars — tools/gen_cpc_tables.py), and the emitted images are
-byte-identical to the library's own serialization for the same coupon
-matrix (tests/test_jvm_groundtruth.py). The uncompressed matrix below
-remains the engine's WORKING format (OR-mergeable partials, vectorized
-updates); the compressed image is the interchange format at the edges —
-the same split the reference makes between in-memory sketch state and its
-stored bytea.
+The canonical compressed DataSketches CPC image is the interchange format
+(sketches.cpc_interop); its constant code tables live in cpc_tables.npz
+(extracted from the datasketches-java bundled inside Spark's jars —
+tools/gen_cpc_tables.py), and the emitted images are byte-identical to the
+library's own serialization for the same matrix
+(tests/test_jvm_groundtruth.py). The uncompressed matrix stays the
+engine's WORKING format (OR-mergeable partials, vectorized updates), the
+split the reference makes between in-memory sketch state and its stored
+bytea.
 
-- merge = bitwise OR (order-independent, idempotent — safely mergeable
-  partials, unlike HIP-augmented streaming estimators);
-- sparse mode below 2k coupons stores (row<<6 | col) u32 coupons — both the
-  small-n wire size and the exact-regime behavior the reference's tests use;
-- MLE: L(n) = sum_j [c_j ln p_j(n) + (k - c_j) ln(1 - p_j(n))] with
-  p_j(n) = 1 - (1 - 2^-(j+1)/k)^n, solved by golden-section on ln n.
+- merge = bitwise OR; sketches of different lg_k fold to the smallest one
+  first (row i of a 2k-row matrix lands on row i mod k, the library's
+  ``CpcUnion`` K reduction), and empty inputs do not lower it;
+- sparse mode below 2k coupons stores (row<<6 | col) u32 coupons;
+- estimate: invert E[#coupons | n] at the observed count (bisection on
+  ln n).
 
-Serialized layout (little-endian):
-    [u8 magic=0x43][u8 lg_k][u8 mode: bit0 0=sparse|1=dense, bit2 set =
-     ECOSYSTEM coupon space (murmur rowCol mapping — exportable as the
-     canonical image and cross-system unionable; unset = the internal
-     xxhash64 mapping, whose coupons mean nothing to a datasketches-*
-     reader, so canonical export refuses them — the same honesty contract
-     as theta's even-hash invariant)]
-    sparse: [u32 count][u32 * count coupons]
+Working image layout (little-endian):
+    [u8 magic=0x43][u8 lg_k][u8 mode: 4 = sparse, 5 = dense]
+    sparse: [u32 count][u32 * count coupons, ascending]
     dense:  [u64 * k bitmap rows]
+Bit 2 of the mode byte marks the DataSketches coupon space. Images with it
+clear (modes 0 and 1) were written by earlier versions in a retired coupon
+space that no DataSketches reader shares; the decoder rejects them. It checks every size against the image length before it
+allocates and raises ``ValueError`` on a truncated or inconsistent image.
 """
 
 from __future__ import annotations
@@ -49,11 +50,16 @@ import struct
 
 import numpy as np
 
-DEFAULT_LG_K = 11  # src/cpc_sketch_pg_functions.c:30
-_MAGIC = 0x43
-_MAX_COL = 63
+from .hll import _bit_length_u64
+from .murmur3 import DEFAULT_SEED, hash128_u64
 
-_POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint32)
+DEFAULT_LG_K = 11  # src/cpc_sketch_pg_functions.c:30
+MIN_LG_K, MAX_LG_K = 4, 26  # CpcSketch's range
+_MAGIC = 0x43
+_SPARSE, _DENSE = 4, 5
+_HEAD = struct.Struct("<BBB")
+
+_POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
 
 def popcount64(arr: np.ndarray) -> int:
@@ -61,35 +67,26 @@ def popcount64(arr: np.ndarray) -> int:
     bitwise_count ufunc and the bin() fallback dominated profiles)."""
     if arr.size == 0:
         return 0
-    return int(_POP8[np.ascontiguousarray(arr).view(np.uint8)].sum())
+    return int(_POP8[np.ascontiguousarray(arr).view(np.uint8)].sum(dtype=np.int64))
 
 
-def _coupons_from_hashes(values: np.ndarray, lg_k: int) -> np.ndarray:
-    """uint64 hashes -> unique u32 coupons (row<<6 | col)."""
-    h = np.asarray(values, dtype=np.uint64)
-    k = np.uint64(1 << lg_k)
-    rows = (h & (k - np.uint64(1))).astype(np.uint32)
-    rest = h >> np.uint64(lg_k)
-    # column = index of lowest set bit of the remaining hash bits (geometric,
-    # P(j) = 2^-(j+1)); all-zero rest maps to the max column
-    rest_nonzero = np.where(rest == 0, np.uint64(1) << np.uint64(_MAX_COL), rest)
-    low = rest_nonzero & (~rest_nonzero + np.uint64(1))
-    # ctz via the float64 exponent: `low` is an isolated bit 2^j with
-    # j <= 63, and every power of two up to 2^63 is exactly representable
-    # in float64, so the biased exponent of float64(low) is exactly
-    # j + 1023 (~18x faster than the former 6-pass masked binary search)
-    cols = ((low.astype(np.float64).view(np.uint64) >> np.uint64(52))
-            - np.uint64(1023)).astype(np.uint32)
-    cols = np.minimum(cols, np.uint32(min(_MAX_COL, 64 - lg_k - 1 + lg_k)))
-    raw = (rows.astype(np.uint32) << np.uint32(6)) | cols.astype(np.uint32)
-    # dedup by O(k+n) scatter into the 2^(lg_k+6)-slot coupon space when
-    # the flag array stays small (<= 2 MiB through lg_k 15); at larger
-    # lg_k the per-batch alloc + full scan would dwarf the batch (4 GiB
-    # at the format max lg_k 26), so fall back to np.unique's sort there
-    if lg_k <= 15:
+def _use_scatter(n: int, lg_k: int) -> bool:
+    """Dedup by scatter into the 2^(lg_k+6)-slot coupon space only when the
+    batch fills at least half of it (the measured crossover against
+    np.unique's sort) and the flag array stays <= 2 MiB (lg_k <= 15)."""
+    return lg_k <= 15 and 2 * n >= 1 << (lg_k + 6)
+
+
+def _coupons(h1: np.ndarray, h2: np.ndarray, lg_k: int) -> np.ndarray:
+    """murmur3 halves -> sorted unique u32 coupons (row<<6 | col), row = h1
+    low lg_k bits, col = min(clz(h2), 63)."""
+    rows = (h1 & np.uint64((1 << lg_k) - 1)).astype(np.uint32)
+    cols = np.minimum(64 - _bit_length_u64(h2), 63).astype(np.uint32)
+    raw = (rows << np.uint32(6)) | cols
+    if _use_scatter(raw.size, lg_k):
         seen = np.zeros(1 << (lg_k + 6), dtype=bool)
         seen[raw] = True
-        return np.nonzero(seen)[0].astype(np.uint32)
+        return np.flatnonzero(seen).astype(np.uint32)
     return np.unique(raw)
 
 
@@ -101,91 +98,99 @@ def _dense_from_coupons(coupons: np.ndarray, lg_k: int) -> np.ndarray:
     return mat
 
 
-def _coupons_from_dense(mat: np.ndarray) -> np.ndarray:
-    rows, = np.nonzero(mat)
-    out = []
-    for r in rows:
-        bits = int(mat[r])
-        while bits:
-            low = bits & -bits
-            out.append((int(r) << 6) | low.bit_length() - 1)
-            bits ^= low
-    return np.array(sorted(out), dtype=np.uint32)
+def coupons_from_dense(mat: np.ndarray) -> np.ndarray:
+    """Set bits of a k x 64 bit matrix as sorted u32 (row<<6 | col). The
+    non-empty rows expand to one byte per bit, 2^14 rows at a time, so the
+    temporaries stay at most 1 MiB whatever lg_k."""
+    rows = np.flatnonzero(mat)
+    out = [np.empty(0, dtype=np.uint32)]
+    for start in range(0, rows.size, 1 << 14):
+        chunk = rows[start : start + (1 << 14)]
+        octets = mat[chunk].astype("<u8").view(np.uint8).reshape(-1, 8)
+        r, c = np.nonzero(np.unpackbits(octets, axis=1, bitorder="little"))
+        out.append((chunk[r].astype(np.uint32) << np.uint32(6)) | c.astype(np.uint32))
+    return np.concatenate(out)
 
 
-_COMPAT_BIT = 4
-
-
-def serialize(lg_k: int, coupons: np.ndarray | None, dense: np.ndarray | None,
-              compat: bool = False) -> bytes:
-    mode = (0 if dense is None else 1) | (_COMPAT_BIT if compat else 0)
+def serialize(lg_k: int, coupons: np.ndarray | None, dense: np.ndarray | None) -> bytes:
     if dense is None:
         return (
-            struct.pack("<BBBI", _MAGIC, lg_k, mode, len(coupons))
+            _HEAD.pack(_MAGIC, lg_k, _SPARSE) + struct.pack("<I", len(coupons))
             + np.ascontiguousarray(coupons, dtype="<u4").tobytes()
         )
-    return struct.pack("<BBB", _MAGIC, lg_k, mode) + np.ascontiguousarray(dense, dtype="<u8").tobytes()
-
-
-def is_compat(buf: bytes) -> bool:
-    """True when the sketch's coupons live in the ECOSYSTEM space (murmur
-    rowCol mapping) — the precondition for canonical export and cross-lgK
-    folds."""
-    return bool(buf[2] & _COMPAT_BIT)
+    return _HEAD.pack(_MAGIC, lg_k, _DENSE) + np.ascontiguousarray(dense, dtype="<u8").tobytes()
 
 
 def deserialize(buf: bytes) -> tuple[int, np.ndarray]:
     """-> (lg_k, dense matrix)."""
-    magic, lg_k, mode = struct.unpack_from("<BBB", buf, 0)
+    buf = bytes(buf)
+    if len(buf) < _HEAD.size:
+        raise ValueError(f"truncated CPC image: {len(buf)} bytes")
+    magic, lg_k, mode = _HEAD.unpack_from(buf)
     if magic != _MAGIC:
         raise ValueError("not a CPC sketch image")
-    mode &= ~_COMPAT_BIT  # coupon-space tag, orthogonal to the layout
-    if mode == 0:
-        (cnt,) = struct.unpack_from("<I", buf, 3)
-        coupons = np.frombuffer(buf, dtype="<u4", count=cnt, offset=7)
-        return lg_k, _dense_from_coupons(coupons, lg_k)
-    return lg_k, np.frombuffer(buf, dtype="<u8", offset=3).copy()
+    if mode in (0, 1):
+        raise ValueError(
+            "CPC image in the retired coupon space of earlier versions "
+            "(mode 0 or 1); rebuild it from the source keys"
+        )
+    if mode not in (_SPARSE, _DENSE):
+        raise ValueError(f"CPC image with unknown mode {mode}")
+    if not MIN_LG_K <= lg_k <= MAX_LG_K:
+        raise ValueError(f"CPC image with lg_k {lg_k} outside [{MIN_LG_K}, {MAX_LG_K}]")
+    k = 1 << lg_k
+    if mode == _DENSE:
+        if len(buf) != 3 + 8 * k:
+            raise ValueError(f"CPC dense image of {len(buf)} bytes, expected {3 + 8 * k}")
+        return lg_k, np.frombuffer(buf, dtype="<u8", offset=3).copy()
+    if len(buf) < 7:
+        raise ValueError(f"truncated CPC image: {len(buf)} bytes")
+    (cnt,) = struct.unpack_from("<I", buf, 3)
+    if len(buf) != 7 + 4 * cnt:
+        raise ValueError(f"CPC sparse image of {len(buf)} bytes for {cnt} coupons")
+    coupons = np.frombuffer(buf, dtype="<u4", count=cnt, offset=7)
+    if cnt and not (coupons[-1] < k << 6 and np.all(coupons[1:] > coupons[:-1])):
+        raise ValueError("CPC image coupons are not ascending, distinct and inside the matrix")
+    return lg_k, _dense_from_coupons(coupons, lg_k)
 
 
-def _pack(lg_k: int, dense: np.ndarray, compat: bool = False) -> bytes:
-    n_coupons = popcount64(dense)
-    if n_coupons * 4 + 4 < dense.size * 8 and n_coupons <= 2 * dense.size:
-        return serialize(lg_k, _coupons_from_dense(dense), None, compat)
-    return serialize(lg_k, None, dense, compat)
+def pack(lg_k: int, coupons: np.ndarray | None = None, dense: np.ndarray | None = None) -> bytes:
+    """Working image from sorted coupons or a dense matrix, sparse while the
+    coupon list is the smaller form."""
+    k = 1 << lg_k
+    n = coupons.size if dense is None else popcount64(dense)
+    if n * 4 + 4 < k * 8 and n <= 2 * k:
+        return serialize(lg_k, coupons_from_dense(dense) if coupons is None else coupons, None)
+    return serialize(lg_k, None, _dense_from_coupons(coupons, lg_k) if dense is None else dense)
 
 
-def build(values: np.ndarray, lg_k: int = DEFAULT_LG_K) -> bytes:
-    """Build from pre-hashed uint64 values."""
-    coupons = _coupons_from_hashes(values, lg_k)
-    return _pack(lg_k, _dense_from_coupons(coupons, lg_k))
+def from_hashes(h1: np.ndarray, h2: np.ndarray, lg_k: int = DEFAULT_LG_K) -> bytes:
+    """Build from the murmur3 halves of the keys (``functions.keys``)."""
+    return pack(lg_k, coupons=_coupons(h1, h2, lg_k))
+
+
+def build(keys: np.ndarray, lg_k: int = DEFAULT_LG_K) -> bytes:
+    """Build over integer keys, hashed as ``update(long)`` does."""
+    return from_hashes(*hash128_u64(np.asarray(keys, dtype=np.uint64), DEFAULT_SEED), lg_k)
 
 
 def union(sketches: list[bytes], lg_k: int | None = None) -> bytes:
+    """OR-union at the smallest lg_k among ``lg_k`` and the non-empty inputs
+    (``CpcUnion``'s rule: an empty input does not lower it). Without
+    ``lg_k``, inputs that are all empty give their smallest lg_k, and no
+    input gives the default."""
     parts = [deserialize(s) for s in sketches if s is not None]
-    if not parts:
-        return build(np.empty(0, dtype=np.uint64), lg_k or DEFAULT_LG_K)
-    out_lg_k = parts[0][0]
-    if any(p[0] != out_lg_k for p in parts) or (lg_k is not None and lg_k != out_lg_k):
-        # a coupon's column is derived from the post-row hash bits, so a
-        # matrix built at one lg_k cannot be folded to another without
-        # re-deriving columns (the compressed CPC's lgK-reduction relies on
-        # its different bit layout) — refuse rather than silently bias
-        raise ValueError("cpc union requires matching lg_k across sketches")
-    spaces = {is_compat(s) for s in sketches if s is not None}
-    if len(spaces) > 1:
-        # ORing matrices whose coupons came from DIFFERENT hash mappings
-        # yields ~|A|+|B|, not |A or B| — refuse rather than silently bias
-        # (the same policy as the lg_k check above)
-        raise ValueError(
-            "cpc union cannot mix ecosystem-mapped (build_compat) and "
-            "internal xxhash64-built sketches: their coupon spaces are "
-            "unrelated and the OR would double-count"
-        )
-    k = 1 << out_lg_k
-    acc = np.zeros(k, dtype=np.uint64)
-    for _, mat in parts:
-        acc |= mat
-    return _pack(out_lg_k, acc, compat=spaces.pop())
+    filled = [mat for _, mat in parts if mat.any()]
+    sizes = [m.size.bit_length() - 1 for m in filled]
+    if lg_k is not None:
+        target = min(sizes + [lg_k])
+    else:
+        target = min(sizes or [g for g, _ in parts] or [DEFAULT_LG_K])
+    acc = np.zeros(1 << target, dtype=np.uint64)
+    for mat in filled:
+        # row i of a larger matrix folds onto row i mod k
+        acc |= np.bitwise_or.reduce(mat.reshape(-1, acc.size), axis=0)
+    return pack(target, dense=acc)
 
 
 def _column_counts(dense: np.ndarray) -> np.ndarray:
@@ -249,7 +254,7 @@ def get_estimate_and_bounds(sketch: bytes, num_std_devs: int = 1) -> tuple[float
 
 def to_string(sketch: bytes) -> str:
     lg_k, dense = deserialize(sketch)
-    n_coupons = int(sum(bin(int(x)).count("1") for x in dense))
+    n_coupons = popcount64(dense)
     return (
         "### CPC sketch summary:\n"
         f"   lg_k    : {lg_k}\n"

@@ -62,7 +62,6 @@ import numpy as np
 
 from . import cpc as _c
 from .murmur3 import DEFAULT_SEED, compute_seed_hash
-from .murmur3 import hash128_u64
 
 FAMILY_CPC = 16
 _SER_VER = 1
@@ -329,32 +328,10 @@ def _matrix_to_pattern(matrix: np.ndarray, offset: int):
     return window, pattern
 
 
-def _pattern_pairs(pattern: np.ndarray) -> np.ndarray:
-    rows, = np.nonzero(pattern)
-    out = []
-    for r in rows:
-        bits = int(pattern[r])
-        while bits:
-            low = bits & -bits
-            out.append((int(r) << 6) | (low.bit_length() - 1))
-            bits ^= low
-    return np.array(sorted(out), dtype=np.uint32)
-
-
 def serialize_canonical(sketch: bytes, seed: int = DEFAULT_SEED) -> bytes:
-    """Internal CPC sketch -> canonical compressed DataSketches CPC image
+    """Working CPC image -> canonical compressed DataSketches CPC image
     (a MERGED-format image: the engine's matrices are OR-merged partials
-    with no HIP state — the same thing a CpcUnion result serializes to).
-    Only ecosystem-mapped sketches export (theta's even-hash honesty
-    contract, CPC edition): an xxhash64-built matrix would serialize into
-    a structurally valid image whose coupons silently DOUBLE-COUNT against
-    any library-built sketch."""
-    if not _c.is_compat(sketch):
-        raise ValueError(
-            "CPC sketch was built with the internal xxhash64 coupon mapping "
-            "and cannot be exported as a DataSketches image; build with "
-            "cpc_sketch_build_compat"
-        )
+    with no HIP state — the same thing a CpcUnion result serializes to)."""
     lg_k, matrix = _c.deserialize(sketch)
     k = 1 << lg_k
     c = _c.popcount64(matrix)
@@ -364,7 +341,7 @@ def serialize_canonical(sketch: bytes, seed: int = DEFAULT_SEED) -> bytes:
         flags = 2 | (0 << 2)
         return struct.pack("<BBBBBBH", 2, _SER_VER, FAMILY_CPC, lg_k, 0, flags, seed_hash)
     if flavor in ("sparse", "hybrid"):
-        pairs = _pattern_pairs(matrix)  # offset 0: pattern == matrix
+        pairs = _c.coupons_from_dense(matrix)  # offset 0: pattern == matrix
         bb = golomb_base_bits(k + c, c)
         sv = _compress_pairs(pairs, bb)
         flags = 2 | (2 << 2)  # SPARSE_HYBRID_MERGED
@@ -374,7 +351,7 @@ def serialize_canonical(sketch: bytes, seed: int = DEFAULT_SEED) -> bytes:
         return head + sv.tobytes()
     offset = determine_correct_offset(lg_k, c)
     window, pattern = _matrix_to_pattern(matrix, offset)
-    pairs = _pattern_pairs(pattern)
+    pairs = _c.coupons_from_dense(pattern)
     or_all = int(np.bitwise_or.reduce(pattern)) if pattern.size else 0
     tz = (or_all & -or_all).bit_length() - 1 if or_all else 64
     fi_col = min(tz, offset)
@@ -418,8 +395,10 @@ def deserialize_canonical(image: bytes, seed: int = DEFAULT_SEED) -> bytes:
     if fam != FAMILY_CPC:
         raise ValueError(f"not a CPC image (family {fam}, expected 16)")
     ordinal = (flags >> 2) & 7
+    if not _c.MIN_LG_K <= lg_k <= _c.MAX_LG_K:
+        raise ValueError(f"CPC image with lg_k {lg_k} outside [{_c.MIN_LG_K}, {_c.MAX_LG_K}]")
     if ordinal == 0 or ordinal == 1:  # EMPTY
-        return _c.serialize(lg_k, np.empty(0, dtype=np.uint32), None, compat=True)
+        return _c.serialize(lg_k, np.empty(0, dtype=np.uint32), None)
     if seed_hash != compute_seed_hash(seed):
         raise ValueError("seed hash mismatch: image built with a different update seed")
     k = 1 << lg_k
@@ -431,6 +410,8 @@ def deserialize_canonical(image: bytes, seed: int = DEFAULT_SEED) -> bytes:
     # ValueErrors; the decoders raise IndexError via the window list)
     try:
         (c,) = struct.unpack_from("<I", image, 8)
+        if c > 64 * k:
+            raise ValueError(f"corrupt CPC stream: {c} coupons in a {k}-row matrix")
         if not has_window:  # SPARSE_HYBRID
             (sv_len,) = struct.unpack_from("<I", image, 12)
             sv_off = 32 if has_hip else 16
@@ -440,9 +421,7 @@ def deserialize_canonical(image: bytes, seed: int = DEFAULT_SEED) -> bytes:
             # sorted-unique coupon array (a dense matrix is 8*2^lgK bytes per
             # sketch — 512 MB at the format's max lgK 26, where the coupon list
             # is a few KB)
-            return _c.serialize(
-                lg_k, np.ascontiguousarray(pairs, dtype="<u4"), None, compat=True
-            )
+            return _c.pack(lg_k, coupons=pairs)
         offset = determine_correct_offset(lg_k, c)
         has_sv = bool(ordinal & 2)
         if not has_sv:  # NOSV
@@ -451,6 +430,8 @@ def deserialize_canonical(image: bytes, seed: int = DEFAULT_SEED) -> bytes:
             num_sv, sv = 0, None
         else:
             (num_sv,) = struct.unpack_from("<I", image, 12)
+            if num_sv > 64 * k:
+                raise ValueError(f"corrupt CPC stream: {num_sv} pairs in a {k}-row matrix")
             if has_hip:
                 sv_len, w_len = struct.unpack_from("<II", image, 32)
                 w_off = 40
@@ -474,7 +455,7 @@ def deserialize_canonical(image: bytes, seed: int = DEFAULT_SEED) -> bytes:
                 perm_dec = _tables()["col_perm_decoding"][determine_pseudo_phase(lg_k, c)]
                 cols = (perm_dec[cols].astype(np.int64) + offset + 8) & 63
             np.bitwise_xor.at(matrix, rows, np.uint64(1) << cols.astype(np.uint64))
-        return _c.serialize(lg_k, None, matrix, compat=True)
+        return _c.pack(lg_k, dense=matrix)
     except ValueError as e:
         if "corrupt CPC stream" in str(e):
             raise
@@ -483,105 +464,6 @@ def deserialize_canonical(image: bytes, seed: int = DEFAULT_SEED) -> bytes:
         raise ValueError(f"corrupt CPC stream: {e}") from None
 
 
-# -- ecosystem-compatible build (murmur rowCol mapping) -------------------------
-
-
-def coupons_murmur(keys: np.ndarray, lg_k: int, seed: int = DEFAULT_SEED) -> np.ndarray:
-    """The ecosystem's coupon mapping (CpcSketch.update: row = h1 low lgK
-    bits, col = min(clz(h2), 63)) over u64 keys hashed with murmur3 of the
-    8-byte LE encoding — a sketch built from these coupons has the
-    IDENTICAL matrix to a datasketches-built one over the same keys, so
-    cross-system unions are exact (proven byte-for-byte in
-    tests/test_jvm_groundtruth.py)."""
-    h1, h2 = hash128_u64(np.asarray(keys, dtype=np.uint64), seed=seed)
-    return _coupons_from_halves(h1, h2, lg_k)
-
-
-def coupons_murmur_strings(values, lg_k: int, seed: int = DEFAULT_SEED) -> np.ndarray:
-    """String-key variant: UTF-8 canonicalization matching update(String) /
-    update(std::string) (nulls and empty strings are ecosystem no-ops),
-    through the vectorized Arrow-layout murmur batch."""
-    from .murmur3 import hash128_utf8_batch
-
-    h1, h2 = hash128_utf8_batch(values, seed, with_h2=True)
-    return _coupons_from_halves(h1, h2, lg_k)
-
-
-def _coupons_from_halves(h1: np.ndarray, h2: np.ndarray, lg_k: int) -> np.ndarray:
-    k = np.uint64(1 << lg_k)
-    rows = (h1 & (k - np.uint64(1))).astype(np.uint32)
-    # clz via bit_length: vectorized int64->float tricks lose precision at
-    # 64 bits, so compute from the top 32/bottom 32 halves
-    hi = (h2 >> np.uint64(32)).astype(np.uint32)
-    lo = (h2 & np.uint64(0xFFFFFFFF)).astype(np.uint32)
-    bl_hi = np.zeros(h2.shape, dtype=np.uint32)
-    bl_lo = np.zeros(h2.shape, dtype=np.uint32)
-    for shift in (16, 8, 4, 2, 1):
-        for arr, bl in ((hi, bl_hi), (lo, bl_lo)):
-            mask = arr >= (np.uint32(1) << np.uint32(shift))
-            bl[mask] += shift
-            arr[mask] >>= np.uint32(shift)
-    # arr now reduced; add the final bit
-    bl_hi += (hi > 0).astype(np.uint32)
-    bl_lo += (lo > 0).astype(np.uint32)
-    bitlen = np.where(bl_hi > 0, bl_hi + 32, bl_lo)
-    clz = (np.uint32(64) - bitlen).astype(np.uint32)
-    cols = np.minimum(clz, np.uint32(63))
-    return np.unique((rows << np.uint32(6)) | cols)
-
-
-def build_murmur(keys: np.ndarray, lg_k: int = _c.DEFAULT_LG_K,
-                 seed: int = DEFAULT_SEED) -> bytes:
-    """Ecosystem-compatible CPC build over u64 keys (internal format)."""
-    coupons = coupons_murmur(keys, lg_k, seed)
-    return _c._pack(lg_k, _c._dense_from_coupons(coupons, lg_k), compat=True)
-
-
-def build_murmur_strings(values, lg_k: int = _c.DEFAULT_LG_K,
-                         seed: int = DEFAULT_SEED) -> bytes:
-    """Ecosystem-compatible CPC build over string keys (internal format)."""
-    coupons = coupons_murmur_strings(values, lg_k, seed)
-    return _c._pack(lg_k, _c._dense_from_coupons(coupons, lg_k), compat=True)
-
-
-def reduce_lg_k(sketch: bytes, new_lg_k: int) -> bytes:
-    """Downsample an ecosystem-mapped CPC matrix to a smaller lgK — what
-    CpcUnion does when it meets a smaller sketch. In the ecosystem coupon
-    mapping the COLUMN is clz(h2), independent of lgK, so dropping a row
-    bit merges row i with row i + k' (bitwise OR of the halves), exactly
-    the library's K reduction. Valid ONLY for matrices whose coupons came
-    from the ecosystem mapping (build_murmur / deserialize_canonical);
-    the internal xxhash64 build derives columns from post-row hash bits,
-    which a row fold would silently corrupt — use cpc_sketch_build_compat
-    when cross-lgK unions are in play."""
-    if not _c.is_compat(sketch):
-        raise ValueError(
-            "lgK reduction is only valid for ecosystem-mapped CPC sketches "
-            "(the internal xxhash64 mapping derives columns from post-row "
-            "hash bits, which a row fold would corrupt); build with "
-            "cpc_sketch_build_compat"
-        )
-    lg_k, matrix = _c.deserialize(sketch)
-    if new_lg_k > lg_k:
-        raise ValueError(f"cannot grow lg_k {lg_k} -> {new_lg_k}")
-    while lg_k > new_lg_k:
-        half = matrix.size >> 1
-        matrix = matrix[:half] | matrix[half:]
-        lg_k -= 1
-    return _c._pack(new_lg_k, matrix, compat=True)
-
-
-def union_canonical(sketches: list[bytes]) -> bytes:
-    """OR-union of ecosystem-mapped sketches with possibly DIFFERENT lgK:
-    reduce every matrix to the minimum lgK first (the CpcUnion rule), then
-    fold. Same-lgK inputs go straight to the kernel union (lgK is read
-    from the header byte — no densify-to-peek), and the empty result is
-    ecosystem-mapped so further unions/exports keep working."""
-    parts = [s for s in sketches if s is not None]
-    if not parts:
-        return build_murmur(np.empty(0, dtype=np.uint64), _c.DEFAULT_LG_K)
-    lgks = [s[1] for s in parts]  # internal layout: [magic][lg_k][mode]...
-    target = min(lgks)
-    return _c.union(
-        [s if s[1] == target else reduce_lg_k(s, target) for s in parts], target
-    )
+# every working image is in the DataSketches coupon space, so the kernel
+# build is the ecosystem build
+build_murmur = _c.build

@@ -86,7 +86,7 @@ class FiState:
                 .items()
             )
         for s, w in agg:
-            if s is None:
+            if s is None or w == 0:  # a zero weight updates nothing, as in Java
                 continue
             self.total += int(w)
             slot = self.items.get(s)

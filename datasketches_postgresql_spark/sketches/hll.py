@@ -24,14 +24,17 @@ DEFAULT_LG_K = 12
 
 
 def _bit_length_u64(w: np.ndarray) -> np.ndarray:
-    """Vectorized bit_length for uint64 (0 -> 0)."""
-    out = np.zeros(w.shape, dtype=np.uint32)
-    v = w.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        mask = v >= (np.uint64(1) << np.uint64(shift))
-        out[mask] += shift
-        v[mask] >>= np.uint64(shift)
-    out[w != 0] += 1
+    """Vectorized bit_length for uint64 (0 -> 0), from the float64 exponent:
+    ``w >> 11`` has at most 53 bits, so its float64 is exact and the
+    exponent field is its bit length + 1022. Values below 2^11 (rare for a
+    hash) take the same route on ``w`` itself."""
+    w = np.asarray(w, dtype=np.uint64)
+    top = (w >> np.uint64(11)).astype(np.float64)
+    out = (top.view(np.uint64) >> np.uint64(52)).astype(np.int32) - np.int32(1022 - 11)
+    small = np.flatnonzero(w < np.uint64(1 << 11))
+    if small.size:
+        low = w[small].astype(np.float64)
+        out[small] = np.where(low > 0, (low.view(np.uint64) >> np.uint64(52)).astype(np.int32) - 1022, 0)
     return out
 
 

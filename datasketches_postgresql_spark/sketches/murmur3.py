@@ -125,29 +125,30 @@ def hash128_utf8_batch(values, seed: int = 0, with_h2: bool = False):
     """Vectorized murmur3 h1 over a string column (pandas Series / sequence;
     None/NaN AND empty strings dropped — the ecosystem's update(String) /
     update(std::string) treats both as no-op updates, ground-truthed
-    against datasketches-java in tests/test_jvm_groundtruth.py), via the
-    Arrow string layout: ONE C-level pass encodes and concatenates every
-    value (offsets + flat UTF-8 buffer), so no Python object is touched
-    per row at all."""
+    against datasketches-java in tests/test_jvm_groundtruth.py)."""
     import pyarrow as pa
 
-    arr = pa.array(values, type=pa.large_string(), from_pandas=True)
+    return hash128_arrow(pa.array(values, type=pa.large_string(), from_pandas=True), seed, with_h2)
+
+
+def hash128_arrow(arr, seed: int = 0, with_h2: bool = False):
+    """Vectorized murmur3 over an Arrow large_string or large_binary array
+    (nulls and empty values dropped), read straight from the Arrow layout:
+    the 64-bit offsets and the flat byte buffer go to numpy as they are, so
+    no Python object is touched per row."""
     if arr.null_count:
         arr = arr.drop_null()
     n = len(arr)
+    e = np.empty(0, dtype=np.uint64)
     if n == 0:
-        e = np.empty(0, dtype=np.uint64)
         return (e, e) if with_h2 else e
-    offs = np.frombuffer(arr.buffers()[1], dtype=np.int64)[
-        arr.offset : arr.offset + n + 1
-    ]
+    offs = np.frombuffer(arr.buffers()[1], dtype=np.int64)[arr.offset : arr.offset + n + 1]
     data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
     starts, lens = offs[:-1].copy(), offs[1:] - offs[:-1]
     nonempty = lens > 0
     if not nonempty.all():
         starts, lens = starts[nonempty], lens[nonempty]
         if starts.size == 0:
-            e = np.empty(0, dtype=np.uint64)
             return (e, e) if with_h2 else e
     return _h1_from_flat(data, starts, lens, seed, with_h2)
 

@@ -263,24 +263,27 @@ def a_not_b(a: bytes, b: bytes) -> bytes:
     return serialize(theta, out[out < np.uint64(theta)])
 
 
-def get_estimate(image: bytes) -> float:
-    theta, hashes = deserialize(image)
-    return float(hashes.size) / (theta / _THETA_SCALE)
-
-
-def get_estimate_and_bounds(image: bytes, num_std_devs: int = 1) -> tuple[float, float, float]:
-    """(estimate, lower, upper). Exact mode -> all equal. Estimation mode uses
-    the normal approximation of the KMV estimator: var ~= r(1-theta)/theta^2."""
-    theta, hashes = deserialize(image)
-    r = float(hashes.size)
-    if theta == MAX_THETA:
+def estimate_and_bounds(theta: int, retained: int, num_std_devs: int = 1) -> tuple[float, float, float]:
+    """(estimate, lower, upper) of a KMV sample of ``retained`` entries
+    below ``theta``. Exact mode -> all equal. Estimation mode uses the
+    normal approximation of the KMV estimator: var ~= r(1-theta)/theta^2."""
+    r = float(retained)
+    if theta >= MAX_THETA:
         return r, r, r
     th = theta / _THETA_SCALE
     est = r / th
     sd = np.sqrt(r * (1.0 - th)) / th
-    lb = max(r, est - num_std_devs * sd)
-    ub = est + num_std_devs * sd
-    return est, lb, ub
+    return est, max(r, est - num_std_devs * sd), est + num_std_devs * sd
+
+
+def get_estimate(image: bytes) -> float:
+    theta, hashes = deserialize(image)
+    return estimate_and_bounds(theta, hashes.size)[0]
+
+
+def get_estimate_and_bounds(image: bytes, num_std_devs: int = 1) -> tuple[float, float, float]:
+    theta, hashes = deserialize(image)
+    return estimate_and_bounds(theta, hashes.size, num_std_devs)
 
 
 def to_string(image: bytes) -> str:

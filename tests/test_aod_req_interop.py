@@ -12,17 +12,16 @@ import numpy as np
 import pytest
 
 from datasketches_postgresql_spark.sketches import aod as A
-from datasketches_postgresql_spark.sketches import aod_interop as AI
 from datasketches_postgresql_spark.sketches import req as R
 from datasketches_postgresql_spark.sketches import req_interop as RI
 
 
 class TestAodWire:
     def test_header_layout_exact(self):
-        sk = AI.build_murmur(
+        sk = A.build(
             np.arange(1, 101, dtype=np.uint64), np.ones((100, 3))
         )
-        img = AI.serialize_compact(sk)
+        img = A.validate(sk)
         pre, ser, fam, stype, flags, nv, seed_hash, theta = struct.unpack_from(
             "<BBBBBBHQ", img, 0
         )
@@ -30,7 +29,7 @@ class TestAodWire:
         assert nv == 3
         assert flags & 8  # HAS_ENTRIES
         assert not flags & 4  # not EMPTY
-        assert theta == AI.MAX_THETA_DS  # exact: Long.MAX_VALUE
+        assert theta == A.MAX_THETA  # exact: Long.MAX_VALUE
         assert seed_hash != 0
         (n,) = struct.unpack_from("<I", img, 16)
         assert n == 100
@@ -42,62 +41,65 @@ class TestAodWire:
     def test_round_trip_exact(self):
         keys = np.arange(1, 501, dtype=np.uint64)
         vals = np.stack([keys.astype(float), keys.astype(float) * 2], axis=1)
-        sk = AI.build_murmur(keys, vals)
-        back = AI.deserialize_compact(AI.serialize_compact(sk))
+        sk = A.build(keys, vals)
+        back = A.validate(A.validate(sk))
         assert A.get_estimate(back) == 500.0
         assert A.to_means(back) == pytest.approx(A.to_means(sk))
         assert A.to_variances(back) == pytest.approx(A.to_variances(sk))
 
     def test_round_trip_estimation(self):
-        sk = AI.build_murmur(
+        sk = A.build(
             np.arange(1, 50_001, dtype=np.uint64), np.ones((50_000, 1)), lg_k=10
         )
-        img = AI.serialize_compact(sk)
+        img = A.validate(sk)
         flags = img[4]
         assert flags & 2  # sampling-mode bit set when theta < 1
-        back = AI.deserialize_compact(img)
+        back = A.validate(img)
         est = A.get_estimate(back)
         assert est == pytest.approx(A.get_estimate(sk))
         assert est == pytest.approx(50_000, rel=0.15)
 
     def test_duplicate_keys_sum(self):
-        sk = AI.build_murmur(
+        sk = A.build(
             np.array([9, 9, 11], dtype=np.uint64),
             np.array([[1.0], [2.5], [7.0]]),
         )
-        back = AI.deserialize_compact(AI.serialize_compact(sk))
+        back = A.validate(A.validate(sk))
         assert A.get_estimate(back) == 2.0
-        _, _, _, _, vals = A.deserialize(back)
+        _, _, _, vals = A.deserialize(back)
         assert sorted(vals.ravel().tolist()) == [3.5, 7.0]
 
     def test_empty_image(self):
-        img = AI.serialize_compact(
-            AI.build_murmur(np.empty(0, dtype=np.uint64), np.empty((0, 2)))
+        img = A.validate(
+            A.build(np.empty(0, dtype=np.uint64), np.empty((0, 2)))
         )
         assert len(img) == 16
         assert img[4] & 4  # EMPTY flag
-        assert A.get_estimate(AI.deserialize_compact(img)) == 0.0
+        assert A.get_estimate(A.validate(img)) == 0.0
 
-    def test_xxhash_built_raises(self):
-        raw = A.build(np.array([3], dtype=np.uint64), np.array([[1.0]]))
-        with pytest.raises(ValueError, match="xxhash64"):
-            AI.serialize_compact(raw)
+    def test_private_layout_rejected(self):
+        """An image in the private [u8 lg_k][u8 num_values][u64 theta]...
+        layout of earlier versions fails with a clear error rather than
+        decoding as something else."""
+        old = struct.pack("<BBQI", 12, 1, 2**64 - 1, 1) + struct.pack("<Q", 6) + struct.pack("<d", 1.0)
+        with pytest.raises(ValueError, match="family"):
+            A.deserialize(old)
 
     def test_bad_family_rejected(self):
         img = bytearray(
-            AI.serialize_compact(
-                AI.build_murmur(np.array([1], dtype=np.uint64), np.array([[1.0]]))
+            A.validate(
+                A.build(np.array([1], dtype=np.uint64), np.array([[1.0]]))
             )
         )
         img[2] = 3  # theta family instead of tuple
         with pytest.raises(ValueError, match="family"):
-            AI.deserialize_compact(bytes(img))
+            A.validate(bytes(img))
 
     def test_seed_mismatch_rejected(self):
-        sk = AI.build_murmur(np.array([1, 2], dtype=np.uint64), np.ones((2, 1)))
-        img = AI.serialize_compact(sk)
+        sk = A.build(np.array([1, 2], dtype=np.uint64), np.ones((2, 1)))
+        img = A.validate(sk)
         with pytest.raises(ValueError, match="seed"):
-            AI.deserialize_compact(img, seed=1234)
+            A.deserialize(img, seed=1234)
 
 
 class TestReqWire:

@@ -1,5 +1,5 @@
 """CPC coupon-matrix kernel tests: accuracy class, merge identity,
-sparse/dense wire modes, mixed-lg_k union."""
+sparse/dense working images, mixed-lg_k union, the coupon mapping."""
 
 import numpy as np
 
@@ -43,46 +43,83 @@ class TestCpcKernel:
 
     def test_sparse_dense_roundtrip(self):
         small = C.build(_rand(50, 3), 11)
-        assert small[2] == 0  # sparse mode
+        assert small[2] == 4  # sparse mode, DataSketches coupon space
         big = C.build(_rand(500_000, 3), 11)
-        assert big[2] == 1  # dense mode
+        assert big[2] == 5  # dense mode, DataSketches coupon space
         for sk in (small, big):
             lg_k, mat = C.deserialize(sk)
             assert lg_k == 11 and mat.size == 2048
 
-    def test_mixed_lg_k_union_rejected(self):
-        """Columns derive from post-row hash bits, so cross-lg_k folding
-        would silently bias the estimate — the union refuses instead."""
+    def test_mixed_lg_k_union_folds_to_smallest(self):
+        """Rows are the low lg_k bits of h1 and columns come from h2, so a
+        larger matrix folds onto a smaller one (row i -> i mod k) exactly:
+        the union lands on the smaller lg_k's own build. An empty input
+        does not lower lg_k, and the lg_k argument caps it."""
         vals = _rand(50_000, 9)
-        hi = C.build(vals, 12)
-        lo = C.build(vals, 10)
+        hi, lo = C.build(vals, 12), C.build(vals, 10)
+        assert C.union([hi, lo]) == C.union([lo, hi]) == lo
+        assert C.union([hi], 10) == lo
+        assert C.union([hi, C.build(vals[:0], 10)]) == hi
+        assert C.union([lo], 12) == lo
+        # no non-empty input (an all-NULL group's partial): the lg_k argument
+        empty_12 = C.build(vals[:0], 12)
+        assert C.union([], 12) == C.union([None], 12) == empty_12
+        assert C.union([C.build(vals[:0], 10)], 12) == empty_12
+        assert C.union([C.build(vals[:0], 10)]) == C.build(vals[:0], 10)
+        assert C.union([]) == C.build(vals[:0], C.DEFAULT_LG_K)
+
+    def test_sparse_union_at_large_lg_k_has_bounded_temporaries(self):
+        """A union whose result stays sparse converts the dense OR back to
+        coupons; at lg_k 20 that must cost O(coupons), not a 64-word
+        expansion of every non-empty row (about 1 GiB here)."""
+        import tracemalloc
+
+        a, b = C.build(_rand(150_000, 40), 20), C.build(_rand(150_000, 41), 20)
+        assert a[2] == b[2] == 4
+        tracemalloc.start()
         try:
-            C.union([hi, lo])
-            raise AssertionError("expected ValueError")
-        except ValueError:
-            pass
+            out = C.union([a, b])
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert out[2] == 4
+        assert out == C.build(np.concatenate([_rand(150_000, 40), _rand(150_000, 41)]), 20)
+        # three dense 8 MiB matrices (two inputs and the accumulator), the
+        # fold's temporary and the coupon list, plus slack
+        assert peak < 48 << 20, peak
 
     def test_empty(self):
         assert C.get_estimate(C.build(np.empty(0, dtype=np.uint64), 11)) == 0.0
 
     def test_coupon_extraction_matches_scalar_reference(self):
-        """The vectorized coupon map (float64-exponent ctz + scatter dedup)
-        must agree bit-for-bit with a direct scalar transcription of the
-        coupon definition (row = low lg_k hash bits, col = index of the
-        lowest set bit of the remaining bits, all-zero rest -> max col),
-        including the edge hashes 0, 1, 2^63, 2^64-1. lg_k 15/16 pins
-        both sides of the scatter-vs-sort dedup boundary."""
+        """The vectorized coupon map (float64-exponent clz + dedup) must
+        agree bit-for-bit with a direct scalar transcription of
+        ``CpcSketch.update``'s mapping (row = low lg_k bits of h1, col =
+        min(clz(h2), 63)), including the edge h2 values 0, 1, 2^63 and
+        2^64-1. lg_k 15/16 pins both sides of the lg_k limit of the
+        scatter dedup."""
         for lg_k in (4, 11, 15, 16, 21):
-            vals = np.concatenate(
+            h1 = _rand(100_004, 20)
+            h2 = np.concatenate(
                 [_rand(100_000, 21), np.array([0, 1, 2**63, 2**64 - 1], dtype=np.uint64)]
             )
-            got = C._coupons_from_hashes(vals, lg_k)
+            got = C._coupons(h1, h2, lg_k)
             want = set()
-            max_col = min(C._MAX_COL, 63)
-            for h in vals.tolist():
-                row = h & ((1 << lg_k) - 1)
-                rest = h >> lg_k
-                col = C._MAX_COL if rest == 0 else (rest & -rest).bit_length() - 1
-                want.add((row << 6) | min(col, max_col))
+            for a, b in zip(h1.tolist(), h2.tolist()):
+                want.add(((a & ((1 << lg_k) - 1)) << 6) | min(64 - b.bit_length(), 63))
             assert got.dtype == np.uint32
             assert np.array_equal(got, np.array(sorted(want), dtype=np.uint32))
+
+    def test_scatter_dedup_gated_on_batch_size(self):
+        """The scatter dedup allocates and scans 2^(lg_k+6) flags, so it runs
+        only when a batch fills half of them (and lg_k <= 15); a 3-coupon
+        batch sorts instead. Both sides give the same coupons."""
+        assert not C._use_scatter(3, 11)
+        assert not C._use_scatter((1 << 16) - 1, 11)
+        assert C._use_scatter(1 << 16, 11)
+        assert not C._use_scatter(1 << 30, 16)
+        for n in (3, 1 << 16):
+            h1, h2 = _rand(n, 30), _rand(n, 31)
+            rows = (h1 & np.uint64(2047)).astype(np.uint32)
+            cols = np.array([min(64 - int(b).bit_length(), 63) for b in h2.tolist()], np.uint32)
+            assert np.array_equal(C._coupons(h1, h2, 11), np.unique((rows << 6) | cols))

@@ -73,8 +73,9 @@ class TestCpcCanonicalCodec:
             CI.deserialize_canonical(bad)
 
     def test_compat_build_unions_with_internal(self, spark):
-        """compat-built sketches stay unionable via the kernel's OR-merge
-        (matrices are matrices regardless of the hash that filled them)."""
+        """Builds over overlapping keys union by the kernel's OR-merge to
+        the distinct count of both (there is one coupon space, so the
+        compat name builds the same sketches)."""
         a = CI.build_murmur(np.arange(0, 600, dtype=np.uint64), 11)
         b = CI.build_murmur(np.arange(300, 900, dtype=np.uint64), 11)
         est = C.get_estimate(C.union([a, b]))
@@ -113,29 +114,33 @@ class TestCpcWireSpark:
             """
         ).collect()[0]
         assert abs(row["est"] - 4000) / 4000 < 0.05
-        # the internal xxhash64 build REFUSES canonical export (it would
-        # silently double-count against library sketches)
-        import pyspark.sql.utils as _u
-        with pytest.raises(Exception, match="cpc_sketch_build_compat"):
-            spark.sql(
-                "SELECT cpc_sketch_to_datasketches(cpc_sketch_build(xxhash64(u))) "
-                "FROM cpc_wire_t"
-            ).collect()
+        # every build exports, and the compat name is the same build; a
+        # hashed key such as xxhash64(u) is just another bigint key
+        imgs = spark.sql(
+            """
+            SELECT cpc_sketch_build(u) AS a, cpc_sketch_build_compat(u) AS b,
+                   cpc_sketch_get_estimate(cpc_sketch_from_datasketches(
+                     cpc_sketch_to_datasketches(cpc_sketch_build(xxhash64(u))))) AS e
+            FROM cpc_wire_t
+            """
+        ).collect()[0]
+        assert imgs["a"] == imgs["b"]
+        assert abs(imgs["e"] - 4000) / 4000 < 0.05
 
 
 class TestCrossLgK:
     def test_reduce_and_union_estimates(self):
         a = CI.build_murmur(np.arange(0, 30000, dtype=np.uint64), 12)
         b = CI.build_murmur(np.arange(20000, 50000, dtype=np.uint64), 10)
-        u = CI.union_canonical([a, b])
+        u = C.union([a, b])
         lgk, _ = C.deserialize(u)
         assert lgk == 10  # reduced to the minimum
         assert abs(C.get_estimate(u) - 50000) / 50000 < 0.05
         # reduction alone preserves the estimate class
-        r = CI.reduce_lg_k(a, 10)
+        r = C.union([a], 10)
         assert abs(C.get_estimate(r) - 30000) / 30000 < 0.05
-        with pytest.raises(ValueError, match="grow"):
-            CI.reduce_lg_k(b, 12)
+        # and a larger lg_k never grows a sketch
+        assert C.union([b], 12) == b
 
 
 class TestCompatLossyFloats:

@@ -11,6 +11,7 @@ from datasketches_postgresql_spark.functions import hll as H
 from datasketches_postgresql_spark.functions import kll as K
 from datasketches_postgresql_spark.functions import quantiles as Q
 from datasketches_postgresql_spark.functions import req as R
+from datasketches_postgresql_spark.functions import theta as T
 from datasketches_postgresql_spark.sketches import fi as FIK
 
 
@@ -160,6 +161,15 @@ class TestFi:
         assert (native.lg_k, native.offset, native.total) == (mine.lg_k, mine.offset, mine.total)
         assert native.items == mine.items
 
+    def test_null_weight_adds_nothing(self, spark):
+        """A NULL weight adds nothing, as a zero weight does (it used to
+        fail the query)."""
+        df = spark.createDataFrame([("x", 10), ("y", None), ("x", 1)], "s string, w long")
+        sk = FI.frequent_strings_sketch_build(df, [], 8, "s", weight_col="w")
+        rows = FI.explode_result(sk, FI.frequent_strings_sketch_result_no_false_negatives(
+            F.col("sketch"))).collect()
+        assert [(r["str"], r["estimate"]) for r in rows] == [("x", 11)]
+
     def test_weighted(self, spark):
         df = spark.createDataFrame(
             [("x", 10), ("y", 5), ("x", 1)], "str string, w long"
@@ -169,6 +179,31 @@ class TestFi:
             sk, FI.frequent_strings_sketch_result_no_false_positives(F.col("sketch"), 0)
         ).collect()
         assert (rows[0]["str"], rows[0]["estimate"]) == ("x", 11)
+
+
+class TestBinaryKeys:
+    def test_non_utf8_binary_keys_agree_across_families(self, spark):
+        """Binary keys hash as raw bytes in every family, so non-UTF-8 keys
+        give CPC, HLL_4, HLL_6 and AOD the estimate theta and HLL_8 give."""
+        keys = [bytes([0xFF, 0xFE, i]) for i in range(50)] + [b"\x80", b"\xc3\x28"]
+        df = spark.createDataFrame(
+            [("g", bytearray(k), [1.0]) for k in keys] + [("g", None, [1.0])],
+            "g string, k binary, vals array<double>",
+        )
+        n = len(keys)
+        ests = {
+            "theta": T.theta_sketch_distinct(df, ["g"], "k"),
+            "hll8": H.hll_sketch_distinct(df, ["g"], "k"),
+            "cpc": C.cpc_sketch_distinct(df, ["g"], "k"),
+        }
+        for tgt in ("HLL_4", "HLL_6"):
+            ests[tgt] = H.hll_sketch_build(df, ["g"], "k", tgt_type=tgt).select(
+                H.hll_sketch_get_estimate("sketch").alias("distinct_est"))
+        ests["aod"] = A.aod_sketch_build(df, ["g"], "k", "vals").select(
+            A.aod_sketch_get_estimate("sketch").alias("distinct_est"))
+        got = {name: q.collect()[0]["distinct_est"] for name, q in ests.items()}
+        assert got["theta"] == got["hll8"] == got["HLL_4"] == got["HLL_6"] == got["aod"] == n
+        assert abs(got["cpc"] - n) < 0.5
 
 
 class TestAod:

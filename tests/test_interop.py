@@ -11,9 +11,11 @@ implementation of the published algorithm."""
 import struct
 
 import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
+from datasketches_postgresql_spark.functions.keys import hash_keys
 from datasketches_postgresql_spark.sketches import interop as I
 from datasketches_postgresql_spark.sketches import theta as T
 from datasketches_postgresql_spark.sketches.murmur3 import (
@@ -23,6 +25,11 @@ from datasketches_postgresql_spark.sketches.murmur3 import (
     hash128_u64,
 )
 
+
+
+def _strings(words):
+    """Theta image over string keys, hashed by the DataSketches key rule."""
+    return T.build(hash_keys(pd.Series(words))[1])
 
 class TestMurmur3:
     def test_vector_matches_scalar(self):
@@ -116,15 +123,15 @@ class TestCompactFormat:
         intersection=2; a_not_b({1,2,3},{2,3,4})=1 — computed on sketches
         that each took a trip through the canonical wire format."""
         a = I.deserialize_compact(
-            I.serialize_compact(I.build_murmur_strings([str(v) for v in [1, 2, 3, 4, 5]]))
+            I.serialize_compact(_strings([str(v) for v in [1, 2, 3, 4, 5]]))
         )
         b = I.deserialize_compact(
-            I.serialize_compact(I.build_murmur_strings([str(v) for v in [4, 5, 6, 7, 8]]))
+            I.serialize_compact(_strings([str(v) for v in [4, 5, 6, 7, 8]]))
         )
         assert T.get_estimate(T.union([a, b])) == 8.0
         assert T.get_estimate(T.intersection([a, b])) == 2.0
-        x = I.build_murmur_strings(["1", "2", "3"])
-        y = I.build_murmur_strings(["2", "3", "4"])
+        x = _strings(["1", "2", "3"])
+        y = _strings(["2", "3", "4"])
         assert T.get_estimate(T.a_not_b(x, y)) == 1.0
 
 

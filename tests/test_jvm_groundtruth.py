@@ -18,10 +18,11 @@ Each family checks BOTH directions:
 """
 
 import numpy as np
+import pandas as pd
 import pytest
 
+from datasketches_postgresql_spark.functions.keys import hash_keys
 from datasketches_postgresql_spark.sketches import aod as AODK
-from datasketches_postgresql_spark.sketches import aod_interop as AODI
 from datasketches_postgresql_spark.sketches import fi as FIK
 from datasketches_postgresql_spark.sketches import fi_interop as FII
 from datasketches_postgresql_spark.sketches import hll_interop as HI
@@ -362,7 +363,7 @@ class TestAodGroundTruth:
         keys = np.arange(self.N, dtype=np.uint64)
         vals = np.stack([np.arange(self.N, dtype=np.float64),
                          np.ones(self.N)], axis=1)
-        img = AODI.serialize_compact(AODI.build_murmur(keys, vals))
+        img = AODK.build(keys, vals)
         js = jvm.org.apache.datasketches.tuple.arrayofdoubles.ArrayOfDoublesSketches.heapifySketch(
             mem.wrap(img)
         )
@@ -380,8 +381,54 @@ class TestAodGroundTruth:
         js = b.setNumberOfValues(2).build()
         for i in range(self.N):
             js.update(i, gateway_arr([float(i), 1.0]))
-        internal = AODI.deserialize_compact(bytes(js.compact().toByteArray()))
+        internal = AODK.validate(bytes(js.compact().toByteArray()))
         assert AODK.get_estimate(internal) == self.N
+
+    @staticmethod
+    def _java_entries(js):
+        """{key: values} of a Java ArrayOfDoubles sketch, from its iterator."""
+        out = {}
+        it = js.iterator()
+        while it.next():
+            out[int(it.getKey())] = list(it.getValues())
+        return out
+
+    def test_java_estimation_image_decodes_to_java_answers(self, jvm, gateway_arr):
+        """A Java sketch streamed well past k (20k keys at lg_k 10, 2 values)
+        decodes here to Java's estimate, retained keys and per-column sums."""
+        b = jvm.org.apache.datasketches.tuple.arrayofdoubles.ArrayOfDoublesUpdatableSketchBuilder()
+        js = b.setNominalEntries(1 << 10).setNumberOfValues(2).build()
+        for i in range(20_000):
+            js.update(i, gateway_arr([float(i % 7), 1.0]))
+        compact = js.compact()
+        assert compact.isEstimationMode()
+        nv, theta, keys, vals = AODK.deserialize(bytes(compact.toByteArray()))
+        entries = self._java_entries(compact)
+        assert (nv, theta) == (2, compact.getThetaLong())
+        assert AODK.get_estimate(bytes(compact.toByteArray())) == compact.getEstimate()
+        assert sorted(entries) == keys.tolist()
+        assert vals.sum(axis=0).tolist() == pytest.approx(
+            np.array(list(entries.values())).sum(axis=0).tolist(), rel=1e-12)
+
+    def test_our_estimation_build_heapifies_with_the_same_answers(self, jvm, mem):
+        """An estimation-regime build (20k keys at lg_k 10) heapifies in Java
+        with our estimate, keys and values; its keys are the k smallest of
+        Java's own hashes of the same keys."""
+        n = 20_000
+        keys = np.arange(n, dtype=np.uint64)
+        vals = np.stack([keys.astype(np.float64), np.ones(n)], axis=1)
+        img = AODK.build(keys, vals, lg_k=10)
+        nv, theta, ours, ours_vals = AODK.deserialize(img)
+        assert ours.size == 1 << 10 and theta < AODK.MAX_THETA
+        js = jvm.org.apache.datasketches.tuple.arrayofdoubles.ArrayOfDoublesSketches.heapifySketch(
+            mem.wrap(img))
+        assert js.getEstimate() == AODK.get_estimate(img)
+        assert js.getThetaLong() == theta
+        entries = self._java_entries(js)
+        assert sorted(entries) == ours.tolist()
+        assert [entries[k] for k in ours.tolist()] == ours_vals.tolist()
+        want = np.sort(hash128_u64(keys, 9001)[0] >> np.uint64(1))[: 1 << 10]
+        assert np.array_equal(ours, want)
 
     @pytest.fixture(scope="class")
     def gateway_arr(self, spark):
@@ -460,7 +507,7 @@ class TestThetaStringKeys:
         for w in words:
             us.update(w)
         assert us.compact().getEstimate() == 802.0  # java ignored ""
-        img = TI.serialize_compact(TI.build_murmur_strings(words))
+        img = TI.serialize_compact(TK.build(hash_keys(pd.Series(words))[1]))
         wrapped = jvm.org.apache.datasketches.theta.Sketches.wrapSketch(mem.wrap(img))
         assert wrapped.getEstimate() == 802.0
         inter = jvm.org.apache.datasketches.theta.SetOperation.builder().buildIntersection()
@@ -552,29 +599,23 @@ class TestThetaEstimationRegime:
 
 class TestCpcEstimatorParity:
     def test_estimates_agree_with_java_cpc(self, jvm):
-        """Estimator-class parity for the INTERNAL xxhash64 coupon space
-        (the canonical-wire and coupon-identity checks live in
-        TestCpcWireGroundTruth): on the same cardinality, our
-        coupon-matrix ICON estimate and java's CPC estimate both sit
-        within the published error envelope."""
+        """Estimator-class parity in the one coupon space (the
+        canonical-wire checks live in TestCpcWireGroundTruth): over the
+        same keys our matrix IS java's, and our ICON estimate and java's
+        CPC estimate both sit within the published error envelope."""
         from datasketches_postgresql_spark.sketches import cpc as C
+        from datasketches_postgresql_spark.sketches import cpc_interop as CI
 
         n, lg_k = 50_000, 11
         js = jvm.org.apache.datasketches.cpc.CpcSketch(lg_k)
         for i in range(n):
             js.update(i)
-        # our kernel consumes pre-hashed uniform u64s (the engine hashes
-        # with xxhash64 upstream); mix the ints the same way the column
-        # path does
-        import pyspark.sql.functions as F  # noqa: F401
-        keys = np.arange(n, dtype=np.uint64)
-        z = (keys + np.uint64(0x9E3779B97F4A7C15))
-        z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        hashed = z ^ (z >> np.uint64(31))
-        ours = C.get_estimate(C.build(hashed, lg_k))
+        u = jvm.org.apache.datasketches.cpc.CpcUnion(lg_k)
+        u.update(js)
+        ours = C.build(np.arange(n, dtype=np.uint64), lg_k)
+        assert CI.serialize_canonical(ours) == bytes(u.getResult().toByteArray())
         assert abs(js.getEstimate() - n) / n < 0.04
-        assert abs(ours - n) / n < 0.04
+        assert abs(C.get_estimate(ours) - n) / n < 0.04
 
 
 class TestCpcWireGroundTruth:
@@ -655,7 +696,9 @@ class TestCpcCrossLgKUnion:
         u.update(big)
         u.update(small)
         img_java = bytes(u.getResult().toByteArray())
-        ours = CI.union_canonical(
+        from datasketches_postgresql_spark.sketches import cpc as C
+
+        ours = C.union(
             [
                 CI.build_murmur(np.arange(30000, dtype=np.uint64), 12),
                 CI.build_murmur(np.arange(20000, 50000, dtype=np.uint64), 10),
@@ -663,12 +706,35 @@ class TestCpcCrossLgKUnion:
         )
         assert CI.serialize_canonical(ours) == img_java
 
+    def test_spark_unions_of_lg_k_10_and_11_match_library(self, spark, jvm):
+        """cpc_sketch_union and cpc_sketch_union_agg over sketches of lg_k 10
+        and 11 give java's CpcUnion result byte for byte."""
+        import pyspark.sql.functions as F
+
+        from datasketches_postgresql_spark.functions import cpc as CPC
+        from datasketches_postgresql_spark.sketches import cpc_interop as CI
+
+        u = jvm.org.apache.datasketches.cpc.CpcUnion(11)
+        for lg_k, lo, hi in ((11, 0, 30000), (10, 20000, 50000)):
+            js = jvm.org.apache.datasketches.cpc.CpcSketch(lg_k)
+            for i in range(lo, hi):
+                js.update(i)
+            u.update(js)
+        img_java = bytes(u.getResult().toByteArray())
+        a = CPC.cpc_sketch_build(spark.range(0, 30000), [], "id", lg_k=11)
+        b = CPC.cpc_sketch_build(spark.range(20000, 50000), [], "id", lg_k=10)
+        pair = a.select(F.col("sketch").alias("a")).crossJoin(b.select(F.col("sketch").alias("b")))
+        (row,) = pair.select(CPC.cpc_sketch_union(F.col("a"), F.col("b")).alias("u")).collect()
+        assert CI.serialize_canonical(bytes(row["u"])) == img_java
+        (agg,) = CPC.cpc_sketch_union_agg(a.unionByName(b), [], "sketch").collect()
+        assert CI.serialize_canonical(bytes(agg["sketch"])) == img_java
+
 
 class TestCpcStringKeys:
     def test_string_coupons_identical_to_library(self, jvm):
-        """update(String) parity for the compat build: byte-identical
-        merged image over UTF-8 string keys (incl. non-ASCII; empty
-        string is a no-op update both sides)."""
+        """update(String) parity: byte-identical merged image over UTF-8
+        string keys (incl. non-ASCII; empty string is a no-op update both
+        sides)."""
         from datasketches_postgresql_spark.sketches import cpc_interop as CI
 
         words = [f"user_{i}" for i in range(3000)] + ["héllo wörld", "日本語", ""]
@@ -678,5 +744,7 @@ class TestCpcStringKeys:
         u = jvm.org.apache.datasketches.cpc.CpcUnion(11)
         u.update(js)
         img_java = bytes(u.getResult().toByteArray())
-        img_ours = CI.serialize_canonical(CI.build_murmur_strings(words, 11))
+        from datasketches_postgresql_spark.sketches import cpc as C
+
+        img_ours = CI.serialize_canonical(C.from_hashes(*hash_keys(pd.Series(words))[1:], 11))
         assert img_ours == img_java

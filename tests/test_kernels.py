@@ -160,7 +160,7 @@ class TestAod:
     def test_duplicate_keys_sum(self):
         s = aod.build(h64([1, 1, 2]), np.array([[1.0], [2.0], [5.0]]))
         assert aod.get_estimate(s) == 2
-        assert sorted(aod.deserialize(s)[4][:, 0].tolist()) == [3.0, 5.0]
+        assert sorted(aod.deserialize(s)[3][:, 0].tolist()) == [3.0, 5.0]
 
     def test_means_variances(self):
         s = aod.build(h64([1, 2, 3, 4]), np.array([[1.0, 10], [2, 20], [3, 30], [4, 40]]))

@@ -552,15 +552,124 @@ class TestAodProperties:
     )
     @settings(max_examples=40, deadline=None)
     def test_compact_image_roundtrip(self, rows):
-        from datasketches_postgresql_spark.sketches import aod, aod_interop
+        from datasketches_postgresql_spark.sketches import aod
 
         keys = _arr_u64([r[0] for r in rows])
         vals = np.asarray([r[1] for r in rows], dtype=np.float64)
-        s = aod_interop.build_murmur(keys, vals)
-        back = aod_interop.deserialize_compact(aod_interop.serialize_compact(s))
+        s = aod.build(keys, vals)
+        back = aod.validate(s)
         assert back == s
         assert aod.get_estimate(back) == aod.get_estimate(s)
         assert aod.to_means(back) == aod.to_means(s)
+
+
+@st.composite
+def cpc_images(draw):
+    """Working CPC images, sparse and dense, at small lg_k."""
+    from datasketches_postgresql_spark.sketches import cpc
+
+    lg_k = draw(st.integers(4, 10))
+    n = draw(st.sampled_from([0, 1, 5, 40, 300, 3000, 20000]))
+    seed = draw(st.integers(0, 2**32 - 1))
+    keys = np.random.default_rng(seed).integers(0, 2**63, n).astype(np.uint64)
+    return cpc.build(keys, lg_k)
+
+
+@st.composite
+def aod_images(draw):
+    """Standard AOD compact images: empty, exact, sampled and estimation."""
+    from datasketches_postgresql_spark.sketches import aod
+
+    n = draw(st.sampled_from([0, 1, 7, 100, 2000]))
+    nv = draw(st.integers(1, 3))
+    p = draw(st.sampled_from([1.0, 1.0, 0.5]))
+    seed = draw(st.integers(0, 2**32 - 1))
+    rng = np.random.default_rng(seed)
+    keys = rng.integers(0, 2**63, n).astype(np.uint64)
+    return aod.build(keys, rng.standard_normal((n, nv)), lg_k=8, p=p)
+
+
+def _decoders():
+    from datasketches_postgresql_spark.sketches import aod, cpc
+
+    return {"cpc": (cpc_images(), cpc.deserialize), "aod": (aod_images(), aod.deserialize)}
+
+
+class TestCpcAodDecoderHostileInput:
+    """The CPC working-image and AOD standard-image decoders check every
+    size against len(image) before they allocate: truncated, extended,
+    byte-flipped and oversized-count images raise ValueError (or, for a
+    flip, decode to a valid sketch), never another error."""
+
+    @pytest.mark.parametrize("family", ["cpc", "aod"])
+    @given(data=st.data())
+    @settings(max_examples=60, deadline=None)
+    def test_truncated_or_extended_image_raises(self, family, data):
+        images, decode = _decoders()[family]
+        img = data.draw(images)
+        decode(img)
+        cut = data.draw(st.integers(0, len(img) - 1))
+        with pytest.raises(ValueError):
+            decode(img[:cut])
+        with pytest.raises(ValueError):
+            decode(img + bytes(data.draw(st.integers(1, 16))))
+
+    @pytest.mark.parametrize("family", ["cpc", "aod"])
+    @given(data=st.data())
+    @settings(max_examples=150, deadline=None)
+    def test_flipped_byte_raises_or_decodes(self, family, data):
+        images, decode = _decoders()[family]
+        img = data.draw(images)
+        pos = data.draw(st.integers(0, min(len(img), 64) - 1))
+        flipped = bytearray(img)
+        flipped[pos] ^= data.draw(st.integers(1, 255))
+        try:
+            decode(bytes(flipped))
+        except ValueError:
+            pass
+
+    @pytest.mark.parametrize("family", ["cpc", "aod"])
+    @given(data=st.data(), count=st.integers(1, 2**32 - 1))
+    @settings(max_examples=60, deadline=None)
+    def test_oversized_count_raises_with_bounded_allocation(self, family, data, count):
+        import tracemalloc
+
+        images, decode = _decoders()[family]
+        img = data.draw(images)
+        at = 3 if family == "cpc" else 16
+        if family == "cpc" and img[2] != 4 or family == "aod" and len(img) == 16:
+            return  # dense CPC and entry-less AOD images carry no count
+        n = int.from_bytes(img[at : at + 4], "little")
+        bad = img[:at] + ((n + count) % 2**32).to_bytes(4, "little") + img[at + 4 :]
+        tracemalloc.start()
+        try:
+            with pytest.raises(ValueError):
+                decode(bad)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 4 * len(img) + (1 << 16)
+
+    def test_known_defects(self):
+        """A dense lg_k 11 CPC image missing its tail, an AOD image claiming
+        0 values per key, and CPC images in the retired coupon space of
+        earlier versions (modes 0 and 1) all raise."""
+        from datasketches_postgresql_spark.sketches import aod, cpc
+
+        dense = cpc.build(np.arange(50_000, dtype=np.uint64), 11)
+        assert dense[2] == 5
+        with pytest.raises(ValueError, match="dense image"):
+            cpc.deserialize(dense[:-800])
+        for old in (bytes([0x43, 11, 0]) + bytes(4), bytes([0x43, 11, 1]) + bytes(8 << 11)):
+            with pytest.raises(ValueError, match="retired coupon space"):
+                cpc.deserialize(old)
+        two = bytearray(aod.build(np.arange(10, dtype=np.uint64), np.ones((10, 2))))
+        two[5] = 0
+        with pytest.raises(ValueError, match="0 values"):
+            aod.deserialize(bytes(two))
+        two[5] = 1
+        with pytest.raises(ValueError, match="bytes for 10 keys"):
+            aod.deserialize(bytes(two))
 
 
 class TestReqProperties:
